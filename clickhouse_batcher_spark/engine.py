@@ -20,17 +20,26 @@ continuous ingest should use ``process_stream`` (Structured
 Streaming), where executors do the writing. The buffer flush is
 guarded by a lock — the reference's racy buffer swap
 (``hashes.go:46-60``, §0.1) done safely.
+
+A flush builds its batch columnar, the analogue of the reference's
+``PrepareBatch``/``Append``: rows are type-checked as
+``createDataFrame`` checks them, then laid out as one Arrow table
+(``columnar.py``), so the sink write runs in the JVM and starts no
+Python worker. ``close()`` stops the ticker, waits for a tick flush
+that is already running, then flushes the tail.
 """
 
 from __future__ import annotations
 
 import threading
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from clickhouse_batcher_spark.columnar import ColumnarBatchBuilder
 from clickhouse_batcher_spark.plans.migrations import Migration, MigrationRunner
 from clickhouse_batcher_spark.sinks.base import BatchSink
 from clickhouse_batcher_spark.sinks.delete import delete_where
@@ -110,19 +119,30 @@ class BatcherEngine:
         return runner.up()
 
     def close(self) -> None:
-        """Graceful shutdown: stop the ticker, flush the tail."""
+        """Graceful shutdown: stop the ticker (waiting for a tick flush
+        already running), flush the tail."""
         self.stop_auto_flush()
         self.flush()
 
     # -- producer path (SaveAsync analogue) -----------------------------
-    def save_async(self, row: dict) -> bool:
+    @cached_property
+    def _builder(self) -> ColumnarBatchBuilder:
+        # Built on first use, not at construction: parsing a DDL schema
+        # needs the Spark session.
+        return ColumnarBatchBuilder(self.schema)
+
+    def save_async(self, row: dict | tuple) -> bool:
         """Enqueue one row; silently dropped when disabled
-        (hashes.go:12-15). Flushes when the buffer reaches the cap."""
+        (hashes.go:12-15). Flushes when the buffer reaches the cap.
+        A dict row is mapped by schema field name; a missing key is
+        null, as ``createDataFrame`` reads dicts."""
         if not self.config.enabled:
             return False
+        if isinstance(row, dict):
+            row = tuple(row.get(name) for name in self._builder.names)
         flush_now = False
         with self._lock:
-            self._buffer.append(tuple(row.values()) if isinstance(row, dict) else row)
+            self._buffer.append(row)
             flush_now = len(self._buffer) >= self.config.max_batch_rows
         if flush_now:
             self.flush()
@@ -130,7 +150,9 @@ class BatcherEngine:
 
     def flush(self) -> int:
         """Flush the current buffer as one idempotent batch; returns
-        rows flushed. Empty buffer is a no-op (hashes.go:79)."""
+        rows flushed. Empty buffer is a no-op (hashes.go:79). A row
+        that fails the schema's type check fails the whole batch
+        before the sink sees it."""
         self._resolve_next_batch_id()  # before the lock: may do JDBC I/O
         with self._lock:
             if not self._buffer:
@@ -138,33 +160,41 @@ class BatcherEngine:
             rows, self._buffer = self._buffer, []
             batch_id = self._next_batch_id
             self._next_batch_id += 1
-        df = self.spark.createDataFrame(rows, self.schema)
+        df = self._builder.frame(self.spark, rows)
         self.sink.write_batch(df, batch_id)
         return len(rows)
 
     def start_auto_flush(self) -> None:
-        """Time-based flushing (the reference's ticker path)."""
+        """Time-based flushing (the reference's ticker path). A failed
+        tick flush raises on the timer thread, and the next tick is
+        scheduled all the same."""
         interval = self.config.flush_interval_s
         if not interval:
             return
 
         def tick() -> None:
-            self.flush()
-            with self._lock:
-                if self._timer is not None:  # not stopped
-                    self._timer = threading.Timer(interval, tick)
-                    self._timer.daemon = True
-                    self._timer.start()
+            try:
+                self.flush()
+            finally:
+                with self._lock:
+                    if self._timer is not None:  # not stopped
+                        self._timer = threading.Timer(interval, tick)
+                        self._timer.daemon = True
+                        self._timer.start()
 
         self._timer = threading.Timer(interval, tick)
         self._timer.daemon = True
         self._timer.start()
 
     def stop_auto_flush(self) -> None:
+        """Cancel the ticker and wait for a tick flush that is already
+        running (unless called from that tick)."""
         with self._lock:
-            if self._timer is not None:
-                self._timer.cancel()
-                self._timer = None
+            timer, self._timer = self._timer, None
+        if timer is not None:
+            timer.cancel()
+            if timer is not threading.current_thread():
+                timer.join()
 
     # -- streaming path (ProcessHashes analogue) ------------------------
     def process_stream(

@@ -38,6 +38,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_batcher_spark.columnar import ColumnarBatchBuilder
 from clickhouse_batcher_spark.sinks.base import BatchSink
 
 
@@ -417,9 +418,11 @@ class ClickHouseSink(BatchSink):
             .mode("append")
             .save()
         )
-        ledger_row = spark.createDataFrame(
-            [(int(batch_id),)], f"{self._ledger_col(spark)} BIGINT"
-        )
+        # Arrow-built like the engine's batches: a list-built frame
+        # would start a Python worker for this one-row write.
+        ledger_row = ColumnarBatchBuilder(
+            f"{self._ledger_col(spark)} BIGINT"
+        ).frame(spark, [(int(batch_id),)])
         (
             ledger_row.write.format("jdbc")
             .options(

@@ -2,8 +2,13 @@
 
 from __future__ import annotations
 
+import datetime
+import threading
 import time
+from decimal import Decimal
 
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_batcher_spark import BatcherEngine, EngineConfig
@@ -284,3 +289,209 @@ def test_clickhouse_ping_exhausts_retries(monkeypatch):
 
     with _pytest.raises(ConnectionError, match="after 2 attempts"):
         sink.ping(FakeSpark())
+
+
+# -- flush batch: columnar build, differential vs createDataFrame ----------
+class _GatedSink(IdempotentParquetSink):
+    """Parquet sink that can block in write_batch, fail its first
+    write, and keep the physical plan of every frame it is handed."""
+
+    def __init__(self, root, block=False, fail_first=False):
+        super().__init__(root)
+        self.started = threading.Event()
+        self.release = threading.Event()
+        if not block:
+            self.release.set()
+        self.fail_first = fail_first
+        self.plans = []
+
+    def write_batch(self, df, batch_id):
+        self.plans.append(df._jdf.queryExecution().executedPlan().toString())
+        self.started.set()
+        self.release.wait(30)
+        if self.fail_first:
+            self.fail_first = False
+            raise RuntimeError("sink down")
+        return super().write_batch(df, batch_id)
+
+
+def test_close_waits_for_running_tick_flush(spark, tmp_path):
+    """close() must not return while a tick flush is still writing: a
+    read right after close() would miss that batch."""
+    sink = _GatedSink(str(tmp_path / "sink"), block=True)
+    eng = BatcherEngine(
+        spark, sink, SCHEMA, EngineConfig(max_batch_rows=1_000_000, flush_interval_s=0.2)
+    )
+    for i in range(1, 11):
+        eng.save_async(_row(i))
+    eng.start_auto_flush()
+    assert sink.started.wait(30)  # the tick took the rows and is writing
+    threading.Timer(0.5, sink.release.set).start()
+    eng.close()
+    assert sink.committed_batches() == [0]
+    assert eng.count() == 10
+
+
+def test_failed_tick_flush_keeps_ticking(spark, tmp_path, monkeypatch):
+    """One failed tick flush must not end time-based flushing, and its
+    error still surfaces on the timer thread."""
+    surfaced = []
+    monkeypatch.setattr(threading, "excepthook", lambda a: surfaced.append(a.exc_value))
+    sink = _GatedSink(str(tmp_path / "sink"), block=True, fail_first=True)
+    eng = BatcherEngine(
+        spark, sink, SCHEMA, EngineConfig(max_batch_rows=1_000_000, flush_interval_s=0.2)
+    )
+    eng.save_async(_row(1))
+    eng.start_auto_flush()
+    assert sink.started.wait(30)  # the first tick holds row 1
+    for i in range(2, 6):
+        eng.save_async(_row(i))  # saved while that tick is in flight
+    sink.release.set()  # ... and now it fails
+    deadline = time.time() + 30
+    while time.time() < deadline and not sink.committed_batches():
+        time.sleep(0.1)
+    eng.stop_auto_flush()
+    assert sink.committed_batches() == [1]  # batch 0 was the failed one
+    assert sorted(r.amount for r in eng.read().collect()) == [2, 3, 4, 5]
+    assert [str(e) for e in surfaced] == ["sink down"]
+
+
+def test_save_async_maps_dict_rows_by_field_name(spark, tmp_path):
+    sink = IdempotentParquetSink(str(tmp_path / "sink"))
+    eng = BatcherEngine(spark, sink, SCHEMA, EngineConfig())
+    eng.save_async({"sha256sum": "9", "amount": 1, "msg": None, "user_id": "u"})
+    eng.save_async({"amount": 2, "user_id": "v"})  # missing keys -> null
+    eng.close()
+    got = sorted(tuple(r) for r in eng.read().collect())
+    assert got == [("u", 1, None, "9"), ("v", 2, None, None)]
+
+
+ALL_TYPES = (
+    "s STRING, b BIGINT, i INT, d DOUBLE, f BOOLEAN, bin BINARY, "
+    "dec DECIMAL(10,2), dt DATE, ts TIMESTAMP, arr ARRAY<INT>"
+)
+_UTC2 = datetime.timezone(datetime.timedelta(hours=2))
+ALL_TYPES_ROWS = [
+    ("a", 1, 2, 1.5, True, b"\x00\x01", Decimal("1.23"), datetime.date(2020, 1, 2),
+     datetime.datetime(2020, 1, 2, 3, 4, 5, 6, tzinfo=datetime.timezone.utc), [1, None, 3]),
+    (None, None, None, None, None, None, None, None, None, None),
+    ("", -(2**63), -(2**31), float("inf"), False, bytearray(b"xy"), Decimal("-0.005"),
+     datetime.datetime(2021, 5, 6, 23, 59), datetime.datetime(1969, 12, 31, 23, 0, tzinfo=_UTC2),
+     (7,)),
+    # Values bare pyarrow would reject or store differently: non-string
+    # values in the STRING column (the list path stores str() of them,
+    # 'true' for a bool), a decimal the JVM rescales HALF_UP, an
+    # unsigned NaN decimal (null on the list path).
+    (1, 2**63 - 1, 2**31 - 1, -0.0, True, b"", Decimal("1.235"), None, None, []),
+    (b"xy", 0, 0, 1e300, False, None, Decimal("NaN"), None, None, None),
+    (True, 0, 0, 0.1, None, None, Decimal("99999999.99"), None, None, None),
+    ({"k": 1}, 0, 0, 2.5, None, None, Decimal("1E+2"), None, None, None),
+]
+
+# Decimals and coerced strings nested in arrays, maps and structs.
+NESTED = "a ARRAY<DECIMAL(10,2)>, m MAP<STRING, DECIMAL(10,2)>, st STRUCT<x: DECIMAL(10,2), y: STRING>"
+NESTED_ROWS = [
+    ([Decimal("1.005"), None], {"k": Decimal("2.345")}, (Decimal("0.125"), 7)),
+    (None, {"k": None}, {"y": "b", "x": Decimal("3")}),
+    ([], None, None),
+]
+# Every row the list path rejects; the engine must reject it too.
+REJECTED_ROWS = {
+    "float in BIGINT (bare pyarrow truncates it)": (None, 1.5) + (None,) * 8,
+    "bool in BIGINT": (None, True) + (None,) * 8,
+    "BIGINT out of range": (None, 2**63) + (None,) * 8,
+    "INT out of range": (None, None, 2**31) + (None,) * 7,
+    "int in DOUBLE": (None, None, None, 1) + (None,) * 6,
+    "int in BOOLEAN": (None,) * 4 + (1,) + (None,) * 5,
+    "str in BINARY": (None,) * 5 + ("x",) + (None,) * 4,
+    "float in DECIMAL": (None,) * 6 + (1.5,) + (None,) * 3,
+    "DECIMAL overflow after rounding": (None,) * 6 + (Decimal("99999999.995"),) + (None,) * 3,
+    "str in DATE": (None,) * 7 + ("2020-01-02",) + (None,) * 2,
+    "date in TIMESTAMP": (None,) * 8 + (datetime.date(2020, 1, 2), None),
+    "float in ARRAY<INT>": (None,) * 9 + ([1.5],),
+    "str as ARRAY<INT>": (None,) * 9 + ("ab",),
+    "too few fields": ("a", 1),
+}
+
+
+def _sorted_rows(df):
+    return sorted(repr(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("schema, rows", [(ALL_TYPES, ALL_TYPES_ROWS), (NESTED, NESTED_ROWS)])
+def test_flush_batch_matches_create_dataframe(spark, tmp_path, schema, rows):
+    """Differential: the batch read back after a flush equals the
+    frame ``spark.createDataFrame(rows, schema)`` builds."""
+    sink = _GatedSink(str(tmp_path / "sink"))
+    eng = BatcherEngine(spark, sink, schema, EngineConfig())
+    for row in rows:
+        eng.save_async(row)
+    assert eng.flush() == len(rows)
+    want = spark.createDataFrame(rows, schema)
+    got = eng.read()
+    assert got.dtypes == want.dtypes
+    assert _sorted_rows(got) == _sorted_rows(want)
+    # The frame the sink was handed is a local Arrow scan: its write
+    # runs in the JVM and starts no Python worker.
+    assert "ExistingRDD" not in sink.plans[0]
+    assert "LocalTableScan" in sink.plans[0]
+    assert "ExistingRDD" in want._jdf.queryExecution().executedPlan().toString()
+
+
+def test_flush_batch_stores_string_form_of_non_strings(spark, tmp_path):
+    sink = IdempotentParquetSink(str(tmp_path / "sink"))
+    eng = BatcherEngine(spark, sink, ALL_TYPES, EngineConfig())
+    for row in ALL_TYPES_ROWS:
+        eng.save_async(row)
+    eng.close()
+    assert {"1", "b'xy'", "true", "{'k': 1}"} <= {r.s for r in eng.read().collect()}
+
+
+@pytest.mark.parametrize("case", sorted(REJECTED_ROWS))
+def test_flush_rejects_what_create_dataframe_rejects(spark, tmp_path, case):
+    bad = REJECTED_ROWS[case]
+    with pytest.raises(Exception):
+        spark.createDataFrame([bad], ALL_TYPES).collect()
+    sink = _GatedSink(str(tmp_path / "sink"))
+    eng = BatcherEngine(spark, sink, ALL_TYPES, EngineConfig())
+    eng.save_async(ALL_TYPES_ROWS[0])
+    eng.save_async(bad)
+    with pytest.raises(Exception):
+        eng.flush()
+    assert sink.plans == []  # rejected before the sink saw a frame
+    assert sink.committed_batches() == []
+
+
+def test_bare_pyarrow_differs_from_list_path():
+    """Why the builder keeps PySpark's verifier and converters."""
+    assert pa.array([1.5], pa.int64()).to_pylist() == [1]  # silent truncation
+    with pytest.raises(pa.ArrowTypeError):
+        pa.array([1], pa.string())
+    assert pa.array([b"xy"], pa.string()).to_pylist() == ["xy"]
+
+
+def test_naive_timestamp_reads_in_os_local_zone(spark, tmp_path, monkeypatch):
+    """The list path turns a naive datetime into an instant through
+    ``time.mktime`` (the OS zone, not the session zone); so must the
+    flush batch."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        rows = [(datetime.datetime(2020, 1, 2, 3, 4, 5),), (datetime.datetime(2020, 7, 1, 12, 0),)]
+        sink = IdempotentParquetSink(str(tmp_path / "sink"))
+        eng = BatcherEngine(spark, sink, "ts TIMESTAMP", EngineConfig())
+        for row in rows:
+            eng.save_async(row)
+        eng.close()
+        micros = F.unix_micros("ts").alias("us")
+        got = sorted(r.us for r in eng.read().select(micros).collect())
+        want = sorted(r.us for r in spark.createDataFrame(rows, "ts TIMESTAMP").select(micros).collect())
+        assert got == want
+        utc = datetime.timezone.utc
+        assert got == [  # EST (UTC-5) in January, EDT (UTC-4) in July
+            int(datetime.datetime(2020, 1, 2, 8, 4, 5, tzinfo=utc).timestamp() * 1e6),
+            int(datetime.datetime(2020, 7, 1, 16, 0, tzinfo=utc).timestamp() * 1e6),
+        ]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
