@@ -52,7 +52,7 @@ _PRIORITY: list[str] = [
     "ingest_readback",
     "replay_idempotent",
     # --- ROUND 13 window (replaces the r12 list, preserved in
-    #     _R12_WINDOW_LEDGER below). OLDEST-EVIDENCE-FIRST round
+    #     r12 list in git log). OLDEST-EVIDENCE-FIRST round
     #     (VERDICT r12 task 1): with the single-green backlog cleared,
     #     the staleness frontier is the 73 queries last driver-green
     #     at r2/r4/r5 — the core TPC-H/dedup/text/set-ops block that
@@ -144,447 +144,10 @@ _PRIORITY: list[str] = [
 # chsql_state_merge_rollup, chsql_bounding_ratio_by_type) + the r7
 # pair (dedup_consensus, dedup_minhash_lsh) = 39 of 48 free slots;
 # the rest per the same oldest-evidence rule.
-# --- ROUND 12 window ledger (the list above replaced this; all 50
-#     r12 entries went hash-green in CORRECTNESS_r12, the fourth
-#     consecutive fully green window) ---
-_R12_WINDOW_LEDGER: list[str] = [
-    # --- t2 gate / reference core (kept every round) ---
-    "ingest_readback",
-    "replay_idempotent",
-    # --- ROUND 12 window (replaces the r11 list, preserved in
-    #     _R11_WINDOW_LEDGER below). BACKFILL-WEIGHTED round (VERDICT
-    #     r11 task 1): 46 of the 50 slots second-green every pre-r11
-    #     single-green query — the whole remaining r7/r8/r9/r10
-    #     backlog — driving the pre-r11 single-green count to 0; the
-    #     last 2 slots first-green the round-12 chsql promotions.
-    # (a) the one r7 single (deferred from r11 by design) ---
-    "weighted_sample_docs",
-    # (b) all 9 r8 singles, alphabetical ---
-    "chsql_window_funnel_windowed",
-    "dedup_lines_transform",
-    "dedup_span_rewrite",
-    "doremi_domain_weights",
-    "events_cusum_changepoint",
-    "events_theil_sen_trend",
-    "padding_efficiency_report",
-    "span_dedup_savings_by_source",
-    "user_survival_km",
-    # (c) all 15 r9 singles, alphabetical ---
-    "cluster_quality_consistency",
-    "coactivity_assortativity",
-    "coactivity_label_propagation",
-    "decontamination_report",
-    "dedup_inflation_report",
-    "docs_code_switch_report",
-    "events_hourly_seasonality",
-    "length_sorted_packing_gain",
-    "minhash_recall_curve",
-    "pii_rate_by_source",
-    "quality_psi_by_source",
-    "shingle_novelty_curve",
-    "temperature_mix_curve",
-    "token_budget_waterfill",
-    "user_lifecycle_stages",
-    # (d) all 21 r10 singles, alphabetical ---
-    "ab_assignment_srm",
-    "ab_ks_test",
-    "ab_min_sample_size",
-    "ann_recall_vs_exact",
-    "bpe_roundtrip_violations",
-    "docs_readability_report",
-    "dup_pair_training_spacing",
-    "embedding_centroid_distances",
-    "events_hourly_acf",
-    "lttb_invariant_violations",
-    "markov_kstep_distribution",
-    "media_pipeline_invariants",
-    "orders_benford_deviation",
-    "orders_pareto_skyline",
-    "parts_abc_classification",
-    "pca_projection_invariants",
-    "quantile_state_merge_daily",
-    "resharding_stability_report",
-    "semantic_dedup_invariants",
-    "shard_checksum_manifest",
-    "unigram_encode_lossless",
-    # (e) round-12 additions: the chsql transpiler promotions
-    #     (scalar -State/-Merge combinator pairs; boundingRatio),
-    #     each a loud-error-list construct turned real translation
-    #     with its own hash oracle ---
-    "chsql_state_merge_rollup",
-    "chsql_bounding_ratio_by_type",
-]
-# --- ROUND 11 window ledger (the list above replaced this; all 50
-#     r11 entries went hash-green in CORRECTNESS_r11, the third
-#     consecutive fully green window) ---
-_R11_WINDOW_LEDGER: list[str] = [
-    # --- t2 gate / reference core (kept every round) ---
-    "ingest_readback",
-    "replay_idempotent",
-    # --- ROUND 11 window (replaces the r10 list, preserved in
-    #     _R10_WINDOW_LEDGER below). BACKFILL-FIRST round (VERDICT
-    #     r10 task 2): catalog widening is FROZEN this round; 48 of
-    #     the 50 slots go to first-greens + oldest-vintage
-    #     second-green backfill.
-    # (a) the seven round-10 operators with NO driver row yet
-    #     (pytest-verified + scale-run in r10; first green beats
-    #     everything else). Burstiness and Holt carry the round-11
-    #     ADVICE fixes (population sigma; tdiv forecasts). ---
-    "attribution_model_comparison",
-    "customer_order_islands",
-    "docs_simpson_diversity",
-    "events_dominant_period",
-    "events_holt_forecast_daily",
-    "orders_interarrival_burstiness",
-    "user_metric_corr_matrix",
-    # (b) second-green backfill, oldest single-green vintage first:
-    #     41 of the 42 queries whose ONLY green is r7, alphabetical
-    #     (the computed singles ledger from CORRECTNESS_r01-r10).
-    #     The one deferral — weighted_sample_docs, alphabetically
-    #     last — heads the r12 queue with the r8 singles; its
-    #     family keeps perplexity_bucket_sample +
-    #     temperature_mix_sample in-window. ---
-    "boilerplate_spans_top",
-    "bounding_ratio_by_user",
-    "chsql_array_join_token_stats",
-    "chsql_final_sample_latest_state",
-    "chsql_limit_by_top_users",
-    "chsql_positional_params_count",
-    "chsql_prewhere_totals_by_status",
-    "chsql_retention_seq_counts",
-    "corpus_curation_funnel",
-    "dedup_cluster_sizes",
-    "dedup_clusters",
-    "dedup_threshold_sweep",
-    "delta_sum_by_type",
-    "doc_novelty_ratio",
-    "docs_bigram_logprob",
-    "docs_kn_bigram_logprob",
-    "dsir_importance_weights",
-    "dsir_resample_docs",
-    "duplicate_line_ratio",
-    "embedding_label_cohesion",
-    "events_ols_fit",
-    "events_sparkbar_hourly",
-    "join_key_skew_report",
-    "kmv_union_intersection",
-    "lang_token_budget_plan",
-    "leakage_safe_split",
-    "perplexity_bucket_sample",
-    "quality_budget_curve",
-    "quality_classifier_nb",
-    "quality_filter_c4",
-    "source_distinctive_terms",
-    "source_overlap_matrix",
-    "temperature_mix_sample",
-    "tfidf_top_terms",
-    "token_fertility_by_lang",
-    "token_zipf_fit",
-    "topk_weighted_users",
-    "tpch_q12_late_lines_by_status",
-    "user_sequence_logprob",
-    "user_type_minmax_map",
-    "vocab_growth_curve",
-]
-# --- ROUND 10 window ledger (the list above replaced this; all 50
-#     r10 entries went hash-green in CORRECTNESS_r10, the first
-#     fully green window with zero standing disputes) ---
-_R10_WINDOW_LEDGER: list[str] = [
-    # --- t2 gate / reference core (kept every round) ---
-    "ingest_readback",
-    "replay_idempotent",
-    # --- ROUND 10 window (replaces the r9 list, preserved in the
-    #     ledger comment below).
-    # (a) the one r9 RED re-checked first: shard_checksum_manifest's
-    #     DECIMAL(38,0) checksum was driver-hash-red in r9 while the
-    #     local sweep passed (VERDICT r9 task 1); the checksum now
-    #     renders as two BIGINT 24-bit half-sums. ---
-    "shard_checksum_manifest",
-    # (b) the seven new rows-only-family companions (VERDICT r9 task
-    #     2): deterministic, hash-oracled reductions of the 13
-    #     justified rows-only queries (ANN trio, BPE pair, unigram
-    #     pair, PCA, LTTB, SemDeDup, media trio) — first green beats
-    #     a second green. ---
-    "ann_recall_vs_exact",
-    "bpe_roundtrip_violations",
-    "unigram_encode_lossless",
-    "pca_projection_invariants",
-    "lttb_invariant_violations",
-    "semantic_dedup_invariants",
-    "media_pipeline_invariants",
-    # (c) second-green backfill, oldest single-green vintage first
-    #     (VERDICT r9 task 3), computed from CORRECTNESS_r01-r09
-    #     greens-with-len-1: ALL 25 remaining r6-vintage singles,
-    #     then the 15 alphabetically-first r7 singles. The remaining
-    #     r7 (24), r8 (9) and r9 (15) singles queue for r11. ---
-    # r6 vintage (all 25):
-    "hybrid_retrieval_rrf",
-    "kmv_distinct_users",
-    "langid_confusion",
-    "lineitem_weighted_price_median",
-    "max_concurrent_intervals",
-    "next_event_prediction",
-    "orders_transfer_checksum",
-    "part_copurchase_lift",
-    "props_information_value",
-    "repeated_span_stats",
-    "sequence_count_per_user",
-    "supplier_hhi_by_nation",
-    "t5_span_corruption",
-    "topk_heavy_hitters",
-    "tpch_q11_important_parts",
-    "tpch_q16_supplier_cnt",
-    "tpch_q20_promo_suppliers",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q4_order_priority",
-    "tpch_q9_profit_by_nation",
-    "user_active_interval_sum",
-    "user_activity_gini",
-    "user_type_sum_map",
-    "window_funnel_levels",
-    # r7 vintage (5 of the alphabetically-first 15 keep their slots;
-    # the other 10 r7 backfills moved to the r11 queue as the round-10
-    # widening landed — see the swap notes below):
-    "chsql_window_funnel_default",
-    "classifier_calibration_bins",
-    # (second round-10 widening swap: ab_min_sample_size /
-    # parts_abc_classification / orders_benford_deviation take the
-    # boilerplate_spans_top / chsql_array_join_token_stats /
-    # dedup_clusters backfill slots — first green beats a second
-    # green; demoted families keep in-window representatives
-    # (repeated_span_stats for spans, chsql_window_funnel_default for
-    # chsql, semantic_dedup_invariants + dup_pair_training_spacing for
-    # dedup) and head the r11 queue with events_dominant_period, whose
-    # family anchor events_hourly_acf is in-window.)
-    "ab_min_sample_size",
-    "parts_abc_classification",
-    "orders_benford_deviation",
-    # (round-10 widening swap: the EIGHT new round-10 operators take
-    # eight r7 second-green backfill slots — first green beats a
-    # second green, the same rule every prior round applied. Demoted
-    # (each keeps its r7 green + pytest parity and heads the r11
-    # queue, and each family keeps an in-window representative):
-    # bounding_ratio_by_user (chagg: user_type_sum_map stays),
-    # chsql_final_sample_latest_state / chsql_limit_by_top_users /
-    # chsql_positional_params_count / chsql_prewhere_totals_by_status /
-    # chsql_retention_seq_counts (chsql: array_join_token_stats +
-    # window_funnel_default stay), corpus_curation_funnel (corpus:
-    # t5_span_corruption stays), dedup_cluster_sizes (CC family:
-    # dedup_clusters stays).)
-    "ab_ks_test",
-    "events_hourly_acf",
-    "markov_kstep_distribution",
-    "orders_pareto_skyline",
-    "docs_readability_report",
-    "quantile_state_merge_daily",
-    "embedding_centroid_distances",
-    "ab_assignment_srm",
-    # (late round-10 swap: resharding_stability_report and
-    # dup_pair_training_spacing — the two new round-10 operators —
-    # take the dedup_threshold_sweep / delta_sum_by_type backfill
-    # slots: first green beats a second green; both demotions keep
-    # their r7 green + pytest parity and head the r11 queue.)
-    "resharding_stability_report",
-    "dup_pair_training_spacing",
-]
-# r11 first-green queue (added after the round-10 window froze):
-# events_dominant_period, events_holt_forecast_daily,
-# customer_order_islands, attribution_model_comparison — plus the ten
-# r7 second-green demotions named in the swap comments above.
-# --- ROUND 9 window ledger (the list above replaced this; 49 of the
-#     50 r9 entries went hash-green in CORRECTNESS_r09, the one red —
-#     shard_checksum_manifest — leads the r10 window after its
-#     BIGINT-half-sum fix) ---
-_R9_WINDOW_LEDGER: list[str] = [
-    "ingest_readback",
-    "replay_idempotent",
-    # --- ROUND 9 window (replaces the r8 list, preserved in the
-    #     ledger comment below). With all 223 oracled queries
-    #     ever-green after r8, this window is (a) changed-
-    #     implementation re-checks for every operator the round-9
-    #     code touched, then (b) second-green backfill, oldest
-    #     single-green vintage first (4 r2 entries, then the r6
-    #     batch, alphabetical within vintage — computed from the
-    #     eight CORRECTNESS files; 62 r6/r7 singles remain queued
-    #     for r10). ---
-    # (a) round-9 changed implementations:
-    #     dedup_simhash — bucket-capped in-row pair generation;
-    #     embedding_neardup / knn_label_agreement /
-    #     bitext_margin_mining / hard_negative_triplets — the
-    #     CANDIDATE_SOURCE crossover touched their bodies (default
-    #     path re-verified);
-    #     coactivity_kcore — size-gated peel broadcast hints.
-    "dedup_simhash",
-    "embedding_neardup",
-    "knn_label_agreement",
-    "bitext_margin_mining",
-    "hard_negative_triplets",
-    "coactivity_kcore",
-    # (b) second-green backfill — r2 vintage (the last four):
-    "media_frame_sample",
-    "merge_upsert_orders",
-    "profile_events",
-    "winnow_fingerprints",
-    # (b) second-green backfill — r6 vintage (first 38 of 47):
-    "ab_mann_whitney_u",
-    "ab_welch_ttest",
-    "asof_forward_events_orders",
-    "asof_nearest_events_orders",
-    "concat_block_packing",
-    "conversion_latency_quantiles",
-    "customer_rfm_segments",
-    "dedup_containment_pairs",
-    "dedup_keep_canonical",
-    "event_type_pmi",
-    "event_type_user_entropy",
-    "events_bit_aggregates",
-    "events_cramers_v",
-    "events_hour_anova",
-    "events_hourly_robust_anomalies",
-    "events_linreg_by_type",
-    "events_rank_corr",
-    "events_rolling_median_12h",
-    "events_skew_kurt_by_type",
-    "events_theils_u",
-    "hll_distinct_users",
-    "hll_state_merge_daily",
-    # (late round-9 swap 3: coactivity_label_propagation and
-    # coactivity_assortativity take the kmv_distinct_users /
-    # langid_confusion backfill slots — first green beats second; both
-    # demotions keep their r6 green + pytest parity.)
-    "coactivity_label_propagation",
-    "coactivity_assortativity",
-    # (late round-9 swap 4: events_hourly_seasonality and
-    # user_lifecycle_stages take the lineitem_weighted_price_median /
-    # hybrid_retrieval_rrf backfill slots — first green beats second.)
-    "events_hourly_seasonality",
-    "user_lifecycle_stages",
-    # (late round-9 swap 2: pii_rate_by_source and
-    # shard_checksum_manifest take the max_concurrent_intervals /
-    # next_event_prediction backfill slots — same first-green-first
-    # policy; both demotions keep their r6 green + pytest parity.)
-    "pii_rate_by_source",
-    "shard_checksum_manifest",
-    # (late round-9 swap: cluster_quality_consistency,
-    # minhash_recall_curve and dedup_inflation_report take the
-    # orders_transfer_checksum / part_copurchase_lift /
-    # props_information_value backfill slots — first green beats a
-    # second green; all three demotions keep their r6 green + pytest
-    # parity and head the r10 queue with the earlier seven.)
-    "cluster_quality_consistency",
-    "minhash_recall_curve",
-    "dedup_inflation_report",
-    # --- new round-9 operators (first green beats a second green):
-    #     these seven take the last seven r6 backfill slots
-    #     (repeated_span_stats, sequence_count_per_user,
-    #     supplier_hhi_by_nation, t5_span_corruption,
-    #     topk_heavy_hitters, tpch_q11_important_parts,
-    #     tpch_q16_supplier_cnt — all keep their r6 green + pytest
-    #     parity and head the r10 backfill queue). ---
-    "length_sorted_packing_gain",
-    "docs_code_switch_report",
-    "shingle_novelty_curve",
-    "quality_psi_by_source",
-    "token_budget_waterfill",
-    "decontamination_report",
-    "temperature_mix_curve",
-]
-# --- ROUND 8 window ledger (the list above replaced this; every r8
-#     entry went green in CORRECTNESS_r08) ---
-_R8_WINDOW_LEDGER: list[str] = [
-    # --- ROUND 8 window. r7 went 50/50 green, leaving exactly ONE
-    #     oracled query with zero driver rows (dedup_lines_transform:
-    #     the r7 swap-4 comment promised it a slot but the list never
-    #     got the entry — VERDICT r7 "what's wrong" #1). It leads.
-    #     The rest of the window is SECOND-green backfill, oldest
-    #     single-green first (r2 vintage, then r4, then r5, then the
-    #     oldest r6 entries), computed from CORRECTNESS_r0*.json.
-    #     New round-8 operators swap into the tail slots as they land
-    #     (a first green beats a second green; a second green beats a
-    #     third). ---
-    "dedup_lines_transform",
-    # r2-vintage single greens (all 17)
-    "text_stats",
-    "langid_predict",
-    "token_histogram",
-    "token_count_bpeish",
-    "redact_docs",
-    "doc_fingerprint",
-    # user_survival_km (new round-8 operator, hash-oracled) takes
-    # winnow_fingerprints' second-green backfill slot (green r2; the
-    # fingerprint family keeps doc_fingerprint in-window)
-    "user_survival_km",
-    # events_theil_sen_trend (new round-8 operator, hash-oracled)
-    # takes merge_upsert_orders' second-green backfill slot (green r2;
-    # the merge family keeps full pytest parity + that green row)
-    "events_theil_sen_trend",
-    "media_metadata",
-    # knn_label_agreement (new round-8 operator, hash-oracled) takes
-    # media_frame_sample's second-green backfill slot (green r2; the
-    # multimodal family keeps media_metadata in-window)
-    "knn_label_agreement",
-    # events_cusum_changepoint (new round-8 operator, hash-oracled)
-    # takes profile_events' second-green backfill slot (green r2; the
-    # profiling family keeps pytest parity + that green row)
-    "events_cusum_changepoint",
-    "range_join_orders_window",
-    "events_rollup_hierarchy",
-    "similarity_topk",
-    "embedding_neardup",
-    "retrieval_topk_docs",
-    "token_count_min_sketch",
-    # r4-vintage single greens (all 3)
-    "events_hourly_interpolate",
-    "events_day_over_day",
-    "value_histogram_quantiles",
-    # r5-vintage single greens (all 21)
-    "tpch_q3_unshipped",
-    "tpch_q5_regional_share",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q10_returned_items",
-    "tpch_q14_promo_revenue",
-    "tpch_q13_order_distribution",
-    "tpch_q18_big_orders",
-    "tpch_q15_top_supplier",
-    "tpch_q22_idle_customers",
-    "tpch_q8_market_share",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q19_bracket_revenue",
-    "events_ohlc_hourly",
-    "user_event_sequences",
-    "user_retention_flags",
-    "sequence_match_counts",
-    "uniq_up_to_types_per_user",
-    "events_ema_hourly_counts",
-    "shard_documents_for_training",
-    "pack_sequences_budget",
-    # --- new round-8 operators (first green) ---
-    "dedup_span_rewrite",
-    # chsql_window_funnel_windowed takes orders_transfer_checksum's
-    # slot (single-green r6; the checksum family keeps pytest parity
-    # and its driver row): the funnel_windowed scale hint gets its
-    # proof under the driver hash gate next to the fold form.
-    "chsql_window_funnel_windowed",
-    # span_dedup_savings_by_source takes tpch_q2's slot (single-green
-    # r6; the TPC-H family keeps 20 other in-window entries this
-    # round plus every r5/r6 green)
-    "span_dedup_savings_by_source",
-    # doremi_domain_weights and padding_efficiency_report (new round-8
-    # operators, both hash-oracled) take the tpch_q4/tpch_q9 tail
-    # slots: a first green beats a second green, and the TPC-H family
-    # keeps 20 other in-window entries this round plus every r5/r6
-    # green.
-    "doremi_domain_weights",
-    "padding_efficiency_report",
-    # coactivity_kcore (new round-8 operator, hash-oracled fixed-
-    # unroll peeling) takes the last tail slot from
-    # tpch_q11_important_parts (single-green r6; the TPC-H family
-    # keeps its 20 other in-window entries): a first green beats a
-    # second green.
-    "coactivity_kcore",
-]
+#
+# Earlier windows (rounds 8-12) and the reasoning behind them are in
+# `git log -p -- __spark_entry__.py` and CORRECTNESS_r*.json.
+#
 # Third-session swap: delete_where_counts, tpch_q1, dedup_exact_docs
 # (green in BOTH r1+r2), similarity_topk, embedding_neardup,
 # media_metadata (green r2) moved past the cutoff so the six operators

@@ -428,9 +428,9 @@ def main() -> None:
     spark.catalog.clearCache()
     # Release the warm pass's memoized frames (every module's — the
     # central registry hook, VERDICT r9 task 5 / r13 tasks 1-2).
-    from clickhouse_batcher_spark.operators.dedup import evict_memos
+    from clickhouse_batcher_spark.operators.memo import evict_all
 
-    evict_memos()
+    evict_all()
 
     # Best-of-2 per query, second pass in REVERSE order: rounds 1-2
     # both showed position-dependent contention (whichever queries run
@@ -469,7 +469,7 @@ def main() -> None:
                 )
             finally:
                 spark.catalog.clearCache()
-                evict_memos()
+                evict_all()
     if failures:
         print("\n".join(failures), file=sys.stderr)
 
@@ -497,7 +497,7 @@ def main() -> None:
             failures.append(f"amortized {name}: {exc}")
         finally:
             spark.catalog.clearCache()  # memos deliberately kept
-    evict_memos()  # release before the ingest benchmarks
+    evict_all()  # release before the ingest benchmarks
 
     # Ingest: one untimed warm run at sf0.001, then best-of-2 per
     # regime. The FIRST streaming query in a process pays one-off

@@ -27,26 +27,6 @@ from pyspark.sql import functions as F
 from clickhouse_batcher_spark.catalog import query
 from clickhouse_batcher_spark.operators import memo
 
-def _cut_lineage(df: DataFrame) -> DataFrame:
-    """Eager lineage cut for the CC loop's vertex-sized label frames.
-
-    ``localCheckpoint()`` stores blocks on executors — exactly right in
-    local mode (and the cheapest cut available), but on a real cluster
-    an executor loss makes the truncated lineage unrecoverable
-    mid-loop. When the session has a RELIABLE checkpoint directory
-    configured (``spark.sparkContext.setCheckpointDir(...)`` pointing
-    at HDFS/object storage — SCALE.md's prescription for cluster
-    runs), use ``checkpoint()`` instead: same eager materialization
-    and plan truncation, storage that survives executor death. The
-    caller opts in purely through session state; no operator signature
-    changes.
-    """
-    sc = df.sparkSession.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isDefined():
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint()
-
-
 MAX_ITERATIONS = 30
 # Truncate lineage every N actions: each action stacks join+aggs on
 # the plan, and on high-diameter graphs (chains) the un-truncated DAG
@@ -95,7 +75,7 @@ def connected_components(
     the same job that materializes the new labels (labels only ever
     decrease, so ``label < old_label`` on the final step counts
     changes) instead of a separate new-vs-old join; and lineage is cut
-    with ``localCheckpoint()`` every ``CHECKPOINT_EVERY`` actions so a
+    with ``memo.materialize()`` every ``CHECKPOINT_EVERY`` actions so a
     diameter-D graph costs O(D) work, not O(D) plan depth.
     """
     # undirected: both directions; every vertex appears as "v". Built
@@ -148,7 +128,7 @@ def connected_components(
         )
         if (it + 1) % CHECKPOINT_EVERY == 0:
             # eager: materializes AND truncates lineage in one job
-            new_labels = _cut_lineage(new_labels)
+            new_labels = memo.materialize(new_labels)
         else:
             new_labels = new_labels.cache()
         # single action: materializes the cache/checkpoint and returns
@@ -170,9 +150,9 @@ def connected_components(
     # plans print (and re-analyze) their whole ancestry recursively —
     # downstream composers (cluster sizes, leakage split) inherited a
     # multi-thousand-node plan. The labels are vertex-sized and already
-    # materialized, so an eager localCheckpoint costs one tiny job and
+    # materialized, so an eager cut costs one tiny job and
     # returns a plan that is just a scan.
-    out = _cut_lineage(
+    out = memo.materialize(
         labels.select(
             F.col("v").alias("vertex"), F.col("label").alias("component")
         )
@@ -183,30 +163,23 @@ def connected_components(
 
 # Component memo: dedup_cluster_sizes (and any future consumer of the
 # closure) reuses the session's already-propagated labels instead of
-# re-running the iteration loop. Same keying discipline as
-# dedup._SHINGLE_MEMO / _MINHASH_PAIRS_MEMO.
-_CC_MEMO: dict[tuple[str, str], DataFrame] = memo.register({})
-
-
+# re-running the iteration loop. The loop's lineage cuts are build
+# intermediates, released once the memo entry is materialized.
 @query("dedup_clusters")  # oracle: recursive-CTE closure, see below
+@memo.shared
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster the MinHash-verified near-dup pairs; output one row per
     clustered doc with its component id and the deterministic survivor
     (min doc id = the component id itself)."""
     from clickhouse_batcher_spark.operators.dedup import minhash_pairs_cached
 
-    def build() -> DataFrame:
-        pairs = minhash_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
-        comps = connected_components(pairs)
-        return comps.select(
-            F.col("vertex").alias("doc_id"),
-            F.col("component").alias("cluster_id"),
-            (F.col("vertex") == F.col("component")).alias("is_survivor"),
-        )
-
-    # checkpoint, not cache: survives the bench loop's per-query
-    # clearCache (see dedup._SHINGLE_MEMO note).
-    return memo.get_or_build(_CC_MEMO, spark, sf_dir, build)
+    pairs = minhash_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
+    comps = connected_components(pairs)
+    return comps.select(
+        F.col("vertex").alias("doc_id"),
+        F.col("component").alias("cluster_id"),
+        (F.col("vertex") == F.col("component")).alias("is_survivor"),
+    )
 
 
 # ---------------------------------------------------------------------------

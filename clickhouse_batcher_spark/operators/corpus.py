@@ -190,6 +190,7 @@ CONTAM_MIN_SHARED = 2     # shared distinct shingles => contaminated
     GROUP BY s.doc_id
     """,
 )
+@memo.shared
 def decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(train_doc_id, n_shared_shingles, contaminated) for every train
     doc sharing at least one 3-token shingle with the benchmark slice.
@@ -198,18 +199,7 @@ def decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles."""
     # Contamination-hits memo (round-13): decontamination_report
     # re-derived this whole shingle+join pipeline for its per-source
-    # rollup; materialize once per (session, sf_dir) — clearCache-proof
-    # localCheckpoint, same discipline as dedup._SHINGLE_MEMO.
-    return memo.get_or_build(
-        _DECONTAM_MEMO, spark, sf_dir,
-        lambda: _decontaminate_docs_build(spark, sf_dir),
-    )
-
-
-_DECONTAM_MEMO: dict[tuple[str, str], DataFrame] = memo.register({})
-
-
-def _decontaminate_docs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # rollup; materialize once per (session, sf_dir).
     from clickhouse_batcher_spark.operators.dedup import shingle_set
 
     docs = load_table(spark, sf_dir, "documents")
@@ -217,7 +207,7 @@ def _decontaminate_docs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hits join BOTH reference this frame; the former lazy .cache()
     # raced its two consumers inside one action (the memo's own build
     # job), so only an up-front materialization removes the duplicate
-    # tokenize+shingle work.
+    # tokenize+shingle work. Released when the memo build ends.
     sh = memo.materialize(
         shingle_set(
             docs.repartition(spark.sparkContext.defaultParallelism).select(
@@ -766,26 +756,14 @@ def _dsir_oracle() -> str:
 
 
 @query("dsir_importance_weights", oracle=None)
+@memo.shared
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc DSIR log importance weight of the raw corpus against the
     English-slice target (higher = resample this doc more)."""
     # Weights memo (round-13): dsir_resample_docs references this frame
     # TWICE (the row set and its max-logweight aggregate) and runs back
     # to back with this query in bench/driver windows; materialize once
-    # per (session, sf_dir) — clearCache-proof localCheckpoint, same
-    # discipline as dedup._SHINGLE_MEMO.
-    return memo.get_or_build(
-        _DSIR_W_MEMO, spark, sf_dir,
-        lambda: _dsir_importance_weights_build(spark, sf_dir),
-    )
-
-
-_DSIR_W_MEMO: dict[tuple[str, str], DataFrame] = memo.register({})
-
-
-def _dsir_importance_weights_build(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
+    # per (session, sf_dir).
     docs = load_table(spark, sf_dir, "documents")
     occ = docs.select(
         "doc_id", "lang", F.explode(tokens("text")).alias("token")

@@ -159,13 +159,11 @@ def shingle_set(corpus: DataFrame, k: int = SHINGLE_K) -> DataFrame:
 # ``_minhash_pairs`` alone) and the cross-query amortization this memo
 # exists for never happened in the timed pass. A localCheckpoint is
 # RDD-backed, not CacheManager-backed, so clearCache cannot evict it —
-# the same discipline graph._EDGES_MEMO / classifier._NBQ_MEMO already
-# use. Release goes through :func:`evict_memos` (which unpersists the
-# checkpointed RDD directly). Round 14: the dict lives in the central
-# registry (operators/memo.py) so ONE hook releases every module's
-# memos, and materialization goes through memo.materialize() — a
-# reliable checkpoint() when the context has a checkpoint dir (cluster
-# runs per SCALE.md), localCheckpoint() otherwise.
+# the same discipline every memo of the package uses: it is declared
+# with ``@memo.shared`` (operators/memo.py), materialized through
+# memo.materialize() — a reliable checkpoint() when the context has a
+# checkpoint dir (cluster runs per SCALE.md), localCheckpoint()
+# otherwise — and released by memo.evict_all().
 #
 # Round-14 restructure (guide §2.4): the memo holds PER-DOC DISTINCT
 # SHINGLE ARRAYS (doc_id, sh: array<string>) built entirely in-row —
@@ -178,23 +176,15 @@ def shingle_set(corpus: DataFrame, k: int = SHINGLE_K) -> DataFrame:
 # folds (previously a vocab distinct + join + 16-way min aggregate —
 # three exchanges), and pair verification intersects the arrays
 # directly (previously a collect_set groupBy).
-_SHINGLE_MEMO: dict[tuple[str, str], DataFrame] = memo.register({})
-
-# Re-exported for tests/tools that inspect storage levels directly.
-_checkpoint_rdd = memo._checkpoint_rdd
-
-
+@memo.shared
 def _doc_shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh: array<string>) — each doc's DISTINCT k-shingles,
-    memoized per (session, sf_dir). See the _SHINGLE_MEMO note."""
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        corpus = tokenized_corpus(docs)
-        return corpus.filter(F.size("tokens") >= SHINGLE_K).select(
-            "doc_id", F.array_distinct(_mk_shingles()).alias("sh")
-        )
-
-    return memo.get_or_build(_SHINGLE_MEMO, spark, sf_dir, build)
+    memoized per (session, sf_dir). See the note above."""
+    docs = load_table(spark, sf_dir, "documents")
+    corpus = tokenized_corpus(docs)
+    return corpus.filter(F.size("tokens") >= SHINGLE_K).select(
+        "doc_id", F.array_distinct(_mk_shingles()).alias("sh")
+    )
 
 
 def _shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,6 +236,9 @@ def dedup_content_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # N-gram Jaccard near-dup pairs
 # ---------------------------------------------------------------------------
+# Verified-pair memo (round-13): minhash_recall_curve (the "truth"
+# side) and dedup_consensus both re-derived this exact pair frame;
+# materialize once per (session, sf_dir).
 @query(
     "dedup_ngram_jaccard",
     oracle=f"""
@@ -269,21 +262,8 @@ def dedup_content_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE CAST(shared AS DOUBLE) / (sa.n + sb.n - shared) >= {JACCARD_THRESHOLD}
     """,
 )
+@memo.shared
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Verified-pair memo (round-13): minhash_recall_curve (the "truth"
-    # side) and dedup_consensus both re-derived this exact pair frame;
-    # materialize once per (session, sf_dir) — clearCache-proof
-    # checkpoint, same discipline as _SHINGLE_MEMO above.
-    return memo.get_or_build(
-        _JACCARD_PAIRS_MEMO, spark, sf_dir,
-        lambda: _ngram_jaccard_build(spark, sf_dir),
-    )
-
-
-_JACCARD_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = memo.register({})
-
-
-def _ngram_jaccard_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles = _shingles_cached(spark, sf_dir)
     sizes = _doc_sizes(spark, sf_dir)
     # Pair generation without a self-join: group each rare shingle's
@@ -502,35 +482,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bench/driver runs invoke them back to back — computing the LSH
 # pipeline once per (session, sf_dir) amortizes the suite's single most
 # expensive subtree across four catalog queries (VERDICT r6 task 4).
-# Same keying discipline as _SHINGLE_MEMO above.
-_MINHASH_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = memo.register({})
-
-
+@memo.shared
 def minhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # checkpoint, not cache: survives the bench loop's per-query
-    # clearCache (see _SHINGLE_MEMO note above).
-    return memo.get_or_build(
-        _MINHASH_PAIRS_MEMO, spark, sf_dir,
-        lambda: _minhash_pairs(spark, sf_dir),
-    )
-
-
-def evict_memos(sf_dir: str | None = None) -> int:
-    """Unpersist and drop ALL registered memoized frames (every module's,
-    not just dedup's — round 14, VERDICT r13 task 1).
-
-    The memos deliberately amortize each family's most expensive
-    subtrees across back-to-back catalog queries (bench/driver runs),
-    but in a long-lived session iterating over MANY corpora they would
-    pin executor storage with no release path (VERDICT r9 "what's
-    wrong" #2, r13 #2). Call with an ``sf_dir`` to release one corpus's
-    frames (bench/sweep teardown between scale points), or with ``None``
-    to flush everything. Returns the number of entries released; see
-    :func:`clickhouse_batcher_spark.operators.memo.evict_all`."""
-    return memo.evict_all(sf_dir)
-
-
-def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-14 restructure (guide §2.4): signatures come straight off
     # the per-doc shingle ARRAYS — 16 in-row array_min folds over the
     # memoized arrays (the streaming gate's proven-bit-identical

@@ -4,22 +4,31 @@ Several operator modules memoize an expensive shared subtree once per
 (applicationId, sf_dir) so back-to-back catalog queries (bench/driver
 runs, notebook sessions) amortize it instead of re-deriving it — dedup
 shingles, MinHash-verified pairs, graph edges, ANN results, NB scores.
-Round 13 made those memos checkpoint-backed (clearCache-proof), which
-left most of them with NO release path: ``dedup.evict_memos`` only knew
-about dedup's three dicts, so a long-lived session iterating over many
-corpora pinned executor storage monotonically (VERDICT r13 "what's
-wrong" #2), and the bench could not charge each recorded sample its own
-pipeline (VERDICT r13 #1 — honest accounting).
 
-This module fixes both with one convention:
+There is one way to declare such a memo: decorate a module-level
+``build(spark, sf_dir) -> DataFrame`` with :func:`shared`::
 
-- every memo dict is created via :func:`register`, keyed on tuples whose
-  ``key[0]`` is the owning applicationId and ``key[1]`` is the sf_dir;
-- every entry is materialized via :func:`materialize` (reliable
-  ``checkpoint()`` when the context has a checkpoint dir — survives
-  executor loss on a cluster, per SCALE.md — else ``localCheckpoint()``);
+    @memo.shared
+    def coactivity_edges_cached(spark, sf_dir):
+        return coactivity_edges(load_table(spark, sf_dir, "events"))
+
+The decorator creates and registers the memo dict (exposed as
+``getter.table``, keyed on ``(applicationId, sf_dir)``) and returns a
+getter with the same ``(spark, sf_dir)`` signature that builds on first
+use through :func:`get_or_build`. The undecorated build stays reachable
+as ``getter.__wrapped__`` for tests that need a real recompute.
+
+- Every entry is materialized through :func:`materialize`, the one
+  lineage cut of the package: a reliable ``checkpoint()`` when the
+  context has a checkpoint dir (survives executor loss on a cluster,
+  per SCALE.md), else ``localCheckpoint()``.
+- Frames that :func:`materialize` cuts *while a build runs* are that
+  build's intermediates: they are released as soon as the entry itself
+  is materialized. An entry of another memo built inside the build is
+  not an intermediate and stays held.
 - :func:`evict_all` releases every registered entry (optionally one
-  corpus's), unpersisting the checkpointed blocks deterministically.
+  corpus's): it unpersists the blocks and deletes a reliable
+  checkpoint's files.
 
 bench.py / tools/qtime.py call ``evict_all()`` in their per-query
 cleanup so every recorded cold sample pays its own pipeline; they time
@@ -28,7 +37,9 @@ a separate, clearly-labeled amortized pass with the memos left warm.
 
 from __future__ import annotations
 
+import functools
 import logging
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -38,19 +49,46 @@ log = logging.getLogger(__name__)
 # registry survives as long as the process, like the dicts themselves.
 _REGISTRY: list[dict] = []
 
-# Unexpected unpersist failures (ADVICE r13: a broken internals path
-# must be visible, not silently become a storage leak).
+# Unexpected release failures (a broken internals path must be
+# visible, not silently become a storage leak).
 _EVICT_FAILURES = 0
+
+# Per-thread stack of running builds; each level collects the frames
+# materialize() cut while that build ran. Thread-local so a streaming
+# query's materialize() on another thread never lands in a build.
+_BUILDS = threading.local()
 
 
 def register(memo: dict) -> dict:
-    """Create-and-register a memo dict: ``_MY_MEMO = register({})``."""
+    """Add a memo dict to the registry :func:`evict_all` walks."""
     _REGISTRY.append(memo)
     return memo
 
 
+def shared(build):
+    """Declare a memo over a module-level ``build(spark, sf_dir)``."""
+    table = register({})
+
+    @functools.wraps(build)
+    def getter(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return get_or_build(table, spark, sf_dir, build)
+
+    getter.table = table
+    return getter
+
+
+def _cut(df: DataFrame) -> DataFrame:
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint()
+
+
+def _build_stack() -> list[list[DataFrame]]:
+    return _BUILDS.__dict__.setdefault("stack", [])
+
+
 def materialize(df: DataFrame) -> DataFrame:
-    """Materialize a memo entry, cutting lineage.
+    """Materialize ``df`` eagerly and cut its lineage.
 
     Prefers a reliable ``checkpoint()`` when the SparkContext has a
     checkpoint directory configured (cluster runs per SCALE.md: an
@@ -58,25 +96,29 @@ def materialize(df: DataFrame) -> DataFrame:
     checkpoint files instead of killing every consumer), falling back
     to ``localCheckpoint()`` (executor-block-backed, no lineage) in
     local mode where executor loss means the whole app is gone anyway.
+    Inside a memo build the result is released when the build ends.
     """
-    sc = df.sparkSession.sparkContext
-    try:
-        ckpt_dir = sc.getCheckpointDir()
-    except Exception:  # very old API surface; treat as unset
-        ckpt_dir = None
-    if ckpt_dir:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint()
+    out = _cut(df)
+    stack = _build_stack()
+    if stack:
+        stack[-1].append(out)
+    return out
 
 
-def get_or_build(memo: dict, spark: SparkSession, sf_dir: str, build,
-                 *extra_key) -> DataFrame:
+def get_or_build(memo: dict, spark: SparkSession, sf_dir: str,
+                 build) -> DataFrame:
     """The shared getter: one materialized frame per
-    (applicationId, sf_dir, *extra_key), built on first use."""
-    key = (spark.sparkContext.applicationId, sf_dir, *extra_key)
+    (applicationId, sf_dir), built on first use."""
+    key = (spark.sparkContext.applicationId, sf_dir)
     df = memo.get(key)
     if df is None:
-        df = materialize(build())
+        stack = _build_stack()
+        stack.append([])
+        try:
+            df = _cut(build(spark, sf_dir))
+        finally:
+            for frame in stack.pop():
+                _release(frame, "build intermediate")
         memo[key] = df
     return df
 
@@ -95,32 +137,41 @@ def _session_stopped(df: DataFrame) -> bool:
         return True
 
 
+def _release(df: DataFrame, what) -> None:
+    """Unpersist a materialized frame's blocks and delete its reliable
+    checkpoint files, if it has any. A frame owned by an already-stopped
+    SparkContext is skipped; any other failure is logged and counted."""
+    global _EVICT_FAILURES
+    if _session_stopped(df):
+        return
+    try:
+        rdd = _checkpoint_rdd(df)
+        rdd.unpersist(False)
+        ckpt = rdd.getCheckpointFile()
+        if ckpt.isDefined():
+            sc = df.sparkSession.sparkContext
+            path = sc._jvm.org.apache.hadoop.fs.Path(ckpt.get())
+            path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
+    except Exception:
+        _EVICT_FAILURES += 1
+        log.warning(
+            "memo could not release %r; its storage leaks until context "
+            "cleanup", what, exc_info=True,
+        )
+
+
 def evict_all(sf_dir: str | None = None) -> int:
-    """Unpersist and drop every registered memo entry.
+    """Release and drop every registered memo entry.
 
     Call with an ``sf_dir`` to release one corpus's frames (bench/sweep
     teardown between scale points), or ``None`` to flush everything.
-    Frames owned by an already-stopped SparkContext are dropped without
-    the (impossible) unpersist call; any OTHER unpersist failure is
-    logged and counted (ADVICE r13: a Spark upgrade that breaks the
-    internals path must be visible, not a silent storage leak). Returns
-    the number of entries released. After eviction a popped frame is
-    DEAD — consumers re-enter through their getter, which rebuilds.
+    Returns the number of entries released. A popped frame is dead in
+    either checkpoint mode (its blocks and checkpoint files are gone);
+    consumers re-enter through their getter, which rebuilds.
     """
-    global _EVICT_FAILURES
     released = 0
     for memo in _REGISTRY:
         for key in [k for k in memo if sf_dir is None or k[1] == sf_dir]:
-            df = memo.pop(key)
-            if not _session_stopped(df):
-                try:
-                    _checkpoint_rdd(df).unpersist(False)
-                except Exception:
-                    _EVICT_FAILURES += 1
-                    log.warning(
-                        "memo eviction could not unpersist %r; "
-                        "storage for this frame leaks until context "
-                        "cleanup", key, exc_info=True,
-                    )
+            _release(memo.pop(key), key)
             released += 1
     return released

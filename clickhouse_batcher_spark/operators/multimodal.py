@@ -551,9 +551,7 @@ def _build_codecs():
 # resize+re-decode, spectrum), and the generation kernel (per-doc
 # container encode) was re-run per reference. One checkpointed build
 # per (session, sf_dir); ~10k small payloads, a few MB of blocks.
-_MEDIA_BIN_MEMO: dict[tuple[str, str], DataFrame] = memo.register({})
-
-
+@memo.shared
 def media_binary_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real-bytes media table: (doc_id, media_type, payload) where the
     payload is a genuinely parseable container — a valid RGB8 PNG for
@@ -561,13 +559,6 @@ def media_binary_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     video. Dimensions/content derive deterministically from the
     document (id + text bytes), so decode results are stable and
     assertable without the driver shipping binary fixtures."""
-    return memo.get_or_build(
-        _MEDIA_BIN_MEMO, spark, sf_dir,
-        lambda: _media_binary_build(spark, sf_dir),
-    )
-
-
-def _media_binary_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # Call the factory ON THE DRIVER and close over the returned dict:
     # its values are local defs, so cloudpickle ships them by value —

@@ -40,10 +40,59 @@ _SALT = "t5|"
 # The masked-run frame: three consumers reference it inside the final
 # action (unmasked pieces, masked-run numbering, target assembly) —
 # lazily they race and recompute the token explode + two windows each.
-# Registered memo rather than an in-query .cache() (round-14, ADVICE
-# r13): repeated calls in one session no longer accumulate cached
-# frames, and evict_memos releases it like every other shared frame.
-_T5_RUNS_MEMO: dict[tuple[str, str], DataFrame] = memo.register({})
+# A memo rather than an in-query .cache() (round-14, ADVICE r13):
+# repeated calls in one session no longer accumulate cached frames,
+# memo.evict_all releases it like every other shared frame, and a hit
+# skips building the token/flag/run plan altogether.
+@memo.shared
+def _t5_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id", F.posexplode(tokens("text")).alias("pos", "tok")
+    ).select("doc_id", F.col("pos").cast("bigint").alias("pos"), "tok")
+    hb = (
+        F.conv(
+            F.substring(
+                F.sha2(
+                    F.concat(
+                        F.lit(_SALT),
+                        F.col("doc_id").cast("string"),
+                        F.lit(":"),
+                        F.col("pos").cast("string"),
+                    ),
+                    256,
+                ),
+                1,
+                4,
+            ),
+            16,
+            10,
+        ).cast("bigint")
+        % 100
+    )
+    flags = toks.withColumn("m", F.when(hb < MASK_PCT, 1).otherwise(0))
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    g = flags.withColumn(
+        "chg",
+        F.when(
+            F.lag("m").over(w).isNull() | (F.lag("m").over(w) != F.col("m")), 1
+        ).otherwise(0),
+    ).withColumn(
+        "grp", F.sum("chg").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    )
+    return g.groupBy("doc_id", "grp").agg(
+        F.min("pos").alias("p0"),
+        F.min("m").alias("m"),
+        F.concat_ws(
+            " ",
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("pos", "tok"))),
+                lambda x: x["tok"],
+            ),
+        ).alias("words"),
+        F.count(F.lit(1)).alias("n_toks"),
+    )
+
 
 _HB_SQL = _sql_bucket(
     "CAST(doc_id AS VARCHAR) || ':' || CAST(pos AS VARCHAR)", 100, _SALT
@@ -102,56 +151,7 @@ _HB_SQL = _sql_bucket(
 )
 def t5_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Denoising (input, target) pairs per document — see module doc."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.posexplode(tokens("text")).alias("pos", "tok")
-    ).select("doc_id", F.col("pos").cast("bigint").alias("pos"), "tok")
-    hb = (
-        F.conv(
-            F.substring(
-                F.sha2(
-                    F.concat(
-                        F.lit(_SALT),
-                        F.col("doc_id").cast("string"),
-                        F.lit(":"),
-                        F.col("pos").cast("string"),
-                    ),
-                    256,
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
-    flags = toks.withColumn("m", F.when(hb < MASK_PCT, 1).otherwise(0))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    g = flags.withColumn(
-        "chg",
-        F.when(
-            F.lag("m").over(w).isNull() | (F.lag("m").over(w) != F.col("m")), 1
-        ).otherwise(0),
-    ).withColumn(
-        "grp", F.sum("chg").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    # memoized + eagerly materialized (see _T5_RUNS_MEMO note above)
-    runs = memo.get_or_build(
-        _T5_RUNS_MEMO, spark, sf_dir,
-        lambda: g.groupBy("doc_id", "grp").agg(
-            F.min("pos").alias("p0"),
-            F.min("m").alias("m"),
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "tok"))),
-                    lambda x: x["tok"],
-                ),
-            ).alias("words"),
-            F.count(F.lit(1)).alias("n_toks"),
-        ),
-    )
+    runs = _t5_runs(spark, sf_dir)
     wm = Window.partitionBy("doc_id").orderBy("p0")
     mruns = runs.filter(F.col("m") == 1).withColumn(
         "sid", F.row_number().over(wm) - 1

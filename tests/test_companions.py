@@ -176,15 +176,16 @@ def test_evict_memos_releases_storage(spark):
     backed memo lacked (the bench loop clears the cache after every
     query, which silently turned the memo into a recompute)."""
     from clickhouse_batcher_spark.operators import dedup as D
+    from clickhouse_batcher_spark.operators import memo
 
     app = spark.sparkContext.applicationId
     a, b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
-    D.evict_memos()  # clean slate
+    memo.evict_all()  # clean slate
     fa = D._doc_shingles_cached(spark, a)
     fb = D._doc_shingles_cached(spark, b)
 
     def held(df) -> bool:
-        lvl = D._checkpoint_rdd(df).getStorageLevel()
+        lvl = memo._checkpoint_rdd(df).getStorageLevel()
         return lvl.useMemory() or lvl.useDisk()
 
     # eager localCheckpoint: materialized at creation
@@ -197,14 +198,15 @@ def test_evict_memos_releases_storage(spark):
     assert held(fa) and held(fb)
     assert fa.count() > 0  # still computable after clearCache
 
-    assert D.evict_memos(a) == 1
-    assert (app, a) not in D._SHINGLE_MEMO
-    assert (app, b) in D._SHINGLE_MEMO
+    assert memo.evict_all(a) == 1
+    assert (app, a) not in D._doc_shingles_cached.table
+    assert (app, b) in D._doc_shingles_cached.table
     assert not held(fa)  # released
     assert held(fb)  # untouched
 
-    assert D.evict_memos() >= 1
-    assert not D._SHINGLE_MEMO and not D._MINHASH_PAIRS_MEMO
+    assert memo.evict_all() >= 1
+    assert not D._doc_shingles_cached.table
+    assert not D.minhash_pairs_cached.table
     assert not held(fb)
 
 
@@ -222,7 +224,7 @@ def test_evict_all_covers_every_module(spark):
 
     sf = "/root/testdata/sf0.001"
     memo.evict_all()  # clean slate
-    QUERIES["t5_span_corruption"](spark, sf)  # populates _T5_RUNS_MEMO
+    QUERIES["t5_span_corruption"](spark, sf)  # populates _t5_runs.table
     frames = {
         "dedup": dedup._doc_shingles_cached(spark, sf),
         "graph": graph.coactivity_edges_cached(spark, sf),
@@ -232,7 +234,7 @@ def test_evict_all_covers_every_module(spark):
         "cluster": QUERIES["dedup_clusters"](spark, sf),
         # spancorrupt's memo entry is the intermediate RUNS frame, not
         # the query output — fetch it from the dict
-        "spancorrupt": list(spancorrupt._T5_RUNS_MEMO.values())[0],
+        "spancorrupt": list(spancorrupt._t5_runs.table.values())[0],
     }
 
     def held(df) -> bool:
@@ -245,16 +247,18 @@ def test_evict_all_covers_every_module(spark):
     assert released >= len(frames)
     for name, df in frames.items():
         assert not held(df), f"{name} memo not released by evict_all"
-    for d in (
-        dedup._SHINGLE_MEMO, dedup._MINHASH_PAIRS_MEMO,
-        dedup._JACCARD_PAIRS_MEMO, graph._EDGES_MEMO,
-        graph._DIRECTED_MEMO, classifier._NBQ_MEMO,
-        similarity._TOPK_MEMO, similarity._ANN_MEMO,
-        similarity._SEMDEDUP_MEMO, corpus._DECONTAM_MEMO,
-        corpus._DSIR_W_MEMO, cluster._CC_MEMO,
-        spancorrupt._T5_RUNS_MEMO,
+    for getter in (
+        dedup._doc_shingles_cached, dedup.minhash_pairs_cached,
+        dedup.dedup_ngram_jaccard, graph.coactivity_edges_cached,
+        graph._directed_edges_cached, classifier.nb_scores_cached,
+        similarity.similarity_topk, similarity._vecs_cached,
+        similarity.similarity_ann_ivf, similarity.similarity_ann_lsh,
+        similarity.similarity_ann_pq, similarity.semantic_dedup,
+        corpus.decontaminate_docs, corpus.dsir_importance_weights,
+        cluster.dedup_clusters, spancorrupt._t5_runs,
     ):
-        assert not d
+        assert not getter.table, getter.__name__
+    assert not any(memo._REGISTRY)
 
 
 def test_memo_materialize_prefers_reliable_checkpoint(spark, tmp_path):
@@ -276,7 +280,102 @@ def test_memo_materialize_prefers_reliable_checkpoint(spark, tmp_path):
         assert rdd.isCheckpointed() and not rdd.isLocallyCheckpointed()
         assert reliable.count() == 10
     finally:
-        # unset so the session fixture's later tests keep local behavior
-        scala_none = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(scala_none)
-        assert sc.getCheckpointDir() is None
+        _unset_checkpoint_dir(sc)
+
+
+def _unset_checkpoint_dir(sc) -> None:
+    """Unset so the session fixture's later tests keep local behavior."""
+    scala_none = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(scala_none)
+    assert sc.getCheckpointDir() is None
+
+
+def _held(df) -> bool:
+    from clickhouse_batcher_spark.operators import memo
+
+    lvl = memo._checkpoint_rdd(df).getStorageLevel()
+    return lvl.useMemory() or lvl.useDisk()
+
+
+def test_memo_build_releases_its_intermediates(spark, sf_dir):
+    """Frames memo.materialize cuts while a memo build runs are that
+    build's intermediates: once the entry is materialized they are
+    released, so building nb_scores_cached (which cuts ``lab`` and
+    ``pbk``) leaves exactly ONE new persistent RDD — the entry's. An
+    entry of another memo built inside a build is not an intermediate:
+    similarity_topk's build fills _vecs_cached, and both stay held and
+    readable."""
+    from clickhouse_batcher_spark.operators import classifier, memo, similarity
+
+    jsc = spark.sparkContext._jsc
+    memo.evict_all()
+    before = set(jsc.getPersistentRDDs().keys())
+    scores = classifier.nb_scores_cached(spark, sf_dir)
+    new = set(jsc.getPersistentRDDs().keys()) - before
+    assert new == {memo._checkpoint_rdd(scores).id()}
+    assert _held(scores) and scores.count() > 0
+
+    topk = similarity.similarity_topk(spark, sf_dir)
+    (vecs,) = similarity._vecs_cached.table.values()
+    assert _held(topk) and _held(vecs)
+    assert topk.count() > 0 and vecs.count() > 0
+    assert similarity._vecs_cached(spark, sf_dir) is vecs
+    memo.evict_all()
+
+
+def test_evict_all_deletes_reliable_checkpoint_files(spark, sf_dir, tmp_path):
+    """With a checkpoint dir set, memo entries are reliable checkpoints
+    whose files outlive an unpersist: evict_all must delete them, and a
+    build must delete its intermediates' files when it ends."""
+    from clickhouse_batcher_spark.operators import classifier, graph, memo
+
+    sc = spark.sparkContext
+    ckpt = tmp_path / "ckpt"
+    memo.evict_all()
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        graph.coactivity_edges_cached(spark, sf_dir)
+        classifier.nb_scores_cached(spark, sf_dir)
+        # the two entries' files; nb's lab/pbk files went with its build
+        assert len(list(ckpt.glob("*/rdd-*"))) == 2
+        assert memo.evict_all() == 2
+        assert not list(ckpt.glob("*/rdd-*"))
+    finally:
+        memo.evict_all()
+        _unset_checkpoint_dir(sc)
+
+
+def test_memos_are_declared_only_through_shared():
+    """Hand-written getters must not come back: outside operators/memo.py
+    nothing calls (or imports) memo.get_or_build / memo.register, and
+    every ``@memo.shared`` build is a module-level def."""
+    import ast
+    import pathlib
+
+    import clickhouse_batcher_spark
+
+    root = pathlib.Path(clickhouse_batcher_spark.__file__).parent
+    private = {"get_or_build", "register"}
+    offenders = []
+    for p in sorted(root.rglob("*.py")):
+        if p == root / "operators" / "memo.py":
+            continue
+        tree = ast.parse(p.read_text())
+        for node in ast.walk(tree):
+            where = f"{p.name}:{getattr(node, 'lineno', 0)}"
+            if isinstance(node, ast.ImportFrom) and (node.module or "").endswith("memo"):
+                offenders += [f"{where} imports {a.name}" for a in node.names if a.name in private]
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in private
+                and ast.unparse(node.func.value).split(".")[-1] == "memo"
+            ):
+                offenders.append(f"{where} calls memo.{node.func.attr}")
+            elif (
+                isinstance(node, ast.FunctionDef)
+                and node not in tree.body
+                and any(ast.unparse(d).endswith("shared") for d in node.decorator_list)
+            ):
+                offenders.append(f"{where} nested @memo.shared build {node.name}")
+    assert not offenders, offenders

@@ -67,59 +67,6 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
-def test_no_udf_kernel_captures_module_functions():
-    """Executor Python workers are NOT guaranteed to have the package on
-    sys.path (the driver imports ``__spark_entry__.py`` by file path).
-    A nested mapInPandas/applyInPandas kernel that references a
-    module-level function makes cloudpickle serialize that function BY
-    REFERENCE — the worker then dies with ModuleNotFoundError (round-3
-    verify caught this in media_decode_features). Every kernel must be
-    self-contained: this AST guard scans the whole package."""
-    import ast
-    import pathlib
-
-    pkg = pathlib.Path(__file__).parent.parent / "clickhouse_batcher_spark"
-    offenders = []
-    for path in pkg.rglob("*.py"):
-        tree = ast.parse(path.read_text())
-        toplevel_funcs = {
-            n.name for n in tree.body if isinstance(n, ast.FunctionDef)
-        }
-        pkg_imports = {
-            a.asname or a.name
-            for n in tree.body
-            if isinstance(n, ast.ImportFrom)
-            and n.module
-            and "clickhouse_batcher_spark" in n.module
-            for a in n.names
-        }
-        risky = toplevel_funcs | pkg_imports
-        for outer in ast.walk(tree):
-            if not isinstance(outer, ast.FunctionDef):
-                continue
-            for inner in ast.walk(outer):
-                if not isinstance(inner, ast.FunctionDef) or inner is outer:
-                    continue
-                loads = {
-                    x.id
-                    for x in ast.walk(inner)
-                    if isinstance(x, ast.Name) and isinstance(x.ctx, ast.Load)
-                }
-                # local (nested) defs inside ``outer`` are pickled by
-                # value — only module-scope references are risky
-                local_defs = {
-                    n.name
-                    for n in ast.walk(outer)
-                    if isinstance(n, ast.FunctionDef) and n is not outer
-                }
-                hits = (loads & risky) - local_defs
-                if hits:
-                    offenders.append(
-                        f"{path.name}:{outer.name}/{inner.name} -> {sorted(hits)}"
-                    )
-    assert not offenders, f"kernels capturing module functions: {offenders}"
-
-
 def test_compaction_preserves_data_and_reduces_files(spark, sf_dir, tmp_path):
     """Compacting a many-small-files table must keep every row/value
     and shrink the file count to the bin-packing plan's bin count."""

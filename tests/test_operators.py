@@ -609,8 +609,8 @@ def test_shingle_memo_keyed_on_application_id(spark):
     live_key = (spark.sparkContext.applicationId, "/fake/sf")
     stale_key = ("app-some-other-session", "/fake/sf")
     live_sentinel, stale_sentinel = object(), object()
-    dedup._SHINGLE_MEMO[live_key] = live_sentinel
-    dedup._SHINGLE_MEMO[stale_key] = stale_sentinel
+    dedup._doc_shingles_cached.table[live_key] = live_sentinel
+    dedup._doc_shingles_cached.table[stale_key] = stale_sentinel
     try:
         # the live session gets its own entry...
         assert dedup._doc_shingles_cached(spark, "/fake/sf") is live_sentinel
@@ -628,8 +628,8 @@ def test_shingle_memo_keyed_on_application_id(spark):
             is stale_sentinel
         )
     finally:
-        del dedup._SHINGLE_MEMO[live_key]
-        del dedup._SHINGLE_MEMO[stale_key]
+        del dedup._doc_shingles_cached.table[live_key]
+        del dedup._doc_shingles_cached.table[stale_key]
 
 
 def test_retrieval_parity(spark, sf_dir):

@@ -600,17 +600,112 @@ def test_broadcast_hints_fail_closed_allowlist():
     assert not stale, f"allowlist entries with no surviving site: {stale}"
 
 
+# Every way a Python function reaches an executor worker.
+_KERNEL_METHODS = (
+    "mapInPandas", "applyInPandas", "mapInArrow", "applyInPandasWithState",
+    "udf", "pandas_udf", "mapPartitions",
+)
+
+
+def _kernel_hazards(source: str, fname: str) -> list[str]:
+    """Every kernel passed to one of ``_KERNEL_METHODS`` in ``source``
+    that would pickle a module-level function or a package
+    import BY REFERENCE.
+
+    Executor Python workers are not guaranteed to have this package on
+    sys.path (the driver imports ``__spark_entry__.py`` by file path),
+    so a by-reference pickle dies there with ModuleNotFoundError. A
+    kernel is flagged when it is passed as a module-level name, an
+    attribute or ``partial(module_fn)``, or when it — a local def, a
+    lambda, or the nested defs a factory call returns — loads a
+    module-level function or package import, directly or through the
+    local defs it calls. Driver-side closures that never reach one of
+    those entry points are not kernels and are not checked."""
+    import ast
+
+    tree = ast.parse(source)
+    mod_funcs = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
+    pkg_imports = {
+        a.asname or a.name
+        for n in tree.body
+        if isinstance(n, ast.ImportFrom)
+        and n.module
+        and "clickhouse_batcher_spark" in n.module
+        for a in n.names
+    }
+    risky = mod_funcs | pkg_imports
+    defs: dict[str, list] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef):
+            defs.setdefault(node.name, []).append(node)
+
+    def captured(node, seen: set) -> set:
+        loads = {
+            n.id
+            for n in ast.walk(node)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        }
+        hits = loads & risky
+        for name in sorted(loads - risky - seen):
+            seen.add(name)  # a local def the kernel calls ships with it
+            for d in defs.get(name, []):
+                hits |= captured(d, seen)
+        return hits
+
+    def is_partial(f) -> bool:
+        return getattr(f, "id", getattr(f, "attr", None)) == "partial"
+
+    out = []
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", getattr(node.func, "id", None))
+            in _KERNEL_METHODS
+        ):
+            continue
+        where = f"{fname}:{node.lineno}"
+        # the kernel may arrive positionally or as func=...
+        for k in list(node.args[:1]) + [
+            kw.value for kw in node.keywords if kw.arg == "func"
+        ]:
+            if isinstance(k, ast.Call) and is_partial(k.func) and k.args:
+                k = k.args[0]  # partial(fn, ...) pickles fn
+            if isinstance(k, ast.Attribute):
+                out.append(f"{where} kernel passed as attribute .{k.attr}")
+                continue
+            if isinstance(k, ast.Name) and k.id in risky:
+                out.append(f"{where} kernel {k.id} is module-level")
+                continue
+            if isinstance(k, ast.Name):
+                bodies = defs.get(k.id, [])
+            elif isinstance(k, ast.Lambda):
+                bodies = [k]
+            elif isinstance(k, ast.Call) and isinstance(k.func, ast.Name):
+                # factory call: the nested defs it builds are the kernel
+                bodies = [
+                    inner
+                    for d in defs.get(k.func.id, [])
+                    for inner in ast.walk(d)
+                    if isinstance(inner, ast.FunctionDef) and inner is not d
+                ]
+            else:
+                bodies = []
+            hits = set().union(*(captured(b, set()) for b in bodies))
+            if hits:
+                out.append(f"{where} kernel captures module-level {sorted(hits)}")
+    return out
+
+
 def test_no_module_level_pandas_kernels():
     """Kernels passed to mapInPandas/applyInPandas must be LOCAL defs
-    (built in a closure or a _build_*() factory): a module-level
-    function pickles BY REFERENCE, and this package is not importable
-    on executor Python workers when the driver runs from a cwd other
-    than the repo root. Three operators (ols/pca/lttb) carried that
-    latent ModuleNotFoundError for five rounds because local sweeps
-    always ran from the repo root — this AST lint is the systematic
-    guard. It also rejects kernels that *reference* a module-level
-    function of their own module (the pre-fix lttb shape)."""
-    import ast
+    (built in a closure or a _build_*() factory) that capture no
+    module-level function or package import: those pickle BY
+    REFERENCE, and this package is not importable on executor Python
+    workers when the driver runs from a cwd other than the repo root.
+    Three operators (ols/pca/lttb) carried that latent
+    ModuleNotFoundError for five rounds because local sweeps always ran
+    from the repo root — this AST lint is the systematic guard (see
+    ``_kernel_hazards`` for the shapes it checks)."""
     import pathlib
 
     import clickhouse_batcher_spark
@@ -618,86 +713,101 @@ def test_no_module_level_pandas_kernels():
     root = pathlib.Path(clickhouse_batcher_spark.__file__).parent
     offenders = []
     for p in sorted(root.rglob("*.py")):
-        tree = ast.parse(p.read_text())
-        mod_funcs = {
-            n.name for n in tree.body if isinstance(n, ast.FunctionDef)
-        }
-        defs: dict[str, list] = {}
-        for node in ast.walk(tree):
-            if isinstance(node, ast.FunctionDef):
-                defs.setdefault(node.name, []).append(node)
-        for node in ast.walk(tree):
-            if not (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr
-                in (
-                    "mapInPandas",
-                    "applyInPandas",
-                    "mapInArrow",
-                    "applyInPandasWithState",
-                )
-            ):
-                continue
-            # the kernel may arrive positionally or as func=...
-            kexprs = list(node.args[:1]) + [
-                kw.value for kw in node.keywords if kw.arg == "func"
-            ]
-            for kexpr in kexprs:
-                # mod.fn / pkg.mod.fn as the kernel: by-reference pickle
-                if isinstance(kexpr, ast.Attribute):
-                    offenders.append(
-                        f"{p.name}:{node.lineno} kernel passed as "
-                        f"attribute .{kexpr.attr} (pickles by reference)"
-                    )
-                    continue
-                # functools.partial(module_fn, ...) still pickles the
-                # wrapped module function by reference
-                if (
-                    isinstance(kexpr, ast.Call)
-                    and (
-                        (
-                            isinstance(kexpr.func, ast.Name)
-                            and kexpr.func.id == "partial"
-                        )
-                        or (
-                            isinstance(kexpr.func, ast.Attribute)
-                            and kexpr.func.attr == "partial"
-                        )
-                    )
-                    and kexpr.args
-                    and isinstance(kexpr.args[0], ast.Name)
-                    and kexpr.args[0].id in mod_funcs
-                ):
-                    offenders.append(
-                        f"{p.name}:{node.lineno} kernel "
-                        f"partial({kexpr.args[0].id}, ...) wraps a "
-                        "module-level function (pickles by reference)"
-                    )
-                    continue
-                if not isinstance(kexpr, ast.Name):
-                    continue  # lambda / factory call: by-value
-                kname = kexpr.id
-                if kname in mod_funcs:
-                    offenders.append(
-                        f"{p.name}:{node.lineno} kernel {kname} is "
-                        "module-level (pickles by reference)"
-                    )
-                    continue
-                for d in defs.get(kname, []):
-                    refs = {
-                        n.id
-                        for n in ast.walk(d)
-                        if isinstance(n, ast.Name)
-                        and isinstance(n.ctx, ast.Load)
-                    }
-                    bad = (refs & mod_funcs) - {kname}
-                    if bad:
-                        offenders.append(
-                            f"{p.name}:{node.lineno} kernel {kname} "
-                            f"references module-level {sorted(bad)}"
-                        )
+        offenders += _kernel_hazards(p.read_text(), p.name)
     assert not offenders, offenders
+
+
+_HAZARD_MODULE = """
+from functools import partial
+
+from pyspark.sql import functions as F
+from pyspark.sql.functions import udf
+
+from clickhouse_batcher_spark.functions import tokens
+from clickhouse_batcher_spark.operators import memo
+
+
+def helper(x):
+    return x
+
+
+def module_kernel(it):
+    yield from it
+
+
+def _build_kernel():
+    def kernel(it):
+        for pdf in it:
+            yield helper(pdf)
+
+    return kernel
+
+
+def _build_clean_kernel():
+    def kernel(it):
+        yield from it
+
+    return kernel
+
+
+def query(df):
+    def uses_module_fn(it):
+        for pdf in it:
+            yield helper(pdf)
+
+    def uses_pkg_import(it):
+        for pdf in it:
+            yield tokens(pdf)
+
+    def calls_local(it):
+        for pdf in it:
+            yield via_local(pdf)
+
+    def via_local(pdf):
+        return helper(pdf)
+
+    def merge(a, b):
+        return helper(a)
+
+    def clean(it):
+        for pdf in it:
+            yield pdf
+
+    def build():  # driver-side closure, never pickled
+        return helper(df)
+
+    g = df.groupBy("k")
+    df.mapInPandas(module_kernel, "x long")  # bad
+    df.mapInPandas(memo.module_kernel, "x long")  # bad
+    df.mapInPandas(partial(module_kernel), "x long")  # bad
+    df.mapInPandas(uses_module_fn, "x long")  # bad
+    df.mapInPandas(func=uses_pkg_import, schema="x long")  # bad
+    df.mapInPandas(calls_local, "x long")  # bad
+    df.mapInPandas(_build_kernel(), "x long")  # bad
+    g.cogroup(g).applyInPandas(lambda a, b: merge(a, b), "x long")  # bad
+    g.applyInPandas(lambda pdf: helper(pdf), "x long")  # bad
+    df.rdd.mapPartitions(uses_module_fn)  # bad
+    F.udf(lambda x: helper(x), "long")  # bad
+    udf(merge, "long")  # bad
+    df.mapInPandas(clean, "x long")
+    df.mapInPandas(partial(clean), "x long")
+    df.mapInPandas(_build_clean_kernel(), "x long")
+    g.applyInPandas(lambda pdf: pdf, "x long")
+    return build()
+"""
+
+
+def test_kernel_lint_flags_every_hazard_shape():
+    """The lint must flag each by-reference kernel shape of the
+    synthetic module (one ``# bad`` line per shape) and nothing else —
+    in particular not the driver-side ``build`` closure."""
+    lines = _HAZARD_MODULE.splitlines()
+    bad = {i for i, line in enumerate(lines, 1) if line.endswith("# bad")}
+    hazards = _kernel_hazards(_HAZARD_MODULE, "synthetic.py")
+    flagged = {int(h.split()[0].split(":")[1]) for h in hazards}
+    assert len(bad) == 12
+    assert flagged == bad, hazards
+    assert len(hazards) == len(bad), hazards
 
 
 def test_kcore_broadcast_hint_is_size_gated(spark, sf_dir, monkeypatch):

@@ -157,9 +157,9 @@ def test_pq_deterministic(spark):
     # call the BUILD function directly (the catalog query memoizes its
     # result per session, which would make a second call vacuously
     # equal): two full recomputes must agree exactly
-    from clickhouse_batcher_spark.operators.similarity import (
-        _similarity_ann_pq_build,
-    )
+    from clickhouse_batcher_spark.operators.similarity import similarity_ann_pq
+
+    _similarity_ann_pq_build = similarity_ann_pq.__wrapped__
 
     a = sorted(
         map(tuple, _similarity_ann_pq_build(spark, "/root/testdata/sf0.001").collect())

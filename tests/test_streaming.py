@@ -19,9 +19,9 @@ from clickhouse_batcher_spark.streaming.batcher import BatcherConfig, MicroBatch
 from clickhouse_batcher_spark.streaming.windowed import windowed_counts
 from clickhouse_batcher_spark.tables import load_table
 
-# streaming end-to-end soak — excluded from the driver's default verify run (pytest.ini
-# deselects 'slow'; run with -m slow). VERDICT r13 task 6.
-pytestmark = pytest.mark.slow
+# The streaming end-to-end soaks are marked slow one by one: pytest.ini
+# deselects 'slow' from the default run (run them with -m slow). The
+# fast pins without the marker stay in the default run.
 
 
 @pytest.fixture()
@@ -40,6 +40,7 @@ def _write_source_files(spark, sf_dir, src_dir, n_files):
 
 # Regime matrix after FIXTURES.md §2: size-capped (many small batches),
 # one-big-batch (time-only), and mixed.
+@pytest.mark.slow
 @pytest.mark.parametrize(
     "n_files,max_files", [(8, 1), (8, 100), (6, 2)],
     ids=["size_capped", "single_flush", "mixed"],
@@ -60,6 +61,7 @@ def test_golden_count(spark, sf_dir, tmp_root, n_files, max_files):
         assert len(sink.committed_batches()) >= n_files  # size cap respected
 
 
+@pytest.mark.slow
 def test_restart_recovery_no_duplicates(spark, sf_dir, tmp_root):
     """Kill the stream, restart with the same checkpoint + ledger:
     already-delivered batches must not be re-delivered, new files must
@@ -89,6 +91,7 @@ def test_restart_recovery_no_duplicates(spark, sf_dir, tmp_root):
     assert set(first_batches) <= set(sink.committed_batches())
 
 
+@pytest.mark.slow
 def test_disabled_gate_drops_batches(spark, sf_dir, tmp_root):
     """connect.go:28-36 / hashes.go:12-15: disabled pipeline silently
     drops rows; offsets still advance."""
@@ -100,6 +103,7 @@ def test_disabled_gate_drops_batches(spark, sf_dir, tmp_root):
     assert sink.committed_batches() == []
 
 
+@pytest.mark.slow
 def test_replay_uncommitted_heals_partial_write(spark, sf_dir, tmp_root):
     """Crash between data write and ledger commit -> replay overwrites
     the partial partition instead of duplicating it (the reference's
@@ -118,6 +122,7 @@ def test_replay_uncommitted_heals_partial_write(spark, sf_dir, tmp_root):
     assert sink.count(spark) == 100
 
 
+@pytest.mark.slow
 def test_streaming_windowed_agg_matches_batch(spark, sf_dir, tmp_root):
     """Watermarked tumbling-window agg over the stream == batch agg."""
     src = f"{tmp_root}/src"
@@ -152,6 +157,7 @@ def test_streaming_windowed_agg_matches_batch(spark, sf_dir, tmp_root):
     assert [tuple(r) for r in got] == [tuple(r) for r in expected]
 
 
+@pytest.mark.slow
 def test_rate_source_ingest(spark, tmp_root):
     """Rate source through the batcher: rows land exactly once."""
     sink = IdempotentParquetSink(f"{tmp_root}/sink")
@@ -172,6 +178,7 @@ def test_rate_source_ingest(spark, tmp_root):
     assert df.count() == df.select("value").distinct().count()  # no dups
 
 
+@pytest.mark.slow
 def test_sink_compaction_preserves_rows(spark, sf_dir, tmp_root):
     src = f"{tmp_root}/src"
     schema, total = _write_source_files(spark, sf_dir, src, 6)
@@ -193,6 +200,7 @@ def test_sink_compaction_preserves_rows(spark, sf_dir, tmp_root):
     assert sink.count(spark) == total + 10
 
 
+@pytest.mark.slow
 def test_multisink_dual_write_and_partial_failure_healing(spark, sf_dir, tmp_root):
     """One stream, two sinks, one batch id space; a sink that already
     committed is skipped on replay while the lagging sink catches up."""
@@ -218,6 +226,7 @@ def test_multisink_dual_write_and_partial_failure_healing(spark, sf_dir, tmp_roo
     assert multi.write_batch(events, 1) is False
 
 
+@pytest.mark.slow
 def test_rollup_streaming_equivalence(spark, sf_dir, tmp_root):
     """Continuous-aggregate pattern: per-micro-batch partial rollup
     states (appended via foreachBatch) merge to EXACTLY the batch
@@ -265,6 +274,7 @@ def test_rollup_streaming_equivalence(spark, sf_dir, tmp_root):
     assert streamed == batch
 
 
+@pytest.mark.slow
 def test_streaming_funnel_matches_batch(spark, sf_dir, tmp_root):
     """applyInPandasWithState funnel over time-sliced micro-batches ==
     the batch min-cascade funnel (operators/funnel.py), nulls and
@@ -344,6 +354,7 @@ def test_streaming_funnel_matches_batch(spark, sf_dir, tmp_root):
     assert streamed == batch
 
 
+@pytest.mark.slow
 def test_anomaly_streaming_equivalence(spark, sf_dir, tmp_root):
     """Continuous anomaly detection: per-micro-batch hourly-total
     states merged then finalized == the one-shot batch anomaly report
@@ -394,6 +405,7 @@ def test_anomaly_streaming_equivalence(spark, sf_dir, tmp_root):
     assert streamed == batch
 
 
+@pytest.mark.slow
 def test_streaming_ohlc_matches_batch(spark, sf_dir, tmp_root):
     """Continuous OHLC bars over the stream == the batch chagg query:
     min_by/max_by state merges across micro-batches without drift."""
@@ -436,6 +448,7 @@ def test_streaming_ohlc_matches_batch(spark, sf_dir, tmp_root):
     assert got == batch
 
 
+@pytest.mark.slow
 def test_streaming_hll_registers_match_batch(spark, sf_dir, tmp_root):
     """The streaming HLL register table == the batch sketch: MAX state
     merges across micro-batches without drift, so the streamed
@@ -473,6 +486,7 @@ def test_streaming_hll_registers_match_batch(spark, sf_dir, tmp_root):
     assert streamed == batch
 
 
+@pytest.mark.slow
 def test_streaming_hll_estimate_matches_batch_query(spark, sf_dir, tmp_root):
     """Registers streamed through hll_stream, finished with
     hll_estimate, must equal the batch hll_distinct_users estimates
@@ -512,6 +526,7 @@ def test_streaming_hll_estimate_matches_batch_query(spark, sf_dir, tmp_root):
     assert streamed == batch
 
 
+@pytest.mark.slow
 def test_streaming_dedup_within_watermark_matches_batch(spark, sf_dir, tmp_root):
     """dropDuplicatesWithinWatermark over a duplicated feed == batch
     dropDuplicates, when the watermark delay covers the full replay
@@ -549,6 +564,7 @@ def test_streaming_dedup_within_watermark_matches_batch(spark, sf_dir, tmp_root)
     assert {r.event_id for r in got.collect()} == expected_ids
 
 
+@pytest.mark.slow
 def test_streaming_cms_counters_match_batch(spark, sf_dir, tmp_root):
     """The streaming CMS counter grid == the batch sketch: SUM state
     merges across micro-batches without drift. Also pins the CMS
@@ -607,6 +623,7 @@ def test_streaming_cms_counters_match_batch(spark, sf_dir, tmp_root):
         assert est >= r["exact"]
 
 
+@pytest.mark.slow
 def test_streaming_dedup_state_survives_restart(spark, sf_dir, tmp_root):
     """The dedup state store must recover from the checkpoint: rows
     replayed AFTER a stop/restart cycle are still recognized as
@@ -651,6 +668,7 @@ def test_streaming_dedup_state_survives_restart(spark, sf_dir, tmp_root):
     assert got.distinct().count() == events.count()
 
 
+@pytest.mark.slow
 def test_streaming_neardup_matches_batch(spark, sf_dir, tmp_root):
     """Incremental at-ingestion near-dup gate: streaming a document
     slice against a static band index must produce EXACTLY the band
@@ -696,6 +714,7 @@ def test_streaming_neardup_matches_batch(spark, sf_dir, tmp_root):
     index.unpersist()
 
 
+@pytest.mark.slow
 def test_streaming_selfindex_neardup_equals_batch(spark, sf_dir, tmp_root):
     """The self-building gate (each batch scored against all earlier
     batches + itself, then indexed) must produce EXACTLY the batch
@@ -752,6 +771,7 @@ def test_streaming_selfindex_neardup_equals_batch(spark, sf_dir, tmp_root):
     assert n_sigs == bands.count()
 
 
+@pytest.mark.slow
 def test_selfindex_batch_replay_is_idempotent(spark, sf_dir, tmp_root):
     """A replayed foreachBatch call (same batch id, index already
     holding this batch's half-committed signatures) must produce
@@ -842,6 +862,7 @@ def test_streaming_quality_gate_matches_batch(spark, sf_dir, tmp_root):
     llr.unpersist(), pri.unpersist()
 
 
+@pytest.mark.slow
 def test_streaming_ingest_pipeline_quality_then_dedup(
     spark, sf_dir, tmp_root
 ):
@@ -973,6 +994,7 @@ def test_band_signatures_inline_bit_identical(spark, sf_dir):
     assert "Exchange" not in plan
 
 
+@pytest.mark.slow
 def test_streaming_drift_monitor_matches_batch_psi(spark, sf_dir, tmp_root):
     """The per-micro-batch PSI rows from the streaming monitor must be
     BIT-IDENTICAL to recomputing each file-batch's PSI in a plain
@@ -1037,6 +1059,7 @@ def test_streaming_drift_monitor_matches_batch_psi(spark, sf_dir, tmp_root):
         assert alert == (psi > PSI_ALERT)
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("files_per_trigger", [1, 3])
 def test_quantile_streaming_equivalence(
     spark, sf_dir, tmp_root, files_per_trigger

@@ -129,12 +129,12 @@ def main() -> None:
         finally:
             spark.catalog.clearCache()
 
-    from clickhouse_batcher_spark.operators.dedup import evict_memos
+    from clickhouse_batcher_spark.operators.memo import evict_all
 
     results: dict[str, dict] = {n: {} for n in names}
     for sf_dir, mult in POINTS:
         spark.catalog.clearCache()
-        evict_memos()  # drop the previous scale point's memoized frames
+        evict_all()  # drop the previous scale point's memoized frames
         for n in names:
             t0 = time.perf_counter()
             try:
