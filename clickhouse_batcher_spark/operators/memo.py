@@ -45,8 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 log = logging.getLogger(__name__)
 
-# Every memo dict created through register(); module-level so the
-# registry survives as long as the process, like the dicts themselves.
+# Every memo dict created by shared(); module-level so the registry
+# survives as long as the process, like the dicts themselves.
 _REGISTRY: list[dict] = []
 
 # Unexpected release failures (a broken internals path must be
@@ -59,15 +59,10 @@ _EVICT_FAILURES = 0
 _BUILDS = threading.local()
 
 
-def register(memo: dict) -> dict:
-    """Add a memo dict to the registry :func:`evict_all` walks."""
-    _REGISTRY.append(memo)
-    return memo
-
-
 def shared(build):
     """Declare a memo over a module-level ``build(spark, sf_dir)``."""
-    table = register({})
+    table = {}
+    _REGISTRY.append(table)
 
     @functools.wraps(build)
     def getter(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -165,6 +165,13 @@ def test_media_companion_detects_resize_dim_drift(
     assert row.resize_violations == row.n_image > 0
 
 
+def _held(df) -> bool:
+    from clickhouse_batcher_spark.operators import memo
+
+    lvl = memo._checkpoint_rdd(df).getStorageLevel()
+    return lvl.useMemory() or lvl.useDisk()
+
+
 def test_evict_memos_releases_storage(spark):
     """The dedup memos must be releasable per-corpus: materializing
     frames for two sf_dirs then evicting one drops exactly that
@@ -184,30 +191,26 @@ def test_evict_memos_releases_storage(spark):
     fa = D._doc_shingles_cached(spark, a)
     fb = D._doc_shingles_cached(spark, b)
 
-    def held(df) -> bool:
-        lvl = memo._checkpoint_rdd(df).getStorageLevel()
-        return lvl.useMemory() or lvl.useDisk()
-
     # eager localCheckpoint: materialized at creation
-    assert held(fa) and held(fb)
+    assert _held(fa) and _held(fb)
 
     # the whole point of the checkpoint-backed memo: an external
     # clearCache (the bench does this after every query) must NOT
     # release the memoized frames
     spark.catalog.clearCache()
-    assert held(fa) and held(fb)
+    assert _held(fa) and _held(fb)
     assert fa.count() > 0  # still computable after clearCache
 
     assert memo.evict_all(a) == 1
     assert (app, a) not in D._doc_shingles_cached.table
     assert (app, b) in D._doc_shingles_cached.table
-    assert not held(fa)  # released
-    assert held(fb)  # untouched
+    assert not _held(fa)  # released
+    assert _held(fb)  # untouched
 
     assert memo.evict_all() >= 1
     assert not D._doc_shingles_cached.table
     assert not D.minhash_pairs_cached.table
-    assert not held(fb)
+    assert not _held(fb)
 
 
 def test_evict_all_covers_every_module(spark):
@@ -237,16 +240,13 @@ def test_evict_all_covers_every_module(spark):
         "spancorrupt": list(spancorrupt._t5_runs.table.values())[0],
     }
 
-    def held(df) -> bool:
-        lvl = memo._checkpoint_rdd(df).getStorageLevel()
-        return lvl.useMemory() or lvl.useDisk()
     for name, df in frames.items():
-        assert held(df), f"{name} memo not materialized"
+        assert _held(df), f"{name} memo not materialized"
 
     released = memo.evict_all()
     assert released >= len(frames)
     for name, df in frames.items():
-        assert not held(df), f"{name} memo not released by evict_all"
+        assert not _held(df), f"{name} memo not released by evict_all"
     for getter in (
         dedup._doc_shingles_cached, dedup.minhash_pairs_cached,
         dedup.dedup_ngram_jaccard, graph.coactivity_edges_cached,
@@ -288,13 +288,6 @@ def _unset_checkpoint_dir(sc) -> None:
     scala_none = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")
     getattr(sc._jsc.sc(), "checkpointDir_$eq")(scala_none)
     assert sc.getCheckpointDir() is None
-
-
-def _held(df) -> bool:
-    from clickhouse_batcher_spark.operators import memo
-
-    lvl = memo._checkpoint_rdd(df).getStorageLevel()
-    return lvl.useMemory() or lvl.useDisk()
 
 
 def test_memo_build_releases_its_intermediates(spark, sf_dir):
@@ -347,7 +340,7 @@ def test_evict_all_deletes_reliable_checkpoint_files(spark, sf_dir, tmp_path):
 
 def test_memos_are_declared_only_through_shared():
     """Hand-written getters must not come back: outside operators/memo.py
-    nothing calls (or imports) memo.get_or_build / memo.register, and
+    nothing calls (or imports) memo.get_or_build, and
     every ``@memo.shared`` build is a module-level def."""
     import ast
     import pathlib
@@ -355,7 +348,7 @@ def test_memos_are_declared_only_through_shared():
     import clickhouse_batcher_spark
 
     root = pathlib.Path(clickhouse_batcher_spark.__file__).parent
-    private = {"get_or_build", "register"}
+    private = {"get_or_build"}
     offenders = []
     for p in sorted(root.rglob("*.py")):
         if p == root / "operators" / "memo.py":

