@@ -263,6 +263,15 @@ def _force(df) -> None:
 N_TIMING_PASSES = 2  # per-query best-of-N; pass 2 runs in reverse order
 
 
+def _report_failure(name: str, exc: Exception) -> str:
+    """One line, ``name: ExcType: first message line``, printed to
+    stderr as the failure happens and returned for the JSON."""
+    first = next(iter(str(exc).strip().splitlines()), "")
+    line = f"{name}: {type(exc).__name__}: {first}"
+    print(line, file=sys.stderr, flush=True)
+    return line
+
+
 def settle_for_ingest(
     threshold: float = 4.0, max_waits: int = 3, wait_s: float = 60.0
 ) -> tuple[float, list[float]]:
@@ -462,16 +471,10 @@ def main() -> None:
                 timings[name] = min(timings.get(name, elapsed), elapsed)
             except Exception as exc:  # record, keep benching
                 failed.add(name)
-                import traceback as _tb
-
-                failures.append(
-                    f"{name}: {exc}\n{''.join(_tb.format_exc(limit=8))}"
-                )
+                failures.append(_report_failure(name, exc))
             finally:
                 spark.catalog.clearCache()
                 evict_all()
-    if failures:
-        print("\n".join(failures), file=sys.stderr)
 
     # Amortized pass (separately reported): ONE run of the suite in
     # order with the memos LEFT WARM across queries, so shared subtrees
@@ -494,7 +497,7 @@ def main() -> None:
             _force(fn(spark, SF_DIR))
             amortized[name] = round(time.perf_counter() - t0, 3)
         except Exception as exc:
-            failures.append(f"amortized {name}: {exc}")
+            failures.append(_report_failure(f"amortized {name}", exc))
         finally:
             spark.catalog.clearCache()  # memos deliberately kept
     evict_all()  # release before the ingest benchmarks

@@ -88,12 +88,13 @@ def main(argv: list[str] | None = None) -> int:
         import tempfile
 
         from clickhouse_batcher_spark.sinks.parquet_sink import IdempotentParquetSink
+        from clickhouse_batcher_spark.sources.readers import read_parquet
         from clickhouse_batcher_spark.streaming.batcher import (
             BatcherConfig,
             MicroBatcher,
         )
 
-        schema = spark.read.parquet(args.src).schema
+        schema = read_parquet(spark, args.src).schema
         sink = IdempotentParquetSink(args.sink)
         batcher = MicroBatcher(
             sink,

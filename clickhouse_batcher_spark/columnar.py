@@ -10,7 +10,10 @@ out column by column as a ``pyarrow.Table``.
 Spark plans the resulting frame as a ``LocalTableScan``, so writing it
 runs in the JVM alone. A frame built from a Python list is instead a
 pickled Python RDD (``Scan ExistingRDD``), and every task of its write
-starts a Python worker.
+starts a Python worker. The frame is coalesced (no shuffle) to one
+partition per 128 MB of Arrow data (``layout.partitions_for``), so a
+flushed batch lands as one file, where the scan alone would write one
+file per core.
 
 The verifier is not optional: bare pyarrow silently truncates ``1.5``
 to ``1`` in an int64 column, a value the list path rejects.
@@ -32,6 +35,8 @@ from pyspark.sql.types import (
     _create_converter,
     _make_type_verifier,
 )
+
+from clickhouse_batcher_spark.sources.layout import partitions_for
 
 # Wide enough to rescale any DECIMAL(38, s) value without the default
 # 28-digit context rounding it first.
@@ -96,4 +101,4 @@ class ColumnarBatchBuilder:
             for col, fix, field in zip(columns, self._fixes, self._arrow_schema)
         ]
         table = pa.Table.from_arrays(arrays, schema=self._arrow_schema)
-        return spark.createDataFrame(table, self.struct)
+        return spark.createDataFrame(table, self.struct).coalesce(partitions_for(table.nbytes))

@@ -25,8 +25,10 @@ A flush builds its batch columnar, the analogue of the reference's
 ``PrepareBatch``/``Append``: rows are type-checked as
 ``createDataFrame`` checks them, then laid out as one Arrow table
 (``columnar.py``), so the sink write runs in the JVM and starts no
-Python worker. ``close()`` stops the ticker, waits for a tick flush
-that is already running, then flushes the tail.
+Python worker, and a batch under 128 MB lands as one file. The Q1/Q2/Q3
+read-back infers the sink's schema once (``sources.readers``), so a
+repeated count starts no inference job. ``close()`` stops the ticker,
+waits for a tick flush that is already running, then flushes the tail.
 """
 
 from __future__ import annotations

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from clickhouse_batcher_spark.catalog import query
 from clickhouse_batcher_spark.operators import memo
+from clickhouse_batcher_spark.sources.layout import partitions_for
 from clickhouse_batcher_spark.tables import load_table
 
 COACT_MIN_HOURS = 12  # co-active hours needed for an edge
@@ -118,8 +119,8 @@ def coactivity_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return coactivity_edges(load_table(spark, sf_dir, "events"))
 
 
-# Target bytes per partition for the ITERATE frames (guide §2: size
-# partitions to data volume, not core count). The directed edge frame
+# The ITERATE frames are sized to data volume, not core count
+# (``layout.partitions_for``, guide §2). The directed edge frame
 # is scanned by every iteration of PageRank / k-core / label
 # propagation; AQE cannot coalesce a checkpointed RDD scan, so the
 # frame is coalesced explicitly at build time from its own row count.
@@ -127,7 +128,6 @@ def coactivity_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scaling run showed pagerank 3x FASTER at local[8] than local[32]
 # because 32 near-empty iterate tasks + their barriers dominated; at
 # web scale (1e11 edges) the same rule yields ~40k partitions.
-_ITERATE_PARTITION_BYTES = 128 * 1024 * 1024
 _EDGE_ROW_BYTES = 48  # two bigints + row overhead, conservative
 
 
@@ -143,13 +143,12 @@ _EDGE_ROW_BYTES = 48  # two bigints + row overhead, conservative
 def _directed_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = coactivity_edges_cached(spark, sf_dir)
     n = e.count()  # block-count over the materialized edge memo
-    parts = max(1, (2 * n * _EDGE_ROW_BYTES) // _ITERATE_PARTITION_BYTES)
     return (
         e.select(F.col("ua").alias("src"), F.col("ub").alias("dst"))
         .unionByName(
             e.select(F.col("ub").alias("src"), F.col("ua").alias("dst"))
         )
-        .coalesce(int(parts))
+        .coalesce(partitions_for(2 * n * _EDGE_ROW_BYTES))
     )
 
 

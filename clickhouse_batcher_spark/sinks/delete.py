@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_batcher_spark.sources.readers import read_parquet
+
 
 def delete_where(df: DataFrame, predicate: Column | str) -> DataFrame:
     """Return ``df`` minus rows matching ``predicate``.
@@ -75,4 +77,4 @@ def delete_where_at(spark, predicate: Column | str, path: str) -> None:
     """
     base = path.rstrip("/")
     _recover_interrupted_swap(base, base + ".old")
-    delete_where_in_place(spark.read.parquet(base), predicate, path)
+    delete_where_in_place(read_parquet(spark, base), predicate, path)

@@ -18,7 +18,16 @@ Scale: the data dir is a normal partitioned parquet dataset — at
 100 TB this is exactly how a streaming ingest lands on a data lake
 (partition per micro-batch, compaction downstream). The ledger is one
 tiny marker file per batch; readers never touch it. Writing uses the
-executors (distributed); only the marker touch is driver-side.
+executors (distributed); only the marker touch is driver-side. A
+default engine flush lands as one file in its batch directory
+(``columnar.py`` sizes the write).
+
+Read-back (Q1/Q2/Q3 and ``compact``) goes through
+``sources.readers.read_parquet``: the schema is inferred once, from the
+first committed batch directory, and a committed directory is never
+rewritten, so later reads start no inference job. ``compact`` and a
+sink root deleted and recreated change that first directory, and so
+the key.
 """
 
 from __future__ import annotations
@@ -29,6 +38,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_batcher_spark.sinks.base import BatchSink
+from clickhouse_batcher_spark.sources.readers import read_parquet
 
 
 class IdempotentParquetSink(BatchSink):
@@ -74,16 +84,20 @@ class IdempotentParquetSink(BatchSink):
         return True
 
     # -- read-back ------------------------------------------------------
+    def _read_batches(self, spark: SparkSession, batch_ids: list[int]) -> DataFrame:
+        df = read_parquet(
+            spark,
+            *[f"{self.data_dir}/_batch_id={b}" for b in batch_ids],
+            base_path=self.data_dir,
+        )
+        return df.drop("_batch_id") if "_batch_id" in df.columns else df
+
     def read(self, spark: SparkSession) -> DataFrame:
         """Read back every committed batch (uncommitted dirs excluded)."""
         committed = self.committed_batches()
         if not committed:
             raise FileNotFoundError(f"no committed batches under {self.root}")
-        df = (
-            spark.read.option("basePath", self.data_dir)
-            .parquet(*[f"{self.data_dir}/_batch_id={b}" for b in committed])
-        )
-        return df.drop("_batch_id") if "_batch_id" in df.columns else df
+        return self._read_batches(spark, committed)
 
     def count(self, spark: SparkSession) -> int:
         return self.read(spark).agg(F.count(F.lit(1))).collect()[0][0]
@@ -118,11 +132,7 @@ class IdempotentParquetSink(BatchSink):
         if not old_ids:
             return 0
         new_id = min(0, min(old_ids)) - 1
-        df = spark.read.option("basePath", self.data_dir).parquet(
-            *[f"{self.data_dir}/_batch_id={b}" for b in old_ids]
-        )
-        if "_batch_id" in df.columns:
-            df = df.drop("_batch_id")
+        df = self._read_batches(spark, old_ids)
         df.coalesce(target_files).write.mode("overwrite").parquet(
             f"{self.data_dir}/_batch_id={new_id}"
         )

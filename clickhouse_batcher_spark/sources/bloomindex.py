@@ -20,7 +20,7 @@ Design for 100 TB:
   whose words have ALL probe bits set. No false negatives ever
   (bloom property); false positives only cost an extra file scan.
 - **Reading prunes before Spark ever lists row groups**: the kept
-  file list feeds ``spark.read.parquet(*files)`` directly.
+  file list feeds ``read_parquet(spark, *files)`` directly.
 """
 
 from __future__ import annotations
@@ -29,6 +29,8 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from clickhouse_batcher_spark.sources.readers import read_parquet
 
 BLOOM_BITS = 1024
 BLOOM_WORDS = BLOOM_BITS // 64
@@ -49,7 +51,7 @@ def build_bloom_index(
     """(file, word_idx, word) bloom sidecar for ``col`` over every
     parquet file under ``data_path``."""
     rows = (
-        spark.read.parquet(data_path)
+        read_parquet(spark, data_path)
         .select(F.col(col).cast("string").alias("v"))
         .withColumn("file", F.input_file_name())
     )
@@ -119,8 +121,8 @@ def read_with_bloom_prune(
     kept = prune_files(index.collect(), value)
     if not kept:
         return (
-            spark.read.parquet(data_path)
+            read_parquet(spark, data_path)
             .filter(F.lit(False))
             .filter(F.col(col) == value)
         )
-    return spark.read.parquet(*kept).filter(F.col(col) == value)
+    return read_parquet(spark, *kept).filter(F.col(col) == value)

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_batcher_spark.sources.readers import read_parquet
+
 
 def write_partitioned_by_month(
     df: DataFrame, ts_col: str, path: str, *, mode: str = "overwrite"
@@ -35,7 +37,7 @@ def write_partitioned_by_month(
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.option("basePath", path).parquet(path)
+    return read_parquet(spark, path, base_path=path)
 
 
 def write_bucketed_table(
@@ -79,6 +81,12 @@ def write_bucketed_table(
 # ---------------------------------------------------------------------------
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+
+def partitions_for(nbytes: int) -> int:
+    """The package's partition-size rule: one partition (so one output
+    file) per ``DEFAULT_TARGET_FILE_BYTES`` of data, and at least one."""
+    return max(1, int(nbytes) // DEFAULT_TARGET_FILE_BYTES)
 
 
 def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
@@ -156,12 +164,12 @@ def compact_parquet(
         return 0
     bins = plan_compaction(files, target_bytes)
     if not size_fidelity:
-        df = spark.read.parquet(src_path)
+        df = read_parquet(spark, src_path)
         df.coalesce(max(1, len(bins))).write.mode("overwrite").parquet(dst_path)
         return max(1, len(bins))
     for i, members in enumerate(bins):
         (
-            spark.read.parquet(*members)
+            read_parquet(spark, *members)
             .coalesce(1)
             .write.mode("overwrite" if i == 0 else "append")
             .parquet(dst_path)

@@ -1,17 +1,23 @@
 """Table loading and registration for the driver testdata layout.
 
 One parquet file per table under ``<sf_dir>/<name>.parquet``
-(``TESTDATA.md``). Loading is lazy and declarative: a plain
-``spark.read.parquet`` scan so Catalyst keeps predicate pushdown,
-column pruning and partition pruning. At 100 TB each table would be a
-partitioned/bucketed directory tree instead of a single file — the
-reader is agnostic to that (the path just becomes a directory).
+(``TESTDATA.md``). Loading is lazy and declarative: a plain parquet
+scan (``sources.readers.read_parquet``) so Catalyst keeps predicate
+pushdown, column pruning and partition pruning. A table's schema is
+inferred once per file (path, modification time and length); every
+later load passes it to the scan and starts no Spark job. Each load is
+still a new relation, so two loads of one table self-join cleanly. At
+100 TB each table would be a partitioned/bucketed directory tree
+instead of a single file — the reader is agnostic to that (the path
+just becomes a directory).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from clickhouse_batcher_spark.sources.readers import read_parquet
 
 TABLE_NAMES = (
     "region",
@@ -72,14 +78,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # LONG — without this the _normalize_ts LongType branch is
         # unreachable and a generator flip back to the round-1/2 NANOS
         # encoding would fail at scan time. A harmless no-op for the
-        # micros encodings; idempotent per session.
+        # micros encodings; idempotent per session. Set before every
+        # read: a remembered LongType schema still needs it at scan time.
         try:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-        df = spark.read.parquet(table_path(sf_dir, name))
-        return _normalize_ts(df)
-    return spark.read.parquet(table_path(sf_dir, name))
+        return _normalize_ts(read_parquet(spark, table_path(sf_dir, name)))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -49,3 +49,11 @@ def test_settle_is_bounded_on_a_stuck_box(monkeypatch):
     # never spins forever: max_waits sleeps then gives up (the floor
     # guard downstream still decides pass/fail)
     assert len(hist) == 4  # initial reading + 3 bounded re-checks
+
+
+def test_failure_is_one_line_on_stderr_at_once(capsys):
+    bench = _load_bench()
+    exc = ValueError("bad decile\n  at frame 1\n  at frame 2")
+    line = bench._report_failure("amortized q", exc)
+    assert line == "amortized q: ValueError: bad decile"
+    assert capsys.readouterr().err == line + "\n"

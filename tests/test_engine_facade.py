@@ -436,6 +436,10 @@ def test_flush_batch_matches_create_dataframe(spark, tmp_path, schema, rows):
     assert "ExistingRDD" not in sink.plans[0]
     assert "LocalTableScan" in sink.plans[0]
     assert "ExistingRDD" in want._jdf.queryExecution().executedPlan().toString()
+    # It is coalesced to one partition without a shuffle, so the batch
+    # lands as one file.
+    assert "Coalesce 1" in sink.plans[0]
+    assert "Exchange" not in sink.plans[0]
 
 
 def test_flush_batch_stores_string_form_of_non_strings(spark, tmp_path):
