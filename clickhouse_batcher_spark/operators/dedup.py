@@ -114,13 +114,52 @@ def tokenized_corpus(docs: DataFrame, spread: bool = True) -> DataFrame:
     return toks.unionByName(twins)
 
 
-def _mk_shingles(k: int = SHINGLE_K):
+# --- the MinHash signature, as Spark SQL text ------------------------------
+# The shingle array and the signature are one SQL expression string
+# each: Catalyst parses it in one call, where the equivalent Column DSL
+# (a Python lambda per transform) costs a py4j round trip per node —
+# ~100 columns and 250-470 ms of driver time per signature plan, paid
+# by every gate micro-batch.
+def _shingles_sql(k: int = SHINGLE_K) -> str:
     """In-row k-shingle array over a ``tokens`` column."""
-    return F.transform(
-        F.sequence(F.lit(1), F.size("tokens") - (k - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at("tokens", (i + j).cast("int")) for j in range(k)]
-        ),
+    parts = ", ".join(f"element_at(tokens, i + {j})" for j in range(k))
+    return f"transform(sequence(1, size(tokens) - {k - 1}), i -> concat_ws(' ', {parts}))"
+
+
+def _perm_hash_sql(i: int, x: str) -> str:
+    """Permutation-i hash of the string expression ``x``: the 16-char
+    SHA-256 prefix of the salted value (the oracle's ``mh`` CTE)."""
+    return f"substring(sha2(concat('{i:02d}|', {x}), 256), 1, 16)"
+
+
+# The signature of a distinct-shingle array column ``sh``: the
+# MINHASH_PERMS per-permutation minima, concatenated in permutation order.
+MINHASH_SIGNATURE_SQL = "concat({})".format(
+    ", ".join(
+        f"array_min(transform(sh, s -> {_perm_hash_sql(i, 's')}))"
+        for i in range(MINHASH_PERMS)
+    )
+)
+
+
+def doc_shingle_arrays(corpus: DataFrame) -> DataFrame:
+    """(doc_id, sh): each doc's DISTINCT k-shingles, in-row — no
+    shuffle. Docs shorter than one shingle are dropped."""
+    return corpus.filter(F.size("tokens") >= SHINGLE_K).selectExpr(
+        "doc_id", f"array_distinct({_shingles_sql()}) AS sh"
+    )
+
+
+def signature_bands(docsh: DataFrame) -> DataFrame:
+    """(doc_id, sh) -> (doc_id, band_id, band_sig): the in-row MinHash
+    signature (``array_min`` over each permutation's hashes — nothing
+    leaves the row) cut into MINHASH_BANDS bands. Duplicate shingles
+    cannot move a MIN, so hashing the distinct array gives the
+    vocabulary path's signatures bit for bit. Expensive per row (16
+    interpreted sha2 folds): a consumer that reads the result twice —
+    a band self-join — should cut it with ``memo.materialize`` first."""
+    return _explode_bands(
+        docsh.selectExpr("doc_id", f"{MINHASH_SIGNATURE_SQL} AS signature")
     )
 
 
@@ -138,7 +177,7 @@ def shingle_set(corpus: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     the explode + distinct shape."""
     return (
         corpus.filter(F.size("tokens") >= k)
-        .select("doc_id", F.explode(_mk_shingles(k)).alias("shingle"))
+        .select("doc_id", F.explode(F.expr(_shingles_sql(k))).alias("shingle"))
         .distinct()
     )
 
@@ -181,10 +220,7 @@ def _doc_shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh: array<string>) — each doc's DISTINCT k-shingles,
     memoized per (session, sf_dir). See the note above."""
     docs = load_table(spark, sf_dir, "documents")
-    corpus = tokenized_corpus(docs)
-    return corpus.filter(F.size("tokens") >= SHINGLE_K).select(
-        "doc_id", F.array_distinct(_mk_shingles()).alias("sh")
-    )
+    return doc_shingle_arrays(tokenized_corpus(docs))
 
 
 def _shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -315,22 +351,12 @@ def _minhash_salts_sql() -> str:
 _BAND_HEX = MINHASH_PERMS // MINHASH_BANDS * 16  # hex chars per band (16-char hash prefixes)
 
 
-def _perm_hash(i: int):
-    """Permutation-i shingle hash (shared by the batch array path and
-    the streaming inline path — same salts, same truncation). Single-
-    parameter closure: a 2-param lambda would make F.transform bind
-    the array INDEX as the second argument."""
-    salt = f"{i:02d}|"
-    return lambda s: F.substring(
-        F.sha2(F.concat(F.lit(salt), s), 256), 1, 16
-    )
-
-
 def band_signatures(shingles: DataFrame) -> DataFrame:
     """(doc_id, band_id, band_sig) LSH band signatures from a
-    (doc_id, shingle) relation — the index key of the banded MinHash
-    scheme, shared by the batch detector below and the streaming
-    incremental detector (streaming/neardup.py).
+    (doc_id, shingle) relation — the vocabulary form of
+    :func:`signature_bands` (same permutation hash, same rows), used by
+    the static-index streaming detector (streaming/neardup.py) and as
+    the reference the in-row form is pinned against.
 
     Hash each DISTINCT shingle once (the shingle vocabulary is orders
     of magnitude smaller than (doc, shingle) occurrences), computing
@@ -345,9 +371,7 @@ def band_signatures(shingles: DataFrame) -> DataFrame:
     shingle_hashes = shingles.select("shingle").distinct().select(
         "shingle",
         *[
-            F.substring(F.sha2(F.concat(F.lit(f"{i:02d}|"), F.col("shingle")), 256), 1, 16).alias(
-                f"h{i}"
-            )
+            F.expr(_perm_hash_sql(i, "shingle")).alias(f"h{i}")
             for i in range(MINHASH_PERMS)
         ],
     )
@@ -393,44 +417,10 @@ def band_signatures_inline(docs: DataFrame) -> DataFrame:
     vocab distinct + broadcast build + per-doc MIN aggregation cost
     the at-ingestion gate ~2.5 s of fixed latency per micro-batch —
     67% of its wall time, measured round 8). Here each row keeps its
-    shingle ARRAY and takes ``array_min`` over the 16 per-permutation
-    hash transforms — narrow projections end to end, nothing leaves
-    the row. Duplicate shingles within a doc do not move a MIN, so
-    skipping the batch path's ``distinct()`` preserves signatures
-    exactly (the equivalence test pins this).
+    distinct-shingle array and :func:`signature_bands` folds it in-row
+    (the equivalence test pins the bit-identity).
     """
-    corpus = tokenized_corpus(docs, spread=False)
-    k = SHINGLE_K
-    mk = F.transform(
-        F.sequence(F.lit(1), F.size("tokens") - (k - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at("tokens", (i + j).cast("int")) for j in range(k)]
-        ),
-    )
-    # in-row dedup before hashing: repeated shingles cannot move a
-    # MIN, and each duplicate dropped saves 16 sha2 calls — on the
-    # small-vocabulary test corpus this trims the hash count ~2x for
-    # an O(n) array pass
-    sh = corpus.filter(F.size("tokens") >= k).select(
-        "doc_id", F.array_distinct(mk).alias("shingles")
-    )
-    mins = sh.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform("shingles", _perm_hash(i))).alias(
-                f"mh{i}"
-            )
-            for i in range(MINHASH_PERMS)
-        ],
-    )
-    sig = mins.select(
-        "doc_id",
-        F.concat(*[F.col(f"mh{i}") for i in range(MINHASH_PERMS)]).alias(
-            "signature"
-        ),
-    )
-    return _explode_bands(sig)
-
+    return signature_bands(doc_shingle_arrays(tokenized_corpus(docs, spread=False)))
 
 
 @query(
@@ -484,27 +474,15 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # expensive subtree across four catalog queries (VERDICT r6 task 4).
 @memo.shared
 def minhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round-14 restructure (guide §2.4): signatures come straight off
-    # the per-doc shingle ARRAYS — 16 in-row array_min folds over the
-    # memoized arrays (the streaming gate's proven-bit-identical
-    # band_signatures_inline shape) instead of the batch vocab path's
+    # Signatures come straight off the memoized per-doc shingle ARRAYS
+    # (the gate's signature_bands) instead of the batch vocab path's
     # distinct + hash join + 16-way MIN aggregate (three exchanges).
-    # Every reference below is a block scan of the array memo.
+    # They are cut before the band self-join: unmaterialized, the 16
+    # sha2 folds ran once per join side (no exchange reuse across a
+    # self-join) — 4.6-5.0 s per build against 2.8-3.3 s cut, sf0.1.
+    # The cut is a build intermediate, released when the entry lands.
     docsh = _doc_shingles_cached(spark, sf_dir)
-    mins = docsh.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform("sh", _perm_hash(i))).alias(f"mh{i}")
-            for i in range(MINHASH_PERMS)
-        ],
-    )
-    sig = mins.select(
-        "doc_id",
-        F.concat(*[F.col(f"mh{i}") for i in range(MINHASH_PERMS)]).alias(
-            "signature"
-        ),
-    )
-    bands = _explode_bands(sig)
+    bands = memo.materialize(signature_bands(docsh))
     b1 = bands.alias("b1")
     b2 = bands.alias("b2")
     cand = (

@@ -465,10 +465,9 @@ def part_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (collect_set bounded by lineitems-per-order, <= 7 in TPC-H), the
     # i<j pairs come from the sorted basket array in-row (tiny arrays —
     # unlike the coactivity 256-wide case this beats the self-join's
-    # two shuffles), and the order count rides the same aggregate as a
-    # 1-row broadcast instead of the former driver-side .count() action
-    # that executed — and threw away — the whole distinct subtree
-    # before the real query even started.
+    # two shuffles), and the order count is a scalar subquery over the
+    # same baskets — no join, no hint (a 1-row crossJoin planned as a
+    # BroadcastNestedLoopJoin) and no driver-side .count() action.
     items = (
         load_table(spark, sf_dir, "lineitem")
         .select(
@@ -480,9 +479,7 @@ def part_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = items.groupBy("okey").agg(
         F.sort_array(F.collect_list("part")).alias("parts")
     )
-    n_orders = baskets.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders")
-    )
+    n_orders = baskets.agg(F.count(F.lit(1)).cast("bigint")).scalar()
     marg = items.groupBy("part").agg(F.count(F.lit(1)).alias("cnt"))
     pairs = (
         baskets.select(
@@ -504,7 +501,6 @@ def part_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         pairs.join(ma, F.col("part_a") == F.col("pa"))
         .join(mb, F.col("part_b") == F.col("pb"))
-        .crossJoin(F.broadcast(n_orders))
         .select(
             "part_a",
             "part_b",
@@ -513,7 +509,7 @@ def part_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cnt_b").cast("bigint").alias("cnt_b"),
             F.round(
                 F.col("together").cast("double")
-                * F.col("n_orders")
+                * n_orders
                 / (F.col("cnt_a").cast("double") * F.col("cnt_b")),
                 6,
             ).alias("lift"),

@@ -26,6 +26,8 @@ as ``getter.__wrapped__`` for tests that need a real recompute.
   build's intermediates: they are released as soon as the entry itself
   is materialized. An entry of another memo built inside the build is
   not an intermediate and stays held.
+- A frame cut outside any build is its caller's to free with
+  :func:`release` (the streaming near-dup gate cuts one per batch).
 - :func:`evict_all` releases every registered entry (optionally one
   corpus's): it unpersists the blocks and deletes a reliable
   checkpoint's files.
@@ -113,7 +115,7 @@ def get_or_build(memo: dict, spark: SparkSession, sf_dir: str,
             df = _cut(build(spark, sf_dir))
         finally:
             for frame in stack.pop():
-                _release(frame, "build intermediate")
+                release(frame, "build intermediate")
         memo[key] = df
     return df
 
@@ -132,10 +134,12 @@ def _session_stopped(df: DataFrame) -> bool:
         return True
 
 
-def _release(df: DataFrame, what) -> None:
-    """Unpersist a materialized frame's blocks and delete its reliable
-    checkpoint files, if it has any. A frame owned by an already-stopped
-    SparkContext is skipped; any other failure is logged and counted."""
+def release(df: DataFrame, what) -> None:
+    """Unpersist a :func:`materialize`-d frame's blocks and delete its
+    reliable checkpoint files, if it has any — for a cut made outside a
+    memo build, whose owner knows when it is done with it. A frame owned
+    by an already-stopped SparkContext is skipped; any other failure is
+    logged and counted."""
     global _EVICT_FAILURES
     if _session_stopped(df):
         return
@@ -167,6 +171,6 @@ def evict_all(sf_dir: str | None = None) -> int:
     released = 0
     for memo in _REGISTRY:
         for key in [k for k in memo if sf_dir is None or k[1] == sf_dir]:
-            _release(memo.pop(key), key)
+            release(memo.pop(key), key)
             released += 1
     return released

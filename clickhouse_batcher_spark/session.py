@@ -9,7 +9,20 @@ also be correct on a 1000-executor cluster:
   this would be ~2-3x total cores, and AQE coalesces down);
 - session timezone pinned to UTC so results are reproducible and
   oracle-comparable (DuckDB timestamps are UTC-naive);
-- Arrow enabled for any pandas-UDF path.
+- Arrow enabled for any pandas-UDF path;
+- ``lower()``/``upper()`` through the JVM's case mapping (the Spark 3.x
+  behaviour), not ICU: ``spark.sql.icu.caseMappings.enabled=false``.
+  The first ICU case mapping in a JVM loads ICU's data, 1.35-1.50 s
+  against 0.17 s for the JVM mapping (4-core box). That cost is paid
+  once per JVM — so on a cluster by every executor, and by every
+  streaming near-dup gate whose first batch tokenizes text. The two
+  mappings agree on the differential corpus of
+  ``tests/test_session.py`` (Greek final sigma, Turkish dotted and
+  dotless i, ß, titlecase digraphs, Cyrillic, Armenian ligatures,
+  combining marks) except on case pairs newer than the JDK's Unicode
+  version, which the test lists. The JVM mapping follows the JVM default
+  locale, so run executors under a non-Turkish locale
+  (``-Duser.language=en``).
 """
 
 from __future__ import annotations
@@ -20,6 +33,8 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+ICU_CASE_MAPPINGS = "spark.sql.icu.caseMappings.enabled"
+
 
 def tune_session(spark: SparkSession) -> None:
     """Idempotent tuning for externally-built sessions (e.g. the
@@ -27,7 +42,9 @@ def tune_session(spark: SparkSession) -> None:
     partitions (25x over-parallelized for every local run), set it to
     the actual parallelism. Touches nothing a user configured
     explicitly — 200 is only ever the untouched default. Sessions from
-    :func:`get_session` already size this correctly."""
+    :func:`get_session` already size this correctly. Also pins UTC (same
+    only-if-untouched rule) and the JVM case mapping, as
+    :func:`get_session` does."""
     try:
         if spark.conf.get("spark.sql.shuffle.partitions") == "200":
             spark.conf.set(
@@ -48,6 +65,13 @@ def tune_session(spark: SparkSession) -> None:
         jvm_default = spark._jvm.java.util.TimeZone.getDefault().getID()
         if tz == jvm_default and tz != "UTC":
             spark.conf.set("spark.sql.session.timeZone", "UTC")
+    except Exception:
+        pass
+    # The engine's lower() is the JVM case mapping (module docstring);
+    # sessions built elsewhere get it too, so the oracle sweep checks
+    # the lowercasing the engine runs.
+    try:
+        spark.conf.set(ICU_CASE_MAPPINGS, "false")
     except Exception:
         pass
 
@@ -83,6 +107,7 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
+        .config(ICU_CASE_MAPPINGS, "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -145,7 +145,11 @@ def compact_parquet(
       COUNT follows the first-fit-decreasing plan; under skewed input
       partitioning individual output files can exceed ``target_bytes``.
       Right for routine maintenance where "4 files instead of 4000" is
-      the goal.
+      the goal. Coalesce cannot raise a partition count, so when the
+      scan packs the files into fewer read partitions than bins (small
+      files are merged per task), a round-robin ``repartition(n_bins)``
+      writes the planned count instead — a shuffle paid only by inputs
+      that small.
     - ``size_fidelity=True``: one small job per planned bin, reading
       exactly that bin's member files and writing them as one output
       file — output file sizes track the plan's bins (a bin of small
@@ -164,9 +168,14 @@ def compact_parquet(
         return 0
     bins = plan_compaction(files, target_bytes)
     if not size_fidelity:
+        n_bins = max(1, len(bins))
         df = read_parquet(spark, src_path)
-        df.coalesce(max(1, len(bins))).write.mode("overwrite").parquet(dst_path)
-        return max(1, len(bins))
+        if df.rdd.getNumPartitions() >= n_bins:
+            df = df.coalesce(n_bins)
+        else:
+            df = df.repartition(n_bins)
+        df.write.mode("overwrite").parquet(dst_path)
+        return n_bins
     for i, members in enumerate(bins):
         (
             read_parquet(spark, *members)

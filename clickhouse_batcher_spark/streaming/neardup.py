@@ -10,9 +10,10 @@ Spark-first: a static band-signature index on one side, a
 ``readStream`` file source on the other, and a per-micro-batch
 equi-join on ``(band_id, band_sig)`` inside ``foreachBatch``.
 
-Shares ``band_signatures`` with the batch path, so a document gets
-the SAME signature whether indexed in batch or scored in-flight —
-the property the batch-equivalence test pins.
+Shares the signature helper (``dedup.signature_bands``) with the
+batch detector's pair memo, so a document gets the SAME signature
+whether indexed in batch or scored in-flight — the property the
+batch-equivalence tests pin.
 
 Scale: the index side is a parquet-backed (band, sig) -> doc relation
 keyed exactly like the stream side's join key; at 100 TB both sides
@@ -29,6 +30,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_batcher_spark.operators import memo
 from clickhouse_batcher_spark.operators.dedup import (
     band_signatures,
     band_signatures_inline,
@@ -108,6 +110,26 @@ def run_streaming_neardup(
 
 
 # --- self-building index: the full at-ingestion dedup loop -----------------
+def _prior_index_paths(
+    spark: SparkSession, index_dir: str, batch_id: int
+) -> list[str]:
+    """The index partitions ``index_dir/_batch_id=N`` with
+    ``N < batch_id``, listed through Spark's own filesystem layer (a
+    driver-local os.listdir would silently miss an object-store
+    index_dir and score every batch only against itself). An absent
+    index directory has no partitions."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(index_dir)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return []
+    paths = []
+    for status in fs.listStatus(root):
+        key, _, n = status.getPath().getName().partition("=")
+        if status.isDirectory() and key == "_batch_id" and int(n) < batch_id:
+            paths.append(status.getPath().toString())
+    return paths
+
+
 def _ingest_batch(
     index_dir: str, out_dir: str, batch: DataFrame, batch_id: int
 ) -> None:
@@ -116,68 +138,48 @@ def _ingest_batch(
     then commit this batch's own signatures to the index.
 
     Replay safety: both writes are overwrite-by-batch-id, and the
-    index read filters ``_batch_id < batch_id`` — a replayed batch
-    never sees the signatures its crashed predecessor may have half
-    committed, so the output is bit-identical under any replay
-    schedule."""
-    from pyspark.errors import AnalysisException
-
+    index read takes only the partitions with ``_batch_id < batch_id``
+    — a replayed batch never sees the signatures its crashed
+    predecessor may have half committed, so the output is
+    bit-identical under any replay schedule."""
     spark = batch.sparkSession
-    # band_signatures_inline: bit-identical signatures, zero shuffles —
-    # the batch pipeline's vocab distinct + broadcast + per-doc MIN
-    # aggregation cost this gate ~2.5 s of fixed latency per
-    # micro-batch (67% of wall time, round-8 profile)
-    sigs = band_signatures_inline(batch).cache()
-
-    # Probe the index through Spark's own filesystem layer (an absent
-    # or empty index raises at read time) — a driver-local os.path
-    # check would silently miss an object-store index_dir and score
-    # every batch only against itself.
+    # In-row signatures: bit-identical to the batch path, zero
+    # shuffles. Cut before any join: each side of the within-batch
+    # self-join and the prior join otherwise re-ran the 16 sha2 folds
+    # (.cache() did not prevent it); cut, the kernel runs in one job
+    # per batch.
+    sigs = memo.materialize(band_signatures_inline(batch))
     try:
-        prior = (
-            spark.read.schema(
-                # explicit schema: skips per-batch parquet footer
-                # inference over an index whose partition count grows
-                # with every committed batch
-                "doc_id BIGINT, band_id INT, band_sig STRING, "
-                "_batch_id INT"
-            )
-            .option("basePath", index_dir)
-            .parquet(f"{index_dir}/_batch_id=*")
-            .filter(F.col("_batch_id") < F.lit(batch_id))
-            .select("band_id", "band_sig", F.col("doc_id").alias("index_doc_id"))
-        )
-    except AnalysisException:
-        prior = None
-
-    a = sigs.alias("a")
-    b = sigs.alias("b")
-    within = (
-        a.join(
+        a = sigs.alias("a")
+        b = sigs.alias("b")
+        matches = a.join(
             b,
             (F.col("a.band_id") == F.col("b.band_id"))
             & (F.col("a.band_sig") == F.col("b.band_sig"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
+        ).select(
             F.col("b.doc_id").alias("doc_id"),
             F.col("a.doc_id").alias("index_doc_id"),
         )
-    )
-    matches = within
-    if prior is not None:
-        matches = matches.unionByName(
-            sigs.join(prior, ["band_id", "band_sig"]).select(
-                "doc_id", "index_doc_id"
+        prior_paths = _prior_index_paths(spark, index_dir, batch_id)
+        if prior_paths:
+            # explicit schema: no footer inference over an index whose
+            # partition count grows with every committed batch
+            prior = spark.read.schema(
+                "doc_id BIGINT, band_id INT, band_sig STRING"
+            ).parquet(*prior_paths)
+            matches = matches.unionByName(
+                sigs.join(
+                    prior.withColumnRenamed("doc_id", "index_doc_id"),
+                    ["band_id", "band_sig"],
+                ).select("doc_id", "index_doc_id")
             )
+        matches.distinct().write.mode("overwrite").parquet(
+            f"{out_dir}/_batch_id={batch_id}"
         )
-    matches.distinct().write.mode("overwrite").parquet(
-        f"{out_dir}/_batch_id={batch_id}"
-    )
-    sigs.select("doc_id", "band_id", "band_sig").write.mode(
-        "overwrite"
-    ).parquet(f"{index_dir}/_batch_id={batch_id}")
-    sigs.unpersist()
+        sigs.write.mode("overwrite").parquet(f"{index_dir}/_batch_id={batch_id}")
+    finally:
+        memo.release(sigs, f"near-dup gate batch {batch_id}")
 
 
 def run_streaming_neardup_selfindex(

@@ -994,6 +994,85 @@ def test_band_signatures_inline_bit_identical(spark, sf_dir):
     assert "Exchange" not in plan
 
 
+class _PlanRecorder:
+    """py4j-side QueryExecutionListener: the executed plan text of
+    every query the session completes while registered."""
+
+    def __init__(self):
+        self.plans = []
+
+    def onSuccess(self, func_name, qe, duration_ns):
+        self.plans.append(qe.executedPlan().toString())
+
+    def onFailure(self, func_name, qe, exception):
+        self.plans.append(qe.executedPlan().toString())
+
+    # unregister compares listeners with equals(), which py4j forwards
+    def equals(self, other):
+        return other is self
+
+    def hashCode(self):
+        return id(self) & 0x7FFFFFFF
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
+def test_gate_batch_runs_signature_kernel_once(spark, sf_dir, tmp_root):
+    """One gate micro-batch computes its band signatures once: the
+    within-batch self-join, the prior-index join and the index write
+    all read one materialized frame. Of the plans the batch executes,
+    exactly one holds the sha2 signature projection (an unmaterialized
+    or merely cached frame shows it in every consuming plan)."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    from clickhouse_batcher_spark.streaming.neardup import _ingest_batch
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    idx, out = f"{tmp_root}/idx", f"{tmp_root}/out"
+    _ingest_batch(idx, out, docs.filter(F.col("doc_id") % 4 == 0), 0)
+
+    sc = spark.sparkContext
+    ensure_callback_server_started(sc._gateway)
+    recorder = _PlanRecorder()
+    # hold ONE Java proxy so unregister finds the registered listener
+    holder = sc._jvm.java.util.ArrayList()
+    holder.add(recorder)
+    listener = holder.get(0)
+    manager = spark._jsparkSession.listenerManager()
+    manager.register(listener)
+    try:
+        _ingest_batch(idx, out, docs.filter(F.col("doc_id") % 4 == 1), 1)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        manager.unregister(listener)
+
+    sig_plans = [plan for plan in recorder.plans if "sha2(" in plan]
+    assert len(sig_plans) == 1, sig_plans
+    assert len(recorder.plans) >= 3  # signatures, matches, index write
+    # batch 1 was scored against batch 0's index too
+    assert spark.read.parquet(f"{out}/_batch_id=1").count() > 0
+
+
+def test_prior_index_paths_lists_only_earlier_batches(spark, tmp_root):
+    """The gate's index read takes exactly the partitions of earlier
+    batches (numeric order, not string order), never its own or a
+    later one, and an absent index has none."""
+    from clickhouse_batcher_spark.streaming.neardup import _prior_index_paths
+
+    idx = f"{tmp_root}/index"
+    assert _prior_index_paths(spark, idx, 5) == []
+    for n in (0, 1, 2, 10):
+        os.makedirs(f"{idx}/_batch_id={n}")
+    os.makedirs(f"{idx}/_temporary")
+    got = sorted(
+        int(p.rsplit("=", 1)[1]) for p in _prior_index_paths(spark, idx, 2)
+    )
+    assert got == [0, 1]
+    assert _prior_index_paths(spark, idx, 0) == []
+    assert len(_prior_index_paths(spark, idx, 11)) == 4
+
+
 @pytest.mark.slow
 def test_streaming_drift_monitor_matches_batch_psi(spark, sf_dir, tmp_root):
     """The per-micro-batch PSI rows from the streaming monitor must be
