@@ -25,9 +25,11 @@ A flush builds its batch columnar, the analogue of the reference's
 ``PrepareBatch``/``Append``: rows are type-checked as
 ``createDataFrame`` checks them, then laid out as one Arrow table
 (``columnar.py``), so the sink write runs in the JVM and starts no
-Python worker, and a batch under 128 MB lands as one file. The Q1/Q2/Q3
-read-back infers the sink's schema once (``sources.readers``), so a
-repeated count starts no inference job. ``close()`` stops the ticker,
+Python worker, and a batch under 128 MB lands as one file. On a parquet
+sink, Q1 reads the commit ledger: each marker ``_ledger/<N>`` holds the
+row count its batch's write observed, so a count starts no Spark job.
+The Q2/Q3 read-back infers the sink's schema once (``sources.readers``),
+so a repeated query starts no inference job. ``close()`` stops the ticker,
 waits for a tick flush that is already running, then flushes the tail.
 """
 
@@ -225,11 +227,12 @@ class BatcherEngine:
     def count(self) -> int:
         """Q1: SELECT COUNT(*) (hashes_test.go:227-233).
 
-        Delegates to the sink's server-side count when it has one
-        (the JDBC sink pushes the whole COUNT(*) through the query
-        option — one row over the wire; a DataFrame .count() on a v1
-        JDBC read would stream a 1-column projection of every row).
-        Sinks without a count method keep the DataFrame path."""
+        Delegates to the sink's own count when it has one: the parquet
+        sink sums its ledger's row counts and starts no Spark job; the
+        JDBC sink pushes the whole COUNT(*) through the query option —
+        one row over the wire (a DataFrame .count() on a v1 JDBC read
+        would stream a 1-column projection of every row). Sinks without
+        a count method keep the DataFrame path."""
         sink_count = getattr(self.sink, "count", None)
         if callable(sink_count):
             return sink_count(self.spark)

@@ -3,7 +3,7 @@
 Layout::
 
     <root>/data/_batch_id=<N>/part-*.parquet   -- one dir per batch
-    <root>/_ledger/<N>                         -- commit marker
+    <root>/_ledger/<N>                         -- commit marker: the batch's row count
 
 Exactly-once logic (replaces the reference's racy in-memory ``isSent``
 flag, ``hashes.go:70-83``):
@@ -12,17 +12,25 @@ flag, ``hashes.go:70-83``):
 - ``write_batch`` on a committed batch_id is a no-op (replay-safe);
 - an uncommitted replay **overwrites** that batch's partition
   directory, so a crash between data-write and marker-write heals on
-  retry instead of duplicating rows (the reference's TOCTOU window).
+  retry instead of duplicating rows (the reference's TOCTOU window);
+- the marker is written to a temporary file beside ``_ledger/`` and
+  renamed into it, so a crash mid-write never leaves an empty or
+  partial marker that would count as committed.
 
 Scale: the data dir is a normal partitioned parquet dataset — at
 100 TB this is exactly how a streaming ingest lands on a data lake
 (partition per micro-batch, compaction downstream). The ledger is one
-tiny marker file per batch; readers never touch it. Writing uses the
-executors (distributed); only the marker touch is driver-side. A
-default engine flush lands as one file in its batch directory
-(``columnar.py`` sizes the write).
+tiny marker file per batch. Writing uses the executors (distributed);
+only the marker is driver-side. A default engine flush lands as one
+file in its batch directory (``columnar.py`` sizes the write).
 
-Read-back (Q1/Q2/Q3 and ``compact``) goes through
+Q1 (``count``) reads the ledger, not the data: each marker holds the
+row count its write observed, as ClickHouse answers ``COUNT(*)`` from
+per-part row counts, so Q1 starts no Spark job. A marker written by an
+older build holds a word (``committed``/``compacted``), not a count;
+those batches are counted with one Spark job.
+
+Read-back (Q2/Q3 and ``compact``) goes through
 ``sources.readers.read_parquet``: the schema is inferred once, from the
 first committed batch directory, and a committed directory is never
 rewritten, so later reads start no inference job. ``compact`` and a
@@ -32,7 +40,10 @@ the key.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -58,30 +69,43 @@ class IdempotentParquetSink(BatchSink):
     def committed_batches(self) -> list[int]:
         return sorted(int(p) for p in os.listdir(self.ledger_dir))
 
-    # -- sink -----------------------------------------------------------
-    def write_batch(self, df: DataFrame, batch_id: int) -> bool:
-        if self.is_committed(batch_id):
-            return False  # replay of a committed batch: exactly-once no-op
+    def _write_and_commit(self, df: DataFrame, batch_id: int) -> int:
+        """Overwrite (not append) the batch's partition directory, then
+        commit its marker with the row count; returns that count. The
+        overwrite heals partial writes from a crashed earlier attempt.
+        The row count is observed DURING the write — a pre-write
+        isEmpty() would be a second scan of the source (and double
+        numInputRows in streaming metrics). The marker is written last
+        (its mtime is the batch's commit time), atomically: to a
+        temporary file in the sink root (same filesystem, outside
+        ``_ledger/``), then renamed into place."""
         batch_dir = f"{self.data_dir}/_batch_id={int(batch_id)}"
-        # Overwrite (not append) the single batch partition: heals
-        # partial writes from a crashed earlier attempt. Row count is
-        # observed DURING the write — a pre-write isEmpty() would be a
-        # second scan of the source (and double numInputRows in
-        # streaming metrics).
         obs = Observation()
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
             "overwrite"
         ).parquet(batch_dir)
-        if obs.get["rows"] == 0:
+        rows = obs.get["rows"]
+        if rows == 0:
             # reference empty-skip (hashes.go:79): no data, no marker —
             # the id stays free for a later real batch
-            import shutil
-
             shutil.rmtree(batch_dir, ignore_errors=True)
-            return False
-        with open(self._marker(batch_id), "w") as fh:
-            fh.write("committed")
-        return True
+            return 0
+        tmp = f"{self.root}/.ledger-{int(batch_id)}-{uuid.uuid4().hex}.tmp"
+        try:
+            with open(tmp, "w") as fh:
+                fh.write(str(rows))
+            os.replace(tmp, self._marker(batch_id))
+        except OSError:
+            with contextlib.suppress(OSError):
+                os.remove(tmp)
+            raise
+        return rows
+
+    # -- sink -----------------------------------------------------------
+    def write_batch(self, df: DataFrame, batch_id: int) -> bool:
+        if self.is_committed(batch_id):
+            return False  # replay of a committed batch: exactly-once no-op
+        return self._write_and_commit(df, batch_id) > 0
 
     # -- read-back ------------------------------------------------------
     def _read_batches(self, spark: SparkSession, batch_ids: list[int]) -> DataFrame:
@@ -100,8 +124,21 @@ class IdempotentParquetSink(BatchSink):
         return self._read_batches(spark, committed)
 
     def count(self, spark: SparkSession) -> int:
-        return self.read(spark).agg(F.count(F.lit(1))).collect()[0][0]
-
+        """Q1: the sum of the ledger's row counts, 0 for an empty sink.
+        Batches whose marker holds no count (an older build wrote the
+        word ``committed`` or ``compacted``) are counted in one Spark
+        job over those batches only."""
+        total, legacy = 0, []
+        for b in self.committed_batches():
+            with open(self._marker(b)) as fh:
+                text = fh.read()
+            try:
+                total += int(text)
+            except ValueError:
+                legacy.append(b)
+        if legacy:
+            total += self._read_batches(spark, legacy).agg(F.count(F.lit(1))).collect()[0][0]
+        return total
 
     # -- maintenance ----------------------------------------------------
     def compact(self, spark: SparkSession, target_files: int = 8) -> int:
@@ -121,23 +158,20 @@ class IdempotentParquetSink(BatchSink):
         swallow that stream batch while its checkpoint advanced —
         permanent row loss).
 
+        The compacted marker records the row count observed during the
+        compaction's own write, not the sum of the old markers.
+
         Crash-safe ordering: write compacted data, commit its marker,
         then drop old markers before old data — a crash in between
         leaves either extra (ignored) data dirs or a fully valid state,
         never missing rows.
         """
-        import shutil
-
         old_ids = self.committed_batches()
         if not old_ids:
             return 0
         new_id = min(0, min(old_ids)) - 1
         df = self._read_batches(spark, old_ids)
-        df.coalesce(target_files).write.mode("overwrite").parquet(
-            f"{self.data_dir}/_batch_id={new_id}"
-        )
-        with open(self._marker(new_id), "w") as fh:
-            fh.write("compacted")
+        self._write_and_commit(df.coalesce(target_files), new_id)
         for b in old_ids:
             os.remove(self._marker(b))
         for b in old_ids:

@@ -143,67 +143,6 @@ def test_compaction_size_fidelity_mode_tracks_plan_bins(spark, sf_dir, tmp_path)
     assert before.equals(after)
 
 
-def test_bloom_file_skipping_index(spark, sf_dir, tmp_path):
-    """ClickHouse bloom_filter skip-index analogue: build the sidecar
-    over range-partitioned files, then (1) NO false negatives for any
-    user, (2) real pruning for most users, (3) pruned reads equal
-    full-scan reads."""
-    from clickhouse_batcher_spark.sources.bloomindex import (
-        build_bloom_index,
-        prune_files,
-        read_with_bloom_prune,
-    )
-    from clickhouse_batcher_spark.tables import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "ev_ranged")
-    # Range layout: each file holds a narrow user range, so bloom
-    # pruning has signal (a hash layout would put every user in every
-    # file and the index would rightly keep everything).
-    events.repartitionByRange(12, "user_id").write.parquet(path)
-    index = build_bloom_index(spark, path, "user_id").cache()
-    index_rows = index.collect()
-    n_files = len({r["file"] for r in index_rows})
-    assert n_files >= 8
-
-    truth = {
-        r["user_id"]: r["n"]
-        for r in spark.read.parquet(path)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    # Which file(s) really hold each user:
-    actual_files = {
-        r["user_id"]: set()
-        for r in spark.read.parquet(path).select("user_id").distinct().collect()
-    }
-    for r in (
-        spark.read.parquet(path)
-        .select("user_id", F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    ):
-        actual_files[r["user_id"]].add(r["f"])
-
-    pruned_counts = []
-    for uid, files in actual_files.items():
-        kept = set(prune_files(index_rows, uid))
-        assert files <= kept, f"false negative for user {uid}"
-        pruned_counts.append(len(kept))
-    # bloom with 1024 bits / ~dozens of keys per file: most probes
-    # should keep far fewer than all files
-    assert sum(pruned_counts) / len(pruned_counts) < n_files * 0.6
-
-    some_uid = sorted(truth)[len(truth) // 2]
-    got = read_with_bloom_prune(spark, path, index, "user_id", some_uid)
-    assert got.count() == truth[some_uid]
-    # a value no file contains: prune everything, read nothing
-    ghost = read_with_bloom_prune(spark, path, index, "user_id", -99999)
-    assert ghost.count() == 0
-    index.unpersist()
-
-
 def test_queries_md_matches_live_catalog():
     """QUERIES.md is generated from the catalog; a new operator that
     skips `tools/gen_query_index.py` leaves the committed index stale

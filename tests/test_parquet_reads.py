@@ -5,7 +5,10 @@
 ``spark.read.schema`` on later reads, which start no Spark job. These
 tests pin the three properties that make that safe (a new relation per
 read, new files seen, a rewritten path inferred again) at the catalog
-and at the sink, and the engine flush landing as one file.
+and at the sink, and the engine flush landing as one file. The sink's
+Q1 reads the commit ledger instead: the tests below pin that it starts
+no job, that the ledger count always equals the data's count, and that
+a marker is committed atomically.
 """
 
 from __future__ import annotations
@@ -15,9 +18,11 @@ import glob
 import os
 import shutil
 from collections import Counter
+from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_batcher_spark import BatcherEngine, EngineConfig
@@ -141,6 +146,104 @@ def test_sink_queries_follow_new_batches_compaction_and_recreation(spark, tmp_pa
     eng.flush()
     assert eng.read().dtypes == [("user_id", "string"), ("amount", "int"), ("note", "string")]
     _check_q1_q2_q3(eng, other)
+
+
+@contextmanager
+def _job_group(spark, group: str):
+    """Run the block's Spark jobs under ``group``; yields a function
+    that lists the group's job ids once all posted events are in."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+
+    def jobs() -> list[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_q1_reads_the_ledger_and_starts_no_job(spark, tmp_path):
+    sink = IdempotentParquetSink(str(tmp_path / "sink"))
+    eng = BatcherEngine(spark, sink, SCHEMA, EngineConfig(max_batch_rows=40))
+    rows = [(f"u{i % 3}", i, str(i)) for i in range(100)]
+    for row in rows:
+        eng.save_async(row)
+    eng.flush()
+    assert len(sink.committed_batches()) == 3
+    with _job_group(spark, "q1-from-ledger") as jobs:
+        assert eng.count() == len(rows)
+        assert jobs() == []
+        # The group does see jobs: Q2 scans the data.
+        assert eng.filtered_count(user_id="u1") == sum(r[0] == "u1" for r in rows)
+        assert jobs()
+
+
+def _frame(spark, lo: int, hi: int):
+    return spark.createDataFrame([(f"u{i % 3}", i, str(i)) for i in range(lo, hi)], SCHEMA)
+
+
+def test_ledger_count_equals_data_count(spark, tmp_path):
+    sink = IdempotentParquetSink(str(tmp_path / "sink"))
+    assert sink.count(spark) == 0  # empty sink
+
+    def count() -> int:
+        n = sink.count(spark)
+        assert n == sink.read(spark).count()
+        return n
+
+    assert sink.write_batch(_frame(spark, 0, 30), 0)
+    assert count() == 30
+    # replay of a committed id
+    assert not sink.write_batch(_frame(spark, 0, 50), 0)
+    assert count() == 30
+    # uncommitted replay: a data directory with no marker, then the id again
+    _frame(spark, 30, 45).write.parquet(f"{sink.data_dir}/_batch_id=1")
+    assert not sink.is_committed(1)
+    assert sink.write_batch(_frame(spark, 30, 60), 1)
+    assert count() == 60
+    # empty batch
+    assert not sink.write_batch(_frame(spark, 0, 0), 2)
+    assert sink.committed_batches() == [0, 1]
+    assert count() == 60
+    # compaction, then new ids
+    new_id = sink.compact(spark, target_files=1)
+    assert sink.committed_batches() == [new_id]
+    assert count() == 60
+    assert sink.write_batch(_frame(spark, 60, 70), 2)
+    assert sink.write_batch(_frame(spark, 70, 72), 3)
+    assert count() == 72
+    # a marker from an older build holds a word, not a count
+    _frame(spark, 72, 80).write.parquet(f"{sink.data_dir}/_batch_id=4")
+    with open(f"{sink.ledger_dir}/4", "w") as fh:
+        fh.write("committed")
+    assert count() == 80
+
+
+def test_crash_before_marker_rename_leaves_batch_uncommitted(spark, tmp_path, monkeypatch):
+    sink = IdempotentParquetSink(str(tmp_path / "sink"))
+    written = []
+
+    def crash(src, dst):
+        with open(src) as fh:
+            written.append(fh.read())
+        raise OSError("crash between marker write and rename")
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError):
+        sink.write_batch(_frame(spark, 0, 30), 0)
+    monkeypatch.undo()
+    assert written == ["30"]
+    assert not sink.is_committed(0)
+    assert os.listdir(sink.ledger_dir) == []
+    assert sorted(os.listdir(sink.root)) == ["_ledger", "data"]  # no stray temp file
+    assert sink.count(spark) == 0
+    # the replay heals: the batch directory is overwritten, then committed
+    assert sink.write_batch(_frame(spark, 0, 30), 0)
+    assert sink.count(spark) == sink.read(spark).count() == 30
 
 
 def test_default_flush_lands_one_file(spark, tmp_path):
