@@ -1,19 +1,21 @@
-"""Columnar batch builder: Python rows -> one Arrow-backed Spark frame.
+"""Columnar batch builder: Python rows -> one verified Arrow table.
 
 The reference sends each flush as a columnar native-protocol batch
 (``conn.PrepareBatch`` / ``batch.Append`` / ``batch.Send``). This is
 the Spark analogue of ``PrepareBatch`` + ``Append``: every row is
 checked with the type verifier and converted with the converters that
 ``spark.createDataFrame(rows, schema)`` runs, then the batch is laid
-out column by column as a ``pyarrow.Table``.
+out column by column as a ``pyarrow.Table`` on the driver.
 
-Spark plans the resulting frame as a ``LocalTableScan``, so writing it
-runs in the JVM alone. A frame built from a Python list is instead a
-pickled Python RDD (``Scan ExistingRDD``), and every task of its write
-starts a Python worker. The frame is coalesced (no shuffle) to one
-partition per 128 MB of Arrow data (``layout.partitions_for``), so a
-flushed batch lands as one file, where the scan alone would write one
-file per core.
+An engine flush hands that table to its sink (``BatchSink.write_table``).
+The parquet sink writes it from the driver with ``pyarrow.parquet`` and
+runs no Spark job; any other sink gets ``table_frame``: a frame Spark
+plans as a ``LocalTableScan``, so writing it runs in the JVM alone. A
+frame built from a Python list is instead a pickled Python RDD
+(``Scan ExistingRDD``), and every task of its write starts a Python
+worker. The frame is coalesced (no shuffle) to one partition per 128 MB
+of Arrow data (``layout.partitions_for``), so a flushed batch lands as
+one file, where the scan alone would write one file per core.
 
 The verifier is not optional: bare pyarrow silently truncates ``1.5``
 to ``1`` in an int64 column, a value the list path rejects.
@@ -75,7 +77,7 @@ def _decimal_fix(dt: DataType):
 
 
 class ColumnarBatchBuilder:
-    """Builds frames of one schema. Parse once, build many: the struct,
+    """Builds batches of one schema. Parse once, build many: the struct,
     its Arrow schema, the row verifier and the converters are made at
     construction (a DDL string needs an active Spark session)."""
 
@@ -87,10 +89,10 @@ class ColumnarBatchBuilder:
         self._convert = _create_converter(self.struct)
         self._fixes = [_decimal_fix(f.dataType) for f in self.struct.fields]
 
-    def frame(self, spark: SparkSession, rows) -> DataFrame:
-        """One frame holding ``rows`` (tuples, lists, dicts or Rows, as
-        ``createDataFrame`` takes them). Raises before building anything
-        if any row fails the verifier."""
+    def table(self, rows) -> pa.Table:
+        """One Arrow table holding ``rows`` (tuples, lists, dicts or
+        Rows, as ``createDataFrame`` takes them). Raises before building
+        anything if any row fails the verifier."""
         internal = []
         for row in rows:
             self._verify(row)
@@ -100,5 +102,14 @@ class ColumnarBatchBuilder:
             pa.array([fix(v) for v in col] if fix else col, type=field.type)
             for col, fix, field in zip(columns, self._fixes, self._arrow_schema)
         ]
-        table = pa.Table.from_arrays(arrays, schema=self._arrow_schema)
-        return spark.createDataFrame(table, self.struct).coalesce(partitions_for(table.nbytes))
+        return pa.Table.from_arrays(arrays, schema=self._arrow_schema)
+
+    def frame(self, spark: SparkSession, rows) -> DataFrame:
+        """``table(rows)`` as a Spark frame (``table_frame``)."""
+        return table_frame(spark, self.table(rows), self.struct)
+
+
+def table_frame(spark: SparkSession, table: pa.Table, struct: StructType) -> DataFrame:
+    """A built table as a ``LocalTableScan`` frame of ``struct``,
+    coalesced to one partition per 128 MB of Arrow data."""
+    return spark.createDataFrame(table, struct).coalesce(partitions_for(table.nbytes))

@@ -23,14 +23,19 @@ guarded by a lock — the reference's racy buffer swap
 
 A flush builds its batch columnar, the analogue of the reference's
 ``PrepareBatch``/``Append``: rows are type-checked as
-``createDataFrame`` checks them, then laid out as one Arrow table
-(``columnar.py``), so the sink write runs in the JVM and starts no
-Python worker, and a batch under 128 MB lands as one file. On a parquet
+``createDataFrame`` checks them, then laid out as one Arrow table on the
+driver (``columnar.py``), and the table goes to ``sink.write_table``,
+the analogue of ``Send``. The parquet sink writes it from the driver
+with ``pyarrow.parquet``, so a flush runs no Spark job, and a batch
+under 128 MB lands as one file; other sinks write it as a
+``LocalTableScan`` frame, in the JVM, with no Python worker. On a parquet
 sink, Q1 reads the commit ledger: each marker ``_ledger/<N>`` holds the
-row count its batch's write observed, so a count starts no Spark job.
-The Q2/Q3 read-back infers the sink's schema once (``sources.readers``),
-so a repeated query starts no inference job. ``close()`` stops the ticker,
-waits for a tick flush that is already running, then flushes the tail.
+row count of its batch, so a count starts no Spark job. The Q2/Q3
+read-back infers the sink's schema once (``sources.readers``), so a
+repeated query starts no inference job; a sink with no committed batch
+reads as an empty frame of the engine's schema. ``close()`` stops the
+ticker, waits for a tick flush that is already running, then flushes
+the tail.
 """
 
 from __future__ import annotations
@@ -164,8 +169,8 @@ class BatcherEngine:
             rows, self._buffer = self._buffer, []
             batch_id = self._next_batch_id
             self._next_batch_id += 1
-        df = self._builder.frame(self.spark, rows)
-        self.sink.write_batch(df, batch_id)
+        table = self._builder.table(rows)
+        self.sink.write_table(self.spark, table, self._builder.struct, batch_id)
         return len(rows)
 
     def start_auto_flush(self) -> None:
@@ -222,7 +227,14 @@ class BatcherEngine:
 
     # -- verification query surface (Q1/Q2/Q3) --------------------------
     def read(self) -> DataFrame:
-        return self.sink.read(self.spark)
+        """Every committed row; an empty frame of the engine's schema
+        when the sink has no committed batch (the parquet sink raises
+        ``FileNotFoundError`` then), so Q2 counts 0 and Q3 is empty, as
+        on an empty ClickHouse table."""
+        try:
+            return self.sink.read(self.spark)
+        except FileNotFoundError:
+            return self.spark.createDataFrame([], self._builder.struct)
 
     def count(self) -> int:
         """Q1: SELECT COUNT(*) (hashes_test.go:227-233).

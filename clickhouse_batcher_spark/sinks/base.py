@@ -4,7 +4,11 @@ from __future__ import annotations
 
 import abc
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from clickhouse_batcher_spark.columnar import table_frame
 
 
 class BatchSink(abc.ABC):
@@ -23,21 +27,27 @@ class BatchSink(abc.ABC):
         """Deliver one micro-batch. Returns True if written, False if
         skipped (empty batch or batch_id already delivered)."""
 
+    def write_table(
+        self, spark: SparkSession, table: pa.Table, struct: StructType, batch_id: int
+    ) -> bool:
+        """Deliver one micro-batch that is already an Arrow table on the
+        driver (an engine flush, ``columnar.ColumnarBatchBuilder.table``)
+        with the same contract as ``write_batch``. Default: the table as
+        a ``LocalTableScan`` frame of ``struct``, through ``write_batch``.
+        A sink that can store the table without a Spark job overrides
+        this."""
+        return self.write_batch(table_frame(spark, table, struct), batch_id)
+
     def next_batch_id(self, spark=None) -> int:
         """First batch id a fresh producer should use against this sink.
 
         A producer that restarts over an existing sink must NOT reuse a
         committed id — the ledger would silently skip the new data as a
-        replay. Default: one past the highest committed id when the
-        sink exposes ``committed_batches()``; 0 for stateless sinks.
-        Sinks whose ledger lives behind a connection (JDBC) override
-        this and use ``spark`` to query it.
+        replay. Default: 0, for stateless sinks. Sinks with a ledger
+        override this: the parquet sink lists its markers, and sinks
+        whose ledger lives behind a connection (JDBC) use ``spark`` to
+        query it.
         """
-        committed = getattr(self, "committed_batches", None)
-        if callable(committed):
-            ids = committed()
-            if ids:
-                return max(ids) + 1
         return 0
 
     def foreach_batch(self):

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime
+import glob
 import threading
 import time
 from decimal import Decimal
@@ -12,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_batcher_spark import BatcherEngine, EngineConfig
+from clickhouse_batcher_spark.columnar import ColumnarBatchBuilder
 from clickhouse_batcher_spark.plans.migrations import Migration
 from clickhouse_batcher_spark.sinks.parquet_sink import IdempotentParquetSink
 
@@ -293,8 +295,9 @@ def test_clickhouse_ping_exhausts_retries(monkeypatch):
 
 # -- flush batch: columnar build, differential vs createDataFrame ----------
 class _GatedSink(IdempotentParquetSink):
-    """Parquet sink that can block in write_batch, fail its first
-    write, and keep the physical plan of every frame it is handed."""
+    """Parquet sink that can block in write_table, fail its first
+    write, and records the (batch id, row count) of every table it is
+    handed."""
 
     def __init__(self, root, block=False, fail_first=False):
         super().__init__(root)
@@ -303,16 +306,16 @@ class _GatedSink(IdempotentParquetSink):
         if not block:
             self.release.set()
         self.fail_first = fail_first
-        self.plans = []
+        self.tables = []
 
-    def write_batch(self, df, batch_id):
-        self.plans.append(df._jdf.queryExecution().executedPlan().toString())
+    def write_table(self, spark, table, struct, batch_id):
+        self.tables.append((batch_id, table.num_rows))
         self.started.set()
         self.release.wait(30)
         if self.fail_first:
             self.fail_first = False
             raise RuntimeError("sink down")
-        return super().write_batch(df, batch_id)
+        return super().write_table(spark, table, struct, batch_id)
 
 
 def test_close_waits_for_running_tick_flush(spark, tmp_path):
@@ -431,15 +434,30 @@ def test_flush_batch_matches_create_dataframe(spark, tmp_path, schema, rows):
     got = eng.read()
     assert got.dtypes == want.dtypes
     assert _sorted_rows(got) == _sorted_rows(want)
-    # The frame the sink was handed is a local Arrow scan: its write
-    # runs in the JVM and starts no Python worker.
-    assert "ExistingRDD" not in sink.plans[0]
-    assert "LocalTableScan" in sink.plans[0]
+    # The sink was handed the whole batch as one table, and wrote it as
+    # one file.
+    assert sink.tables == [(0, len(rows))]
+    assert len(glob.glob(f"{sink.data_dir}/_batch_id=0/*.parquet")) == 1
+
+
+@pytest.mark.parametrize("schema, rows", [(ALL_TYPES, ALL_TYPES_ROWS), (NESTED, NESTED_ROWS)])
+def test_builder_frame_is_a_coalesced_local_scan(spark, schema, rows):
+    """``ColumnarBatchBuilder.frame`` (the JDBC sink's ledger row and the
+    default ``BatchSink.write_table``) equals ``createDataFrame``'s frame
+    and is a local Arrow scan: its write runs in the JVM and starts no
+    Python worker."""
+    frame = ColumnarBatchBuilder(schema).frame(spark, rows)
+    want = spark.createDataFrame(rows, schema)
+    assert frame.dtypes == want.dtypes
+    assert _sorted_rows(frame) == _sorted_rows(want)
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
     assert "ExistingRDD" in want._jdf.queryExecution().executedPlan().toString()
-    # It is coalesced to one partition without a shuffle, so the batch
+    # It is coalesced to one partition without a shuffle, so a write
     # lands as one file.
-    assert "Coalesce 1" in sink.plans[0]
-    assert "Exchange" not in sink.plans[0]
+    assert "Coalesce 1" in plan
+    assert "Exchange" not in plan
 
 
 def test_flush_batch_stores_string_form_of_non_strings(spark, tmp_path):
@@ -462,7 +480,7 @@ def test_flush_rejects_what_create_dataframe_rejects(spark, tmp_path, case):
     eng.save_async(bad)
     with pytest.raises(Exception):
         eng.flush()
-    assert sink.plans == []  # rejected before the sink saw a frame
+    assert sink.tables == []  # rejected before the sink saw a table
     assert sink.committed_batches() == []
 
 
