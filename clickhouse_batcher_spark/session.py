@@ -22,7 +22,24 @@ also be correct on a 1000-executor cluster:
   combining marks) except on case pairs newer than the JDK's Unicode
   version, which the test lists. The JVM mapping follows the JVM default
   locale, so run executors under a non-Turkish locale
-  (``-Duser.language=en``).
+  (``-Duser.language=en``);
+- streaming checkpoint logs (offsets, commits, file-source log) written
+  through the Hadoop ``FileSystem`` checkpoint manager
+  (``spark.sql.streaming.checkpointFileManagerClass``), not Spark's
+  default ``FileContext`` one. Without the native Hadoop library
+  (``libhadoop``; Spark's pip build ships none, and
+  ``NativeCodeLoader`` warns at start) the local filesystem forks
+  ``chmod`` for every file and directory it creates, and the
+  ``FileContext`` manager also forks ``readlink`` eight times for each
+  rename: 10 forks per log file against 2. Each streaming trigger
+  writes three log files, so this takes 24 forks off every trigger.
+  Both managers write a temporary file and rename it into place, and
+  Spark creates these logs without overwrite, so the commit is as
+  atomic as the rename: atomic on local disks and HDFS. On object
+  stores (S3, GCS, ABFS) neither manager's rename is atomic; checkpoint
+  there through a store-specific manager passed in ``extra_conf``. The
+  conf is internal to Spark; ``tests/test_session.py`` loads the class,
+  so an upgrade that moves it fails there.
 """
 
 from __future__ import annotations
@@ -34,6 +51,11 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 ICU_CASE_MAPPINGS = "spark.sql.icu.caseMappings.enabled"
+CHECKPOINT_FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FILESYSTEM_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def tune_session(spark: SparkSession) -> None:
@@ -43,8 +65,9 @@ def tune_session(spark: SparkSession) -> None:
     the actual parallelism. Touches nothing a user configured
     explicitly — 200 is only ever the untouched default. Sessions from
     :func:`get_session` already size this correctly. Also pins UTC (same
-    only-if-untouched rule) and the JVM case mapping, as
-    :func:`get_session` does."""
+    only-if-untouched rule), the JVM case mapping and, when none is
+    set, the ``FileSystem`` checkpoint manager, as :func:`get_session`
+    does."""
     try:
         if spark.conf.get("spark.sql.shuffle.partitions") == "200":
             spark.conf.set(
@@ -72,6 +95,13 @@ def tune_session(spark: SparkSession) -> None:
     # the lowercasing the engine runs.
     try:
         spark.conf.set(ICU_CASE_MAPPINGS, "false")
+    except Exception:
+        pass
+    # Streaming checkpoint logs (module docstring); a manager the user
+    # chose is kept.
+    try:
+        if spark.conf.get(CHECKPOINT_FILE_MANAGER, None) is None:
+            spark.conf.set(CHECKPOINT_FILE_MANAGER, FILESYSTEM_CHECKPOINT_MANAGER)
     except Exception:
         pass
 
@@ -108,6 +138,7 @@ def get_session(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config(ICU_CASE_MAPPINGS, "false")
+        .config(CHECKPOINT_FILE_MANAGER, FILESYSTEM_CHECKPOINT_MANAGER)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -43,6 +43,15 @@ first committed batch directory, and a committed directory is never
 rewritten, so later reads start no inference job. ``compact`` and a
 sink root deleted and recreated change that first directory, and so
 the key.
+
+The committer writes no ``_SUCCESS`` file into a batch directory: the
+ledger marker is the batch's commit, and with no native Hadoop library
+each extra file costs a ``chmod`` fork (``session.py``).
+
+The root is a local path or a ``file:`` URI; the ledger, ``_retired/``
+and ``write_table`` use the driver's own filesystem. A root on another
+filesystem (``hdfs://``, ``s3a://``) is refused: its data would land
+on the store and its ledger on the driver's disk (ROADMAP.md D12).
 """
 
 from __future__ import annotations
@@ -51,6 +60,7 @@ import contextlib
 import os
 import shutil
 import uuid
+from urllib.parse import urlsplit
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -63,9 +73,29 @@ from clickhouse_batcher_spark.sources.layout import partitions_for
 from clickhouse_batcher_spark.sources.readers import read_parquet
 
 
+# Hadoop output-committer option: no ``_SUCCESS`` file in the output
+# directory, for writes whose commit is recorded elsewhere.
+MARK_SUCCESS = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+
+
+def _local_root(root: str) -> str:
+    """``root`` as a local path: a ``file:`` URI becomes its path, and
+    any other scheme raises ``ValueError``."""
+    parts = urlsplit(root)
+    if parts.scheme == "file" and parts.netloc in ("", "localhost"):
+        return parts.path
+    if len(parts.scheme) > 1:  # one letter is a Windows drive
+        raise ValueError(
+            f"parquet sink root {root!r}: only local paths and file: URIs are "
+            "supported; the ledger is kept on the driver's disk "
+            "(ROADMAP.md D12)"
+        )
+    return root
+
+
 class IdempotentParquetSink(BatchSink):
     def __init__(self, root: str) -> None:
-        self.root = root.rstrip("/")
+        self.root = _local_root(root).rstrip("/")
         self.data_dir = f"{self.root}/data"
         self.ledger_dir = f"{self.root}/_ledger"
         self.retired_dir = f"{self.root}/_retired"  # made by compact()
@@ -146,7 +176,7 @@ class IdempotentParquetSink(BatchSink):
         obs = Observation()
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
             "overwrite"
-        ).parquet(batch_dir)
+        ).option(MARK_SUCCESS, "false").parquet(batch_dir)
         rows = obs.get["rows"]
         if rows == 0:
             # reference empty-skip (hashes.go:79): no data, no marker —

@@ -37,6 +37,7 @@ from clickhouse_batcher_spark.operators.dedup import (
     shingle_set,
     tokenized_corpus,
 )
+from clickhouse_batcher_spark.sinks.parquet_sink import MARK_SUCCESS
 
 
 def build_band_index(docs: DataFrame) -> DataFrame:
@@ -141,7 +142,8 @@ def _ingest_batch(
     index read takes only the partitions with ``_batch_id < batch_id``
     — a replayed batch never sees the signatures its crashed
     predecessor may have half committed, so the output is
-    bit-identical under any replay schedule."""
+    bit-identical under any replay schedule. The stream's commit log
+    commits the batch, so neither write leaves a ``_SUCCESS`` file."""
     spark = batch.sparkSession
     # In-row signatures: bit-identical to the batch path, zero
     # shuffles. Cut before any join: each side of the within-batch
@@ -174,10 +176,12 @@ def _ingest_batch(
                     ["band_id", "band_sig"],
                 ).select("doc_id", "index_doc_id")
             )
-        matches.distinct().write.mode("overwrite").parquet(
+        matches.distinct().write.mode("overwrite").option(MARK_SUCCESS, "false").parquet(
             f"{out_dir}/_batch_id={batch_id}"
         )
-        sigs.write.mode("overwrite").parquet(f"{index_dir}/_batch_id={batch_id}")
+        sigs.write.mode("overwrite").option(MARK_SUCCESS, "false").parquet(
+            f"{index_dir}/_batch_id={batch_id}"
+        )
     finally:
         memo.release(sigs, f"near-dup gate batch {batch_id}")
 

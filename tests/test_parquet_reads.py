@@ -455,3 +455,36 @@ def test_compaction_failing_before_its_commit_keeps_the_old_batches(spark, tmp_p
     assert sink.compact(spark, target_files=1) == -1
     assert sink.committed_batches() == [-1]
     assert sink.count(spark) == sink.read(spark).count() == 30
+
+
+def test_file_uri_root_keeps_the_ledger_beside_the_data(spark, tmp_path, monkeypatch):
+    """A ``file:`` URI root is its local path: the ledger lands beside
+    the data, not under a relative ``file:`` directory in the working
+    directory."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    root = tmp_path / "sink"
+    sink = IdempotentParquetSink(root.as_uri())
+    assert sink.root == str(root)
+    eng = BatcherEngine(spark, sink, SCHEMA, EngineConfig(max_batch_rows=40))
+    rows = [(f"u{i % 3}", i, str(i)) for i in range(50)]
+    for row in rows:
+        eng.save_async(row)
+    eng.flush()
+    assert sink.committed_batches() == [0, 1]
+    assert sorted(os.listdir(root / "_ledger")) == ["0", "1"]
+    _check_q1_q2_q3(eng, rows)
+    # a committed replay is a no-op, through either write
+    assert not _write(spark, sink, "write_table", 0, 50, 0)
+    assert not _write(spark, sink, "write_batch", 0, 50, 1)
+    assert eng.count() == eng.read().count() == 50
+    assert os.listdir(cwd) == []
+
+
+@pytest.mark.parametrize("root", ["hdfs://x", "s3a://bucket/sink", "file://host/sink"])
+def test_non_local_root_is_refused(tmp_path, monkeypatch, root):
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="D12"):
+        IdempotentParquetSink(root)
+    assert os.listdir(tmp_path) == []

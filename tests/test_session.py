@@ -4,7 +4,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from clickhouse_batcher_spark.session import ICU_CASE_MAPPINGS, tune_session
+from clickhouse_batcher_spark.session import (
+    CHECKPOINT_FILE_MANAGER,
+    FILESYSTEM_CHECKPOINT_MANAGER,
+    ICU_CASE_MAPPINGS,
+    tune_session,
+)
 
 # lower() inputs whose ICU and JVM case mappings could plausibly differ.
 CASE_CORPUS = [
@@ -71,3 +76,32 @@ def test_sessions_use_jvm_case_mapping(spark):
         assert spark.conf.get(ICU_CASE_MAPPINGS) == "false"
     finally:
         spark.conf.set(ICU_CASE_MAPPINGS, "false")
+
+
+def test_sessions_checkpoint_through_the_filesystem_manager(spark, tmp_path):
+    """get_session sets the FileSystem checkpoint manager, and Spark
+    builds that manager for a checkpoint path under the session's conf.
+    The conf is internal to Spark: if an upgrade moves the class, this
+    fails instead of streams falling back to the default manager."""
+    assert spark.conf.get(CHECKPOINT_FILE_MANAGER) == FILESYSTEM_CHECKPOINT_MANAGER
+    jvm = spark._jvm
+    jvm.java.lang.Class.forName(FILESYSTEM_CHECKPOINT_MANAGER)  # raises if moved
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt")),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == FILESYSTEM_CHECKPOINT_MANAGER
+
+
+def test_tune_session_sets_checkpoint_manager_only_when_unset(spark):
+    custom = "org.example.StoreCheckpointFileManager"
+    try:
+        spark.conf.unset(CHECKPOINT_FILE_MANAGER)
+        assert spark.conf.get(CHECKPOINT_FILE_MANAGER, None) is None
+        tune_session(spark)
+        assert spark.conf.get(CHECKPOINT_FILE_MANAGER) == FILESYSTEM_CHECKPOINT_MANAGER
+        spark.conf.set(CHECKPOINT_FILE_MANAGER, custom)
+        tune_session(spark)
+        assert spark.conf.get(CHECKPOINT_FILE_MANAGER) == custom
+    finally:
+        spark.conf.set(CHECKPOINT_FILE_MANAGER, FILESYSTEM_CHECKPOINT_MANAGER)

@@ -1200,3 +1200,52 @@ def test_quantile_streaming_equivalence(
         ).collect()
     }
     assert streamed == batch
+
+
+def _batch_files(batch_dir: str) -> tuple[int, list[str]]:
+    """The parquet files of a batch directory and its other names."""
+    names = os.listdir(batch_dir)
+    parquet = [n for n in names if n.endswith(".parquet")]
+    return len(parquet), sorted(n for n in names if not n.endswith((".parquet", ".crc")))
+
+
+def test_ledgered_writes_leave_no_success_file(spark, sf_dir, tmp_root):
+    """The ledger marker (sink) and the stream's commit log (gate) are
+    the commit, so a drained, replayed or compacted sink batch and a
+    gate batch hold their parquet files and no ``_SUCCESS``. Each
+    marker still equals its batch's rows."""
+    events = load_table(spark, sf_dir, "events").limit(90)
+    src = f"{tmp_root}/src"
+    events.repartition(3).write.parquet(src)
+    sink = IdempotentParquetSink(f"{tmp_root}/sink")
+    batcher = MicroBatcher(sink, BatcherConfig(trigger_interval="0 seconds"))
+    batcher.run_until_drained(batcher.file_source(spark, src, events.schema), f"{tmp_root}/ckpt")
+    assert sink.committed_batches() == [0, 1, 2]
+
+    def check(batch_id: int) -> int:
+        batch_dir = sink._batch_dir(batch_id)
+        files, other = _batch_files(batch_dir)
+        assert files and other == [], (batch_id, other)
+        with open(sink._marker(batch_id)) as fh:
+            marker = int(fh.read())
+        assert marker == spark.read.parquet(batch_dir).count()
+        return marker
+
+    assert sum(check(b) for b in (0, 1, 2)) == 90
+    # An uncommitted replay overwrites the crashed attempt's directory,
+    # its _SUCCESS included.
+    events.limit(10).write.parquet(sink._batch_dir(3))
+    assert "_SUCCESS" in os.listdir(sink._batch_dir(3))
+    assert sink.write_batch(events.limit(40), 3)
+    assert check(3) == 40
+    new_id = sink.compact(spark, target_files=1)
+    assert check(new_id) == sink.count(spark) == 130
+
+    from clickhouse_batcher_spark.streaming.neardup import _ingest_batch
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    idx, out = f"{tmp_root}/idx", f"{tmp_root}/out"
+    _ingest_batch(idx, out, docs, 0)
+    for batch_dir in (f"{idx}/_batch_id=0", f"{out}/_batch_id=0"):
+        files, other = _batch_files(batch_dir)
+        assert files and other == [], (batch_dir, other)
