@@ -20,8 +20,11 @@ carried in its ``sha256sum`` column (``hashes.go:25``);
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 # Decimal wide enough for sums over billions of rows of money-scale
 # values without overflow: 38 total digits, 6 fractional.
@@ -93,6 +96,121 @@ def portable_hash64(col: Column | str, salt: str = "") -> Column:
     return F.conv(F.substring(F.sha2(salted, 256), 1, 15), 16, 10).cast("bigint")
 
 
+# Rows the driver draws per bucket to place the scan's bucket bounds
+# (Spark's RangePartitioner draws ~60 per partition). The sample size
+# depends on the bucket count alone, never on the input size.
+_SCAN_SAMPLE_PER_BUCKET = 60
+
+
+def _literal(v, dtype) -> Column:
+    """``v``, collected from a column of type ``dtype``, as an exact
+    literal of that type. PySpark collects a timestamp as local wall
+    time, and ``F.lit`` maps that back with ``mktime``, which drops the
+    DST fold: two bounds in a repeated hour could swap order."""
+    if isinstance(v, datetime.datetime):
+        if isinstance(dtype, TimestampType):
+            v = v.astimezone(datetime.timezone.utc)  # honours the fold
+        return F.lit(v.isoformat(" ")).cast(dtype)
+    return F.lit(v).cast(dtype)
+
+
+def _row_bucket(df, keys: list, buckets: int) -> Column:
+    """Bucket in ``[0, buckets)`` of each row: the number of bounds
+    that sort strictly below the row's ``struct(keys)``.
+
+    The bounds are drawn once, on the driver, from a random sample of
+    ``_SCAN_SAMPLE_PER_BUCKET * buckets`` rows (a per-task top-k on a
+    random key, not a sort of the input), and enter the plan as typed
+    struct literals. A row's bucket is therefore a function of the row
+    alone: every plan branch that evaluates it agrees, under any column
+    pruning, exchange reuse, AQE setting or partition count, and bucket
+    b holds strictly lower keys than bucket b+1. The bounds steer only
+    the balance of the buckets, never the result.
+    """
+    key = F.struct(*[k.alias(f"k{i}") for i, k in enumerate(keys)])
+    bounds = []
+    if buckets > 1:
+        keyed = df.select(key.alias("k"))
+        fields = keyed.schema["k"].dataType.fields
+        n = _SCAN_SAMPLE_PER_BUCKET * buckets
+        sample = keyed.orderBy(F.rand(0)).limit(n).orderBy("k").collect()
+        cuts = {len(sample) * j // buckets for j in range(1, buckets)} if sample else ()
+        bounds = [
+            F.struct(*[_literal(v, f.dataType) for v, f in zip(sample[c].k, fields)])
+            for c in sorted(cuts)
+        ]
+
+    def pick(lo: int, hi: int) -> Column:
+        # The row's bucket lies in [lo, hi]: a balanced CASE tree, so
+        # each row makes log2(buckets) comparisons.
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return F.when(key <= bounds[mid], pick(lo, mid)).otherwise(
+            pick(mid + 1, hi)
+        )
+
+    return pick(0, len(bounds))
+
+
+# A fold's monoid: the aggregate run within a bucket and over the bucket
+# totals, and how a row's bucket offset and in-bucket running value
+# combine (either is NULL over an empty frame).
+_SUM = (
+    F.sum,
+    lambda off, run: F.coalesce(off, F.lit(0)) + F.coalesce(run, F.lit(0)),
+)
+_MAX = (F.max, F.greatest)  # greatest() skips NULLs
+
+
+def _ordered_scan(df, cols: list, folds: dict, num_partitions, exclusive=False):
+    """Exact running aggregates in the total order given by ``cols``
+    (ascending column names or columns), WITHOUT a single-partition
+    global sort: the one two-level scan under ``with_global_index``,
+    ``with_global_cumsum`` and ``with_global_cummax``.
+
+    ``folds`` maps each output name to ``(monoid, value column)``.
+    ``_row_bucket`` cuts the rows into ``num_partitions`` ordered
+    buckets. The per-bucket totals and the in-bucket running windows
+    both read that one bucket column, and a broadcast prefix over the
+    (<= num_partitions) bucket totals lifts each in-bucket value to the
+    global one. ``exclusive`` ends every running frame before the row.
+
+    A naive ``Window.orderBy(cols)`` moves every row through one task
+    (WindowExec's "Moving all data to a single partition"), the
+    canonical 100-TB scale-killer; here the in-bucket windows run in
+    parallel over a range shuffle of the bucket column.
+    """
+    from pyspark.sql.window import Window
+
+    if num_partitions is None:
+        num_partitions = df.sparkSession.sparkContext.defaultParallelism
+    keys = [F.col(c) if isinstance(c, str) else c for c in cols]
+    # <= num_partitions rows: this global window is bounded.
+    earlier = Window.orderBy("_scan_b").rowsBetween(Window.unboundedPreceding, -1)
+    within = (
+        Window.partitionBy("_scan_b")
+        .orderBy(*keys)
+        .rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0)
+    )
+    totals, prefix, running, temps, out = [], [], [], ["_scan_b"], {}
+    for i, (name, ((agg, combine), value)) in enumerate(folds.items()):
+        t, o, r = f"_scan_t{i}", f"_scan_o{i}", f"_scan_r{i}"
+        totals.append(agg(value).alias(t))
+        prefix.append(agg(t).over(earlier).alias(o))
+        running.append(agg(value).over(within).alias(r))
+        out[name] = combine(F.col(o), F.col(r))
+        temps += [o, r]
+    b = df.withColumn("_scan_b", _row_bucket(df, keys, num_partitions))
+    offsets = b.groupBy("_scan_b").agg(*totals).select("_scan_b", *prefix)
+    ranged = b.repartitionByRange(num_partitions, "_scan_b").select("*", *running)
+    return (
+        ranged.join(F.broadcast(offsets), "_scan_b")
+        .withColumns(out)
+        .drop(*temps)
+    )
+
+
 def with_global_index(
     df,
     cols: list,
@@ -100,46 +218,14 @@ def with_global_index(
     num_partitions: int | None = None,
 ):
     """Exact 0-based global row index in the total order given by
-    ``cols`` — WITHOUT a single-partition global sort.
+    ``cols``: the exclusive running count of ``_ordered_scan``.
 
     ``cols`` must define a total order (include a unique tiebreaker),
     or indices within a tie group are arbitrary.
-
-    The classic distributed pattern: ``repartitionByRange`` range-sorts
-    across partitions (partition p holds strictly lower keys than
-    p+1), per-partition ``row_number`` numbers locally in parallel,
-    and a broadcast cumulative partition-count offset lifts the local
-    number to the exact global index. Costs one range shuffle plus one
-    hash shuffle on the partition id — both fully parallel — where the
-    naive ``Window.orderBy(cols)`` funnels every row through ONE task
-    (WindowExec warns "Moving all data to a single partition"), which
-    is the canonical 100-TB scale-killer. The index itself is
-    boundary-independent, so range-sampling variation cannot change
-    the result.
     """
-    from pyspark.sql.window import Window
-
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(num_partitions, *cols).withColumn(
-        "_gidx_pid", F.spark_partition_id()
+    return _ordered_scan(
+        df, cols, {index_name: (_SUM, F.lit(1))}, num_partitions, exclusive=True
     )
-    counts = ranged.groupBy("_gidx_pid").agg(F.count(F.lit(1)).alias("_gidx_cnt"))
-    # The offsets frame has at most num_partitions rows; a global
-    # window over it is bounded and cheap.
-    wo = Window.orderBy("_gidx_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_gidx_pid",
-        F.coalesce(F.sum("_gidx_cnt").over(wo), F.lit(0)).cast("bigint").alias("_gidx_off"),
-    )
-    wp = Window.partitionBy("_gidx_pid").orderBy(*cols)
-    numbered = ranged.withColumn("_gidx_rn", F.row_number().over(wp))
-    out = numbered.join(F.broadcast(offsets), "_gidx_pid").withColumn(
-        index_name,
-        (F.col("_gidx_off") + F.col("_gidx_rn") - F.lit(1)).cast("bigint"),
-    )
-    return out.drop("_gidx_pid", "_gidx_rn", "_gidx_off")
 
 
 def with_global_cumsum(
@@ -150,71 +236,19 @@ def with_global_cumsum(
     num_partitions: int | None = None,
 ):
     """Exact INCLUSIVE running sum(s) in the total order given by
-    ``cols`` — the two-level sibling of ``with_global_index`` (range
-    shuffle + per-partition running sums + broadcast partition SUM
-    offsets) replacing the single-partition ``Window.orderBy``
-    cumulative sum, the other canonical 100-TB scale-killer.
+    ``cols`` (unique tiebreaker included), a fold of ``_ordered_scan``.
 
     ``values`` is a single column name (output named ``cumsum_name``)
-    or a ``{value_col: output_name}`` mapping — every requested
-    running sum rides the SAME range shuffle and window pass.
-    ``cols`` must define a total order (unique tiebreaker included).
-    NULL values contribute 0 by contract (the running sum is the
-    total of non-nulls so far — never a NULL output). Integer/decimal
-    sums are exact under any partitioning, so the result is
-    partitioning-independent; for doubles prefer routing through
-    decimal first (the repo-wide determinism contract).
+    or a ``{value_col: output_name}`` mapping; every running sum rides
+    the same scan. NULL values contribute 0 by contract (the running
+    sum is the total of non-nulls so far, never a NULL output).
+    Integer/decimal sums are exact under any bucketing; for doubles
+    route through decimal first (the repo-wide determinism contract).
     """
-    from pyspark.sql.window import Window
-
     if isinstance(values, str):
         values = {values: cumsum_name}
-    names = list(values.items())
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(num_partitions, *cols).withColumn(
-        "_gcs_pid", F.spark_partition_id()
-    )
-    partials = ranged.groupBy("_gcs_pid").agg(
-        *[
-            F.sum(F.coalesce(F.col(v), F.lit(0))).alias(f"_gcs_sum_{i}")
-            for i, (v, _) in enumerate(names)
-        ]
-    )
-    # <= num_partitions rows: the global window here is bounded.
-    wo = Window.orderBy("_gcs_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = partials.select(
-        "_gcs_pid",
-        *[
-            F.coalesce(F.sum(f"_gcs_sum_{i}").over(wo), F.lit(0)).alias(
-                f"_gcs_off_{i}"
-            )
-            for i in range(len(names))
-        ],
-    )
-    wp = (
-        Window.partitionBy("_gcs_pid")
-        .orderBy(*cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    run = ranged.select(
-        "*",
-        *[
-            F.sum(F.coalesce(F.col(v), F.lit(0))).over(wp).alias(f"_gcs_run_{i}")
-            for i, (v, _) in enumerate(names)
-        ],
-    )
-    out = run.join(F.broadcast(offsets), "_gcs_pid")
-    for i, (_, name) in enumerate(names):
-        out = out.withColumn(
-            name, F.col(f"_gcs_off_{i}") + F.col(f"_gcs_run_{i}")
-        )
-    return out.drop(
-        "_gcs_pid",
-        *[f"_gcs_run_{i}" for i in range(len(names))],
-        *[f"_gcs_off_{i}" for i in range(len(names))],
-    )
+    folds = {n: (_SUM, F.coalesce(F.col(v), F.lit(0))) for v, n in values.items()}
+    return _ordered_scan(df, cols, folds, num_partitions)
 
 
 def with_global_cummax(
@@ -225,74 +259,15 @@ def with_global_cummax(
     num_partitions: int | None = None,
     exclusive: bool = False,
 ):
-    """Exact running MAX(s) in the total order given by ``cols`` — the
-    max-monoid sibling of ``with_global_cumsum`` (range shuffle +
-    per-partition running max + broadcast preceding-partition max
-    offsets), again replacing the single-partition ``Window.orderBy``
-    running aggregate at scale.
+    """Exact running MAX(s) in the total order given by ``cols``
+    (unique tiebreaker included), a fold of ``_ordered_scan``.
 
-    ``exclusive=True`` gives the STRICTLY-PRECEDING running max (NULL
-    for the global first row): per-partition windows end at -1 and the
-    partition offset is the max over strictly earlier partitions, so
-    exclusivity survives partition boundaries exactly. MAX is an
-    order-insensitive monoid, so the result is partitioning-
-    independent for any comparable type (no decimal routing needed).
-    ``cols`` must define a total order (unique tiebreaker included).
+    ``values`` is as in ``with_global_cumsum``. ``exclusive=True``
+    gives the STRICTLY-PRECEDING running max (NULL for the global first
+    row). MAX is an order-insensitive monoid, so the result is exact
+    for any comparable type.
     """
-    from pyspark.sql.window import Window
-
     if isinstance(values, str):
         values = {values: cummax_name}
-    names = list(values.items())
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(num_partitions, *cols).withColumn(
-        "_gcm_pid", F.spark_partition_id()
-    )
-    partials = ranged.groupBy("_gcm_pid").agg(
-        *[
-            F.max(F.col(v)).alias(f"_gcm_max_{i}")
-            for i, (v, _) in enumerate(names)
-        ]
-    )
-    # <= num_partitions rows: the global window here is bounded.
-    wo = Window.orderBy("_gcm_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = partials.select(
-        "_gcm_pid",
-        *[
-            F.max(f"_gcm_max_{i}").over(wo).alias(f"_gcm_off_{i}")
-            for i in range(len(names))
-        ],
-    )
-    end = -1 if exclusive else 0
-    wp = (
-        Window.partitionBy("_gcm_pid")
-        .orderBy(*cols)
-        .rowsBetween(Window.unboundedPreceding, end)
-    )
-    run = ranged.select(
-        "*",
-        *[
-            F.max(F.col(v)).over(wp).alias(f"_gcm_run_{i}")
-            for i, (v, _) in enumerate(names)
-        ],
-    )
-    out = run.join(F.broadcast(offsets), "_gcm_pid")
-    for i, (_, name) in enumerate(names):
-        out = out.withColumn(
-            name,
-            # greatest() skips NULLs only when one side is NULL on
-            # some engines; be explicit so exclusive-first-row NULLs
-            # propagate and mixed NULL/value takes the value.
-            F.when(F.col(f"_gcm_run_{i}").isNull(), F.col(f"_gcm_off_{i}"))
-            .when(F.col(f"_gcm_off_{i}").isNull(), F.col(f"_gcm_run_{i}"))
-            .otherwise(
-                F.greatest(F.col(f"_gcm_run_{i}"), F.col(f"_gcm_off_{i}"))
-            ),
-        )
-    return out.drop(
-        "_gcm_pid",
-        *[f"_gcm_run_{i}" for i in range(len(names))],
-        *[f"_gcm_off_{i}" for i in range(len(names))],
-    )
+    folds = {n: (_MAX, F.col(v)) for v, n in values.items()}
+    return _ordered_scan(df, cols, folds, num_partitions, exclusive)

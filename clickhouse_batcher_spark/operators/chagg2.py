@@ -1350,9 +1350,9 @@ def user_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank assignment (and hence the statistic) is engine-independent.
 
     The ordered pass runs over |users| aggregate rows, not raw events,
-    and the rank itself is the exact two-level global index
-    (``with_global_index``: range shuffle + per-partition row_number +
-    broadcast offsets) — never a single-partition Window.orderBy, so
+    and the rank itself is the exact global index of the two-level
+    ordered scan (``with_global_index``) — never a single-partition
+    Window.orderBy, so
     the shape survives any user count. rank*count products are
     integer-valued doubles (exact, order-independent), so the final
     sums are partitioning-independent.

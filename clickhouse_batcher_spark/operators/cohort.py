@@ -122,11 +122,9 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak, so the assignment is engine-independent; monetary sums
     are decimal-exact first.
 
-    Each metric's rank is the exact two-level global index
-    (``with_global_index`` — range shuffle + parallel per-partition
-    row_number + broadcast offsets): three fully-parallel range
-    shuffles over |customers| aggregate rows, never a single-partition
-    Window.orderBy (round-7 upgrade; identical assignment).
+    Each metric's rank is the exact global index of the two-level
+    ordered scan (``with_global_index``) over |customers| aggregate
+    rows, never a single-partition Window.orderBy.
     """
     from clickhouse_batcher_spark.functions import with_global_index
 
@@ -139,13 +137,11 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("monetary"),
     )
     nrow = base.agg(F.count(F.lit(1)).alias("_n"))
-    # ONE range shuffle for all three ranks (round-14, guide §2.4;
-    # previously three chained with_global_index passes = three range
-    # shuffles + three boundary-sampling jobs over the same frame):
-    # stack each customer's three metrics as (mid, val, custkey) rows —
-    # the orderings are embedded injectively in a shared double `val`
-    # (date -> epoch days, count -> exact small integer, monetary is
-    # already the double the quartile ranks) — and take ONE global
+    # ONE ordered scan for all three ranks: stack each customer's three
+    # metrics as (mid, val, custkey) rows — the orderings are embedded
+    # injectively in a shared double `val` (date -> epoch days, count
+    # -> exact small integer, monetary is already the double the
+    # quartile ranks) — and take ONE global
     # index over (mid, val, custkey). With mid leading the sort key,
     # the index restricted to metric `mid` is `mid * n + rank-within-
     # metric`, so each quartile is ((gidx - mid*n) * 4) div n + 1 —

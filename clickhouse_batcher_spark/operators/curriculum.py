@@ -8,7 +8,7 @@ curation, each here as an exact, oracle-checked relational plan:
   bucketed-batching trade (sorting by length makes batches
   length-homogeneous, so the per-batch pad-to-max wastes far fewer
   slots). Two exact global orderings via ``with_global_index`` — the
-  two-level range-shuffle pattern, never a single-partition window.
+  two-level ordered scan, never a single-partition window.
 - ``docs_code_switch_report``: per-document language-mixture signal
   over the langid marker sets (hits per language, Shannon entropy of
   the marker distribution, mixed flag) — the code-switching filter
@@ -88,8 +88,8 @@ def length_sorted_packing_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-ppm waste ratio (integer division: engine-exact, the
     repo's cross-engine ratio convention).
 
-    Both orderings are exact global indexes via the two-level range
-    shuffle (``with_global_index``), so the plan holds at any corpus
+    Both orderings are exact global indexes of the two-level ordered
+    scan (``with_global_index``), so the plan holds at any corpus
     size; the per-batch aggregate shuffles (batch, len) pairs only.
     """
     docs = load_table(spark, sf_dir, "documents")
@@ -275,9 +275,8 @@ def shingle_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A flattening curve says additional data from this source stops
     buying n-gram diversity — the collect-more-or-stop input to data
-    mixing. Running sums are the two-level ``with_global_cumsum``
-    (range shuffle + bounded offset broadcast), never a
-    single-partition window."""
+    mixing. Running sums are folds of the two-level ordered scan
+    (``with_global_cumsum``), never a single-partition window."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("tokens")).filter(
         F.size("tokens") >= SHINGLE_K

@@ -199,13 +199,12 @@ def concat_block_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     everywhere except the final block — zero padding by
     construction).
 
-    Offsets come from ``with_global_cumsum`` — the two-level exact
-    running sum (range shuffle + per-partition windows + broadcast
-    partition offsets), fully parallel where a bare ``Window.orderBy``
-    would funnel every row through one task; each doc then explodes to
-    exactly the ceil(n/B)-ish blocks it overlaps. Token counts are
-    integers, so the cumsum is partitioning-independent and
-    bit-identical to the single-window form.
+    Offsets come from ``with_global_cumsum`` — the exact running sum
+    of the two-level ordered scan, fully parallel where a bare
+    ``Window.orderBy`` would funnel every row through one task; each
+    doc then explodes to exactly the ceil(n/B)-ish blocks it overlaps.
+    Token counts are integers, so the cumsum is partitioning-independent
+    and bit-identical to the single-window form.
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
@@ -616,8 +615,8 @@ def dup_pair_training_spacing(spark: SparkSession, sf_dir: str) -> DataFrame:
     learning rate on that content, while widely-spaced ones act as
     natural review. Plan shape: the pair frame is the memoized
     bucketed-LSH relation (never all-pairs), the global rank is the
-    two-level ``with_global_index`` (range shuffle + broadcast
-    offsets — no single-partition window), and the two rank lookups
+    ``with_global_index`` of the two-level ordered scan (no
+    single-partition window), and the two rank lookups
     are keyed joins on doc id.
     """
     from clickhouse_batcher_spark.functions import with_global_index

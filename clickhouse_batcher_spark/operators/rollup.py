@@ -151,8 +151,9 @@ def parts_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer ppm (the repo's HUGEINT-free hash convention).
 
     Scale: per-part revenue is one map-side-combinable groupBy; the
-    cumulative sum over the part frame uses ``with_global_cumsum``'s
-    two-level range shuffle (never a single-partition window); the
+    cumulative sum over the part frame is a fold of the two-level
+    ordered scan (``with_global_cumsum``, never a single-partition
+    window); the
     final rollup is 3 rows.
     """
     from clickhouse_batcher_spark.functions import with_global_cumsum

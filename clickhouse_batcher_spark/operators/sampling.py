@@ -286,8 +286,8 @@ def perplexity_bucket_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the logprob metric is the existing shuffle-minimal
     aggregate; the decile assignment uses the exact distributed global
-    index (``with_global_index`` — range shuffle + per-partition
-    row_number, NEVER a single-partition global window), so ranking
+    index (``with_global_index``, a fold of the two-level ordered scan,
+    NEVER a single-partition global window), so ranking
     100 TB of docs stays fully parallel. The total count joins in as a
     broadcast 1-row frame, the keep decision is a pure column hash
     (reproducible across runs and engines), and the result aggregates

@@ -14,8 +14,8 @@ points all survive (the standard skyline convention).
 
 2-D sweep, distributed: group rows by price (gmax = max date per
 price), then the strictly-greater-price running max of gmax — computed
-by ``with_global_cummax(exclusive=True)``'s two-level range-shuffle
-pass, NOT a single-partition window — decides dominance:
+by ``with_global_cummax(exclusive=True)``, a fold of the two-level
+ordered scan, NOT a single-partition window — decides dominance:
 
     on_skyline(p)  <=>  p.date == gmax(p.price)           (within-price)
                     AND (m1(p.price) IS NULL OR m1 < p.date)  (cross-price)

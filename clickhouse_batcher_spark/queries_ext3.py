@@ -105,9 +105,9 @@ def orders_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``F.ntile`` over an unpartitioned window single-partitions the
     whole table (WindowExec's "Moving all data to a single partition"
-    warning — the r3 parity log showed it). Instead: exact global row
-    index via range-repartition + per-partition offsets
-    (``with_global_index``), then ntile's bucket arithmetic applied as
+    warning — the r3 parity log showed it). Instead: the exact global
+    row index of the two-level ordered scan (``with_global_index``),
+    then ntile's bucket arithmetic applied as
     a column expression — SQL-standard semantics: with n rows and b
     buckets, the first n%b buckets get n/b+1 rows, the rest n/b —
     reproduced bit-exactly so the DuckDB ntile oracle still matches.

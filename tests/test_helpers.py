@@ -5,6 +5,7 @@ from __future__ import annotations
 import subprocess
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_batcher_spark.functions import portable_hash64
@@ -254,107 +255,169 @@ def test_with_global_cumsum_matches_single_window(spark, sf_dir):
         assert got == naive
 
 
-def test_with_global_cumsum_multi_and_null_contract(spark):
-    """One range shuffle serves several running sums, and NULL values
-    contribute 0 (never a NULL output) regardless of where the NULL
-    lands in the range partitioning."""
-    from clickhouse_batcher_spark.functions import with_global_cumsum
+def _scan_input(spark, name):
+    """(frame, order keys) for the ordered-scan property test.
 
-    rows = [(1, None, 10), (2, 5, None), (3, 7, 30)]
-    df = spark.createDataFrame(rows, "k INT, a INT, b INT")
-    got = {
-        r["k"]: (r["ca"], r["cb"])
-        for r in with_global_cumsum(
-            df.repartition(3), {"a": "ca", "b": "cb"}, ["k"]
-        ).collect()
-    }
-    assert got == {1: (0, 10), 2: (5, 10), 3: (12, 40)}
+    ``agg100k``: 100k rows out of a hash aggregate, so every recompute
+    delivers them in a new order and range sampling is forced; a
+    float key with ties, NULLs and NaNs, a unique ``uid`` tiebreak,
+    NULL values, and a ``w`` payload that no key reads.
+    ``rows12``: twelve rows with tied keys and NULL values (the first
+    row in key order has a NULL ``w``), keyed by columns, not names.
+    """
+    if name == "rows12":
+        df = spark.createDataFrame(
+            list(
+                zip(
+                    [5, 1, 3, 3, 2, 2, 2, 9, 0, 7, 7, 4],
+                    [2, None, 4, 4, 8, 1, 5, 0, 3, None, 6, 7],
+                    [None, 10, 30, 0, 1, None, 2, 3, None, 5, 6, 7],
+                    range(12),
+                )
+            ),
+            "k INT, v INT, w INT, uid INT",
+        )
+        return df, [F.col("k"), F.col("uid")]
+    n = 100_000
+    s = (
+        spark.range(0, 2 * n, numPartitions=4)
+        .groupBy((F.col("id") % n).alias("uid"))
+        .agg(F.sum("id").alias("s"))
+    )
+    df = s.select(
+        "uid",
+        F.expr(
+            "CASE WHEN uid % 101 = 0 THEN NULL"
+            " WHEN uid % 103 = 0 THEN double('NaN')"
+            " ELSE CAST(s * 7919 % 10007 AS DOUBLE) / 8 END"
+        ).alias("k"),
+        F.expr("CASE WHEN uid % 37 = 0 THEN NULL ELSE s % 1000 - 500 END").alias(
+            "v"
+        ),
+        (F.col("uid") % 17).alias("w"),
+    )
+    return df, ["k", "uid"]
 
 
-def test_with_global_index_matches_single_window(spark):
-    """Exact equivalence with the naive single-partition row_number
-    under several partition counts, including 1 and more partitions
-    than rows, plus duplicate sort keys broken by the tiebreaker."""
-    import pandas as pd
+@pytest.mark.parametrize(
+    "name,parts,aqe",
+    [("agg100k", p, aqe) for p in (2, 4, 8, 32) for aqe in (True, False)]
+    + [("rows12", p, True) for p in (1, 3, 64)],
+)
+def test_ordered_scan_matches_single_window(spark, name, parts, aqe):
+    """Global index, cumsum and inclusive/exclusive cummax equal a
+    single-partition ``Window.orderBy`` recompute at every bucket count
+    (1, more buckets than rows, and the sampled range 2..32), with AQE
+    on and off. The index is a permutation of 0..n-1 even when its
+    consumer reads a non-key column, so the scan's count and numbering
+    branches plan different exchanges. NULL values add 0 to a running
+    sum (never a NULL output); exclusive cummax is NULL on the first
+    row."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
-    from clickhouse_batcher_spark.functions import with_global_index
-
-    pdf = pd.DataFrame(
-        {
-            "k": [5, 1, 3, 3, 2, 2, 2, 9, 0, 7, 7, 4],
-            "uid": list(range(12)),
-        }
+    from clickhouse_batcher_spark.functions import (
+        with_global_cumsum,
+        with_global_cummax,
+        with_global_index,
     )
-    df = spark.createDataFrame(pdf)
-    w = Window.orderBy("k", "uid")
+
+    df, keys = _scan_input(spark, name)
+    incl = Window.orderBy(*keys).rowsBetween(Window.unboundedPreceding, 0)
+    excl = Window.orderBy(*keys).rowsBetween(Window.unboundedPreceding, -1)
     want = {
-        (r["k"], r["uid"]): r["i"]
-        for r in df.select(
-            "k", "uid", (F.row_number().over(w) - 1).alias("i")
-        ).collect()
-    }
-    for nparts in (1, 3, 64):
-        got = {
-            (r["k"], r["uid"]): r["gidx"]
-            for r in with_global_index(
-                df, ["k", "uid"], index_name="gidx", num_partitions=nparts
-            ).collect()
-        }
-        assert got == want, f"num_partitions={nparts}"
-
-
-def test_with_global_cummax_matches_single_partition_window(spark):
-    """Inclusive and exclusive two-level running max equal the naive
-    single-partition window at every partition count."""
-    import pandas as pd
-    from pyspark.sql import Window
-
-    from clickhouse_batcher_spark.functions import with_global_cummax
-
-    pdf = pd.DataFrame(
-        {
-            "k": [5, 1, 3, 3, 2, 2, 2, 9, 0, 7, 7, 4],
-            "v": [2, 9, 4, 4, 8, 1, 5, 0, 3, 6, 6, 7],
-            "uid": list(range(12)),
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    w_in = Window.orderBy("k", "uid").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    w_ex = Window.orderBy("k", "uid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    want = {
-        r["uid"]: (r["mi"], r["me"])
+        r[0]: tuple(r[1:])
         for r in df.select(
             "uid",
-            F.max("v").over(w_in).alias("mi"),
-            F.max("v").over(w_ex).alias("me"),
+            F.row_number().over(Window.orderBy(*keys)) - 1,
+            F.sum(F.coalesce("v", F.lit(0))).over(incl),
+            F.sum(F.coalesce("w", F.lit(0))).over(incl),
+            F.max("v").over(incl),
+            F.max("v").over(excl),
         ).collect()
     }
-    for nparts in (1, 3, 64):
-        inc = {
-            r["uid"]: r["m"]
-            for r in with_global_cummax(
-                df, {"v": "m"}, ["k", "uid"], num_partitions=nparts
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", str(aqe).lower())
+    try:
+        idx = with_global_index(df, keys, "gi", num_partitions=parts)
+        gi = {r.uid: r.gi for r in idx.select("uid", "gi", "w").collect()}
+        cs = {
+            r.uid: (r.cs, r.cs2)
+            for r in with_global_cumsum(
+                df, {"v": "cs", "w": "cs2"}, keys, num_partitions=parts
             ).collect()
         }
-        exc = {
-            r["uid"]: r["m"]
+        mi = {
+            r.uid: r.m
+            for r in with_global_cummax(df, "v", keys, "m", parts).collect()
+        }
+        me = {
+            r.uid: r.m
             for r in with_global_cummax(
-                df,
-                {"v": "m"},
-                ["k", "uid"],
-                num_partitions=nparts,
-                exclusive=True,
+                df, {"v": "m"}, keys, num_partitions=parts, exclusive=True
             ).collect()
         }
-        for uid, (mi, me) in want.items():
-            assert inc[uid] == mi, (nparts, uid)
-            assert exc[uid] == me, (nparts, uid)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert sorted(gi.values()) == list(range(len(want)))
+    got = {u: (gi[u], *cs[u], mi[u], me[u]) for u in want}
+    bad = [(u, want[u], got[u]) for u in want if got[u] != want[u]]
+    assert not bad, f"{len(bad)} rows differ, e.g. {bad[:3]}"
+    assert None not in {c for pair in cs.values() for c in pair}
+
+
+def test_ordered_scan_pins_nothing(spark, tmp_path):
+    """The scan cuts no lineage: running index, cumsum and cummax to
+    completion leaves the persistent RDDs as they were and writes no
+    checkpoint file, even with a checkpoint dir set. Most callers are
+    plain queries, so a cut there would stay pinned for the session."""
+    from clickhouse_batcher_spark.functions import (
+        with_global_cumsum,
+        with_global_cummax,
+        with_global_index,
+    )
+
+    sc = spark.sparkContext
+    df, keys = _scan_input(spark, "rows12")
+    before = sc._jsc.getPersistentRDDs().size()
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        for out in (
+            with_global_index(df, keys, num_partitions=3),
+            with_global_cumsum(df, "v", keys, num_partitions=3),
+            with_global_cummax(df, "v", keys, num_partitions=3, exclusive=True),
+        ):
+            assert out.count() == 12
+    finally:
+        scala_none = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(scala_none)
+    assert sc._jsc.getPersistentRDDs().size() == before
+    assert not [p for p in tmp_path.rglob("*") if p.is_file()]
+
+
+def test_scan_bounds_keep_timestamps_exact(spark, monkeypatch):
+    """A timestamp bound drawn across a DST fold comes back as the same
+    instant (and a TIMESTAMP_NTZ bound as the same wall time): the
+    bucket tree needs its bounds in key order, and PySpark's own
+    round trip maps both 01:30s of a repeated hour to one instant."""
+    import time
+
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+
+    from clickhouse_batcher_spark.functions import _literal
+
+    start = 1_730_610_000_000_000  # 2024-11-03 01:00 EDT
+    micros = [start + i * 1_800_000_000 + 7 * i for i in range(4)]
+    ts, ntz = TimestampType(), TimestampNTZType()
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        bounds = [_literal(ts.fromInternal(m), ts) for m in micros]
+        walls = [_literal(ntz.fromInternal(m), ntz) for m in micros]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    row = spark.range(1).select(*[F.unix_micros(b) for b in bounds], *walls).first()
+    assert list(row) == micros + [ntz.fromInternal(m) for m in micros]
 
 
 def test_pareto_skyline_matches_quadratic_definition(spark, sf_dir):

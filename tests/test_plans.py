@@ -287,13 +287,25 @@ def test_catalog_wide_no_cartesian_products(spark, sf_dir):
 
 
 def test_global_ranks_use_range_partitioning(spark, sf_dir):
-    """The round-7 two-level rank upgrades must stay two-level: the
-    quartile/gini rankings go through repartitionByRange (parallel),
-    and no full-data window may sit on a single-partition exchange.
-    A bounded SinglePartition exchange (the <=num_partitions offsets
-    frame) is fine; a RangePartitioning node proves the parallel path
-    is in the plan."""
-    for name in ("customer_rfm_segments", "user_activity_gini"):
+    """Every consumer of the ordered scan (global index, cumsum and
+    cummax) must stay two-level: its in-bucket windows run over a
+    repartitionByRange (parallel), and no full-data window may sit on
+    a single-partition exchange. A bounded SinglePartition exchange
+    (the <=num_partitions offsets frame) is fine; a RangePartitioning
+    node proves the parallel path is in the plan."""
+    for name in (
+        "orders_ntile_quartiles",
+        "perplexity_bucket_sample",
+        "parts_abc_classification",
+        "user_activity_gini",
+        "customer_rfm_segments",
+        "orders_pareto_skyline",
+        "concat_block_packing",
+        "dup_pair_training_spacing",
+        "vocab_growth_curve",
+        "length_sorted_packing_gain",
+        "shingle_novelty_curve",
+    ):
         plan = _formatted_plan(catalog.QUERIES[name](spark, sf_dir))
         assert "rangepartitioning" in plan.lower(), name
 
@@ -371,7 +383,7 @@ def test_no_broadcast_hints_on_sf_scaling_frames():
 #   caller-opt-in — hint behind an explicit caller flag, off by default
 _BROADCAST_HINT_ALLOWLIST: dict[tuple[str, str], str] = {
     ("functions/__init__.py", "offsets"):
-        "<= num_partitions rows by construction (global cumsum offsets)",
+        "<= num_partitions rows by construction (one per ordered-scan bucket)",
     ("operators/bloomjoin.py", "bloom"):
         "constant-size: packed bloom-bitmap words (fixed filter width)",
     ("operators/bloomjoin.py", "truth"):
