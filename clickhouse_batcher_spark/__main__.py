@@ -103,10 +103,8 @@ def main(argv: list[str] | None = None) -> int:
                 max_files_per_trigger=args.max_files_per_trigger,
             ),
         )
-        ckpt = tempfile.mkdtemp(prefix="chb_cli_ckpt_")
-        batcher.run_until_drained(
-            batcher.file_source(spark, args.src, schema), ckpt
-        )
+        source = batcher.file_source(spark, args.src, schema)
+        batcher.run_until_drained(source, tempfile.mkdtemp(prefix="chb_cli_ckpt_"))
         print(f"ingested; sink now holds {sink.count(spark)} rows "
               f"in batches {sink.committed_batches()}")
         return 0

@@ -211,13 +211,12 @@ class BatcherEngine:
         source_path: str,
         checkpoint_dir: str,
         trigger_interval: str = "1 second",
-        max_files_per_trigger: int | None | str = "auto",
+        max_files_per_trigger: int = 1,
     ):
         batcher = MicroBatcher(
             self.sink,
             BatcherConfig(
                 trigger_interval=trigger_interval,
-                max_batch_rows=self.config.max_batch_rows,
                 max_files_per_trigger=max_files_per_trigger,
                 enabled=self.config.enabled,
             ),

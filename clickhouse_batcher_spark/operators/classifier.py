@@ -207,9 +207,8 @@ def nb_train(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     broadcastable model — ``(llr, pri)`` where ``llr`` is the
     (bucket, lr DECIMAL(27,6)) log-likelihood-ratio table (<=
     NBQ_BUCKETS rows) and ``pri`` the 1-row prior frame. The split
-    from :func:`nb_score` is what lets the SAME model score a batch
-    corpus and a micro-batch stream (streaming/qualitygate.py) with
-    bit-identical results."""
+    from :func:`nb_score` lets one trained model score any number of
+    corpora with bit-identical results."""
     lab = _labeled(docs)
     bk = lab.select(
         "doc_id", "label", F.explode("toks").alias("token")
@@ -309,7 +308,7 @@ def nb_quality_scores(docs: DataFrame) -> DataFrame:
     as DECIMAL(27,6) of 6-rounded per-bucket ratios, so the score —
     and therefore the sign decision — is engine- and order-exact.
 
-    Round-14 (guide §1.2/§2.4): unlike the streaming gate's split
+    Round-14 (guide §1.2/§2.4): unlike the split
     ``nb_train``/``nb_score`` (train once, score many batches), this
     same-corpus path used to tokenize+teacher-label the corpus FOUR
     times and explode+hash the tokens TWICE inside one action (train's

@@ -155,9 +155,10 @@ def signature_bands(docsh: DataFrame) -> DataFrame:
     signature (``array_min`` over each permutation's hashes — nothing
     leaves the row) cut into MINHASH_BANDS bands. Duplicate shingles
     cannot move a MIN, so hashing the distinct array gives the
-    vocabulary path's signatures bit for bit. Expensive per row (16
-    interpreted sha2 folds): a consumer that reads the result twice —
-    a band self-join — should cut it with ``memo.materialize`` first."""
+    ``dedup_minhash_lsh`` oracle's ``bands`` rows (``SQL_BANDS``) bit
+    for bit. Expensive per row (16 interpreted sha2 folds): a consumer
+    that reads the result twice — a band self-join — should cut it
+    with ``memo.materialize`` first."""
     return _explode_bands(
         docsh.selectExpr("doc_id", f"{MINHASH_SIGNATURE_SQL} AS signature")
     )
@@ -350,44 +351,24 @@ def _minhash_salts_sql() -> str:
 
 _BAND_HEX = MINHASH_PERMS // MINHASH_BANDS * 16  # hex chars per band (16-char hash prefixes)
 
-
-def band_signatures(shingles: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_sig) LSH band signatures from a
-    (doc_id, shingle) relation — the vocabulary form of
-    :func:`signature_bands` (same permutation hash, same rows), used by
-    the static-index streaming detector (streaming/neardup.py) and as
-    the reference the in-row form is pinned against.
-
-    Hash each DISTINCT shingle once (the shingle vocabulary is orders
-    of magnitude smaller than (doc, shingle) occurrences), computing
-    all MINHASH_PERMS hashes in one projection, then join the hash
-    table back. The join carries NO broadcast hint: at web scale the
-    shingle vocabulary outgrows a broadcast, and a hint would foreclose
-    the flip — unhinted, AQE broadcasts while the vocabulary fits and
-    falls back to a shuffle join on `shingle` when it doesn't.
-    Per-permutation MIN aggregates with map-side partials — one narrow
-    shuffle of (doc_id, 16 hashes), no salt crossJoin row explosion.
-    """
-    shingle_hashes = shingles.select("shingle").distinct().select(
-        "shingle",
-        *[
-            F.expr(_perm_hash_sql(i, "shingle")).alias(f"h{i}")
-            for i in range(MINHASH_PERMS)
-        ],
-    )
-    hashes = shingles.join(shingle_hashes, "shingle").select(
-        "doc_id", *[f"h{i}" for i in range(MINHASH_PERMS)]
-    )
-    mh_row = hashes.groupBy("doc_id").agg(
-        *[F.min(f"h{i}").alias(f"mh{i}") for i in range(MINHASH_PERMS)]
-    )
-    sig = mh_row.select(
-        "doc_id",
-        F.concat(*[F.col(f"mh{i}") for i in range(MINHASH_PERMS)]).alias(
-            "signature"
-        ),
-    )
-    return _explode_bands(sig)
+# The dedup_minhash_lsh oracle's LSH bands over ``shingles``:
+# (doc_id, band_id, band_sig), the rows signature_bands is pinned
+# against bit for bit.
+SQL_BANDS = f"""
+salts AS ({_minhash_salts_sql()}),
+mh AS (
+  SELECT s.doc_id, sa.salt_id, MIN(substring(sha256(sa.salt || s.shingle), 1, 16)) AS mh
+  FROM shingles s CROSS JOIN salts sa GROUP BY s.doc_id, sa.salt_id
+),
+sig AS (
+  SELECT doc_id, string_agg(mh, '' ORDER BY salt_id) AS signature
+  FROM mh GROUP BY doc_id
+),
+bands AS (
+  SELECT doc_id, b AS band_id,
+         substring(signature, b * {_BAND_HEX} + 1, {_BAND_HEX}) AS band_sig
+  FROM sig, unnest(generate_series(0, {MINHASH_BANDS - 1})) AS t(b)
+)"""
 
 
 def _explode_bands(sig: DataFrame) -> DataFrame:
@@ -406,19 +387,16 @@ def _explode_bands(sig: DataFrame) -> DataFrame:
 
 
 def band_signatures_inline(docs: DataFrame) -> DataFrame:
-    """``band_signatures(shingle_set(tokenized_corpus(docs)))`` —
-    same salts, same hashes, bit-identical (doc_id, band_id,
-    band_sig) rows — computed WITHOUT a single shuffle.
+    """The (doc_id, band_id, band_sig) LSH bands of ``docs`` and their
+    truncated twins — the rows of the ``dedup_minhash_lsh`` oracle's
+    ``bands`` CTE (``SQL_BANDS``), bit for bit — computed WITHOUT a
+    single shuffle.
 
-    The batch pipeline hashes each distinct shingle once and
-    broadcast-joins the vocabulary back: right when the corpus is
-    large and shingles repeat across documents, pure overhead when
-    the input is a streaming micro-batch of a few hundred rows (the
-    vocab distinct + broadcast build + per-doc MIN aggregation cost
-    the at-ingestion gate ~2.5 s of fixed latency per micro-batch —
-    67% of its wall time, measured round 8). Here each row keeps its
-    distinct-shingle array and :func:`signature_bands` folds it in-row
-    (the equivalence test pins the bit-identity).
+    Each row keeps its distinct-shingle array and
+    :func:`signature_bands` folds it in-row, so a streaming micro-batch
+    pays no shuffle: a vocabulary join (hash each distinct shingle
+    once, join it back, MIN per doc) cost the at-ingestion gate ~2.5 s
+    of fixed latency per micro-batch (measured round 8).
     """
     return signature_bands(doc_shingle_arrays(tokenized_corpus(docs, spread=False)))
 
@@ -426,21 +404,7 @@ def band_signatures_inline(docs: DataFrame) -> DataFrame:
 @query(
     "dedup_minhash_lsh",
     oracle=f"""
-    WITH {SQL_CORPUS}, {SQL_SHINGLES}, {SQL_SIZES},
-    salts AS ({_minhash_salts_sql()}),
-    mh AS (
-      SELECT s.doc_id, sa.salt_id, MIN(substring(sha256(sa.salt || s.shingle), 1, 16)) AS mh
-      FROM shingles s CROSS JOIN salts sa GROUP BY s.doc_id, sa.salt_id
-    ),
-    sig AS (
-      SELECT doc_id, string_agg(mh, '' ORDER BY salt_id) AS signature
-      FROM mh GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, b AS band_id,
-             substring(signature, b * {_BAND_HEX} + 1, {_BAND_HEX}) AS band_sig
-      FROM sig, unnest(generate_series(0, {MINHASH_BANDS - 1})) AS t(b)
-    ),
+    WITH {SQL_CORPUS}, {SQL_SHINGLES}, {SQL_SIZES}, {SQL_BANDS},
     cand AS (
       SELECT DISTINCT b1.doc_id AS doc_a, b2.doc_id AS doc_b
       FROM bands b1 JOIN bands b2
@@ -475,7 +439,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @memo.shared
 def minhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Signatures come straight off the memoized per-doc shingle ARRAYS
-    # (the gate's signature_bands) instead of the batch vocab path's
+    # (the gate's signature_bands) instead of a vocabulary form's
     # distinct + hash join + 16-way MIN aggregate (three exchanges).
     # They are cut before the band self-join: unmaterialized, the 16
     # sha2 folds ran once per join side (no exchange reuse across a
@@ -565,7 +529,7 @@ def _simhash(corpus: DataFrame) -> DataFrame:
     SHA-256 per token occurrence is recomputed inline. Round-13
     measured the alternative (hash each DISTINCT corpus token once
     into a vocabulary dimension, join back, 64 map-side-combinable
-    vote SUMs — the band_signatures discipline) at 5.1 s vs 1.7 s for
+    vote SUMs — the vocabulary-join discipline) at 5.1 s vs 1.7 s for
     this fold at sf0.1: the explode + exchange + 64-wide aggregate
     overhead costs more than the duplicated hashing saves at any
     per-doc vocabulary this corpus reaches. On a corpus whose docs

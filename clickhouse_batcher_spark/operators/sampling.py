@@ -300,7 +300,9 @@ def perplexity_bucket_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = with_global_index(
         scored, [F.col("avg_logprob"), F.col("doc_id")], index_name="idx"
     )
-    total = ranked.groupBy().agg(F.count(F.lit(1)).alias("n_total"))
+    # counted from the scan's input: the scanned frame would re-run its
+    # range exchange and offsets join just to count rows
+    total = scored.groupBy().agg(F.count(F.lit(1)).alias("n_total"))
     rate = F.element_at(
         F.array(*[F.lit(r) for r in PPL_KEEP_PCT]), F.col("bucket").cast("int") + 1
     )

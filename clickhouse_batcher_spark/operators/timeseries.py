@@ -173,12 +173,9 @@ def events_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 def anomalies_from_hourly(hourly: DataFrame) -> DataFrame:
     """Z-score finalize over a (h, event_type, tot) hourly-total frame.
 
-    Shared by the batch query above and the streaming fold
-    (streaming/anomaly.py): hourly totals are the *mergeable state*
-    (decimal sums merge exactly across micro-batches), and this
-    finalize is a pure function of that state — so continuous anomaly
-    detection is partial_hourly_totals -> merge -> this, with batch
-    equivalence tested in tests/test_streaming.py.
+    Hourly totals are *mergeable state* (decimal sums merge exactly
+    across partial inputs), and this finalize is a pure function of
+    that state.
     """
     t = hourly.select(
         "h",

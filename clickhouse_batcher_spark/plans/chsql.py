@@ -1541,7 +1541,7 @@ _UNSUPPORTED = (
     (
         r"\bCREATE\s+MATERIALIZED\s+VIEW\b",
         "CREATE MATERIALIZED VIEW",
-        "use streaming.windowed / operators.rollup.incremental_rollup "
+        "use operators.rollup.incremental_rollup_events "
         "(continuous aggregates with mergeable state)",
     ),
     (

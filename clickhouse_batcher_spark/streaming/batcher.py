@@ -42,22 +42,16 @@ from clickhouse_batcher_spark.sinks.base import BatchSink
 class BatcherConfig:
     """Operating constants; defaults mirror the reference's.
 
-    ``max_batch_rows`` is the reference's ``maxBatchCap`` 10,000
-    (``hashes.go:68``); ``trigger_interval`` its flush ticker;
-    ``enabled`` its config gate (``connect.go:28-36``).
+    ``trigger_interval`` is the reference's flush ticker.
+    ``max_files_per_trigger`` caps each micro-batch at that many source
+    files: the size half of its size-or-time flush, given files of at
+    most ``maxBatchCap`` 10,000 rows (``hashes.go:68``), as the engine's
+    own flush path writes. ``enabled`` is its config gate
+    (``connect.go:28-36``).
     """
 
     trigger_interval: str = "1 second"
-    max_batch_rows: int = 10_000
-    # Per-trigger source rate cap. ``"auto"`` (the default) caps the
-    # file source at 1 file per trigger: with producers emitting files
-    # of <= max_batch_rows rows (the engine's own flush path does),
-    # every micro-batch is size-bounded, preserving the reference's
-    # size-or-time flush guarantee without opt-in configuration. Pass
-    # an explicit int to widen, or ``None``/``0`` for no cap
-    # (unbounded catch-up batches — ``None`` keeps its original
-    # "uncapped" meaning for existing callers).
-    max_files_per_trigger: int | None | str = "auto"
+    max_files_per_trigger: int = 1
     enabled: bool = True
 
 
@@ -78,19 +72,17 @@ class MicroBatcher:
         ``maxFilesPerTrigger`` is the file-source form of the
         reference's batch cap: with writers emitting bounded files,
         rows-per-batch is bounded, and an idle source still flushes
-        whatever arrived when the trigger fires (time path). The cap
-        defaults ON (``"auto"`` = 1 file/trigger) so the size-or-time
-        flush guarantee (``hashes.go:33-68``) holds without opt-in
-        configuration; ``max_files_per_trigger=None`` (or 0) disables
-        it for unbounded catch-up reads.
+        whatever arrived when the trigger fires (time path), so the
+        size-or-time flush guarantee (``hashes.go:33-68``) always holds.
         """
         cap = self.config.max_files_per_trigger
-        if cap == "auto":
-            cap = 1
-        reader = spark.readStream.schema(schema)
-        if cap:
-            reader = reader.option("maxFilesPerTrigger", str(int(cap)))
-        return reader.parquet(path)
+        if cap < 1:
+            raise ValueError(f"max_files_per_trigger must be >= 1, got {cap}")
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", str(cap))
+            .parquet(path)
+        )
 
     def rate_source(self, spark: SparkSession, rows_per_second: int) -> DataFrame:
         """Synthetic source; ``rowsPerSecond`` * trigger interval bounds

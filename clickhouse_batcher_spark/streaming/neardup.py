@@ -1,26 +1,28 @@
-"""Streaming incremental near-duplicate detection.
+"""Streaming incremental near-duplicate detection: the at-ingestion
+dedup gate.
 
 The batch MinHash-LSH detector (operators/dedup.py) answers "which
 pairs in the corpus are near-dups"; an INGESTION pipeline needs the
 incremental question instead: as new documents stream in, which of
-them collide with the EXISTING corpus index? That is the
+them collide with what was ingested before them? That is the
 at-ingestion dedup gate every large training-data pipeline runs
 (reject or flag near-dups before they ever land), restated
-Spark-first: a static band-signature index on one side, a
-``readStream`` file source on the other, and a per-micro-batch
-equi-join on ``(band_id, band_sig)`` inside ``foreachBatch``.
+Spark-first: a ``readStream`` file source, and inside ``foreachBatch``
+an equi-join on ``(band_id, band_sig)`` of each micro-batch against
+itself and against the signatures of every earlier batch. The batch's
+own signatures then join the index for the batches after it.
 
-Shares the signature helper (``dedup.signature_bands``) with the
+Shares the signature function (``dedup.signature_bands``) with the
 batch detector's pair memo, so a document gets the SAME signature
-whether indexed in batch or scored in-flight — the property the
-batch-equivalence tests pin.
+whether indexed in batch or scored in-flight: the union of the
+per-batch outputs is the batch detector's band-collision pair set, the
+equivalence the tests pin.
 
-Scale: the index side is a parquet-backed (band, sig) -> doc relation
-keyed exactly like the stream side's join key; at 100 TB both sides
-are hash-partitioned on the band key, and each micro-batch joins only
-its own (small) signature set — no state store growth, because the
-index is external (appended by the same pipeline's committed batches)
-rather than held in streaming state.
+Scale: the index is an ordinary parquet table partitioned by batch
+id; both join sides hash on the band key, and each micro-batch joins
+only its own (small) signature set. No streaming state grows, because
+the index is external (appended by the gate's own committed batches)
+rather than held in a state store.
 """
 
 from __future__ import annotations
@@ -31,86 +33,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_batcher_spark.operators import memo
-from clickhouse_batcher_spark.operators.dedup import (
-    band_signatures,
-    band_signatures_inline,
-    shingle_set,
-    tokenized_corpus,
-)
+from clickhouse_batcher_spark.operators.dedup import band_signatures_inline
 from clickhouse_batcher_spark.sinks.parquet_sink import MARK_SUCCESS
 
 
-def build_band_index(docs: DataFrame) -> DataFrame:
-    """Band-signature index of the existing corpus:
-    (band_id, band_sig, doc_id)."""
-    return band_signatures(shingle_set(tokenized_corpus(docs))).select(
-        "band_id", "band_sig", F.col("doc_id").alias("index_doc_id")
-    )
-
-
-def match_against_index(batch: DataFrame, index: DataFrame) -> DataFrame:
-    """Band-collision matches of incoming docs against the index:
-    (doc_id, index_doc_id) distinct pairs. The verification step
-    (shingle Jaccard, as in the batch detector) is the caller's
-    choice — candidates are already rare."""
-    # narrow per-row signatures: a micro-batch is far below the
-    # vocab-broadcast crossover the batch pipeline is shaped for
-    sigs = band_signatures_inline(batch)
-    return (
-        sigs.join(index, ["band_id", "band_sig"])
-        .select("doc_id", "index_doc_id")
-        .distinct()
-    )
-
-
-def _write_batch_matches(
-    index: DataFrame, out_dir: str, batch: DataFrame, batch_id: int
-) -> None:
-    """foreachBatch callback (runs on the driver; module-level so no
-    closure captures leak into pickled state): join one micro-batch
-    against the index and land its matches under a batch-id path —
-    overwrite-by-batch-id makes replays idempotent."""
-    (
-        match_against_index(batch, index)
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/_batch_id={batch_id}")
-    )
-
-
-def run_streaming_neardup(
-    spark: SparkSession,
-    src_dir: str,
-    schema,
-    index: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 2,
-) -> None:
-    """Drain a document file-source, appending per-batch band matches
-    to ``out_dir`` exactly once (batch id in the output path makes the
-    write idempotent under foreachBatch replays)."""
-    source = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(src_dir)
-    )
-
-    # availableNow: batches run back-to-back (maxFilesPerTrigger still
-    # caps each one) and the query self-terminates — no per-batch
-    # trigger-period idle, which was ~10% of gate wall time
-    query = (
-        source.writeStream.foreachBatch(partial(_write_batch_matches, index, out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        query.stop()
-
-
-# --- self-building index: the full at-ingestion dedup loop -----------------
 def _prior_index_paths(
     spark: SparkSession, index_dir: str, batch_id: int
 ) -> list[str]:

@@ -1,4 +1,4 @@
-"""Parity for the third query batch + ORC + streaming session windows."""
+"""Parity for the third query batch + ORC."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -8,7 +8,6 @@ from clickhouse_batcher_spark import catalog
 catalog.load_all()
 
 from clickhouse_batcher_spark.sources.readers import read_orc
-from clickhouse_batcher_spark.streaming.windowed import session_counts
 from clickhouse_batcher_spark.tables import load_table
 from tests.parity import assert_parity
 
@@ -49,32 +48,6 @@ def test_orc_roundtrip(spark, sf_dir, tmp_path):
     back = read_orc(spark, path)
     assert back.count() == events.count()
     assert set(back.columns) == set(events.columns)
-
-
-def test_streaming_session_window_counts(spark, sf_dir, tmp_path):
-    """session_window streaming agg: total sessionized events == input."""
-    events = load_table(spark, sf_dir, "events").select("user_id", "value", "ts")
-    src = str(tmp_path / "src")
-    events.repartition(2).write.parquet(src)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    agg = session_counts(stream, gap="30 minutes", watermark="0 seconds")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sess_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    total = spark.sql("SELECT SUM(n_events) FROM sess_out").collect()[0][0]
-    assert total == events.count()
 
 
 EXT2_B = ["customer_unpivot_measures", "scd2_user_value_history"]

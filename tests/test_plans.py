@@ -7,6 +7,7 @@ refactor that silently breaks pushdown fails here, not at 100 TB.
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import functions as F
@@ -310,6 +311,20 @@ def test_global_ranks_use_range_partitioning(spark, sf_dir):
         assert "rangepartitioning" in plan.lower(), name
 
 
+def test_perplexity_sample_runs_one_range_exchange(spark, sf_dir):
+    """The decile total is counted from the scored frame, so the
+    executed plan holds the ordered scan's one range exchange; a count
+    over the scanned frame re-runs the exchange and its offsets join.
+    Counted in the final adaptive plan, after the query has run at
+    sf0.01 (the fixture next to ``sf_dir``)."""
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    df = catalog.QUERIES["perplexity_bucket_sample"](spark, sf001)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0].lower()
+    assert final.count("exchange rangepartitioning") == 1, final
+
+
 def test_no_broadcast_hints_on_sf_scaling_frames():
     """An explicit F.broadcast() hint is never demoted by AQE, so a
     hint on a frame that scales with data volume is a forced OOM at
@@ -531,9 +546,6 @@ _BROADCAST_HINT_ALLOWLIST: dict[tuple[str, str], str] = {
     ("queries_ext5.py", "region"): "constant dim: region",
     ("queries_ext5.py", "top"): "1-row agg: max-revenue frame (q15)",
     ("queries_ext6.py", "threshold"): "1-row agg: q11 value threshold",
-    ("streaming/joins.py", "projected"):
-        "caller-opt-in: enrich_stream hints only under the explicit "
-        "hint_broadcast=True flag (off by default since the r11 audit)",
 }
 # load_table(...) literals that may sit under a hint (SF-invariant
 # dimension tables only).
@@ -610,6 +622,117 @@ def test_broadcast_hints_fail_closed_allowlist():
     stale = set(_BROADCAST_HINT_ALLOWLIST) - seen
     assert not offenders, "\n".join(offenders)
     assert not stale, f"allowlist entries with no surviving site: {stale}"
+
+
+# Top-level package defs that no non-test file references, keyed
+# (path relative to the package, name). Each is either given a real
+# caller or deleted with its tests (ROADMAP D8); the list only shrinks.
+_TEST_ONLY_DEFS: dict[tuple[str, str], str] = {
+    ("operators/asof.py", "asof_join_pandas"):
+        "pandas merge_asof variant of the catalog's as-of join",
+    ("operators/bucketing.py", "bucketed_join"): "bucketed-table join",
+    ("operators/bucketing.py", "write_bucketed"): "bucketed-table writer",
+    ("operators/classifier.py", "nb_score"):
+        "train-once/score-many split of nb_quality_scores; no caller "
+        "since the streaming quality gate was deleted",
+    ("operators/classifier.py", "nb_train"):
+        "train-once/score-many split of nb_quality_scores; no caller "
+        "since the streaming quality gate was deleted",
+    ("operators/dedup.py", "exact_dedup"): "generic min-id exact dedup",
+    ("operators/skew.py", "salted_sum_count"): "salted two-phase aggregate",
+    ("operators/zorder.py", "zorder_write"): "z-ordered parquet writer",
+    ("plans/ddl.py", "clickhouse_migrations"):
+        "ClickHouse DDL for the migration runner",
+    ("plans/migrations.py", "spark_sql_executor"):
+        "migration runner executor over spark.sql",
+    ("sinks/delete.py", "delete_where_at"): "whole-directory delete (D10)",
+    ("sources/layout.py", "compact_parquet"): "small-file compaction (D9)",
+    ("sources/layout.py", "read_partitioned"): "partitioned-table reader",
+    ("sources/layout.py", "write_bucketed_table"): "bucketed-table writer",
+    ("sources/layout.py", "write_partitioned_by_month"):
+        "month-partitioned writer",
+    ("sources/readers.py", "kafka_stream"): "Kafka streaming source",
+    ("sources/readers.py", "read_binary_files"): "binary-file reader",
+    ("sources/readers.py", "read_csv"): "CSV reader",
+    ("sources/readers.py", "read_jdbc"): "JDBC reader",
+    ("sources/readers.py", "read_json"): "JSON reader",
+    ("sources/readers.py", "read_orc"): "ORC reader",
+    ("sources/readers.py", "read_text"): "text reader",
+    ("streaming/metrics.py", "IngestMetricsListener"):
+        "streaming progress listener (D2)",
+}
+
+
+def test_no_top_level_def_is_reached_only_from_tests():
+    """Fail-closed lint against library code that only tests reach.
+    A top-level def or class of the package counts as reached when its
+    name appears as an AST ``Name``, ``Attribute`` or import alias in
+    a non-test file (the package, ``bench.py``, ``__spark_entry__.py``,
+    ``perfbench/*.py`` other than its tests, ``tools/*.py``), when it
+    is registered with ``@query`` or ``@memo.shared``, or when it is a
+    dunder. Every other def must be listed in ``_TEST_ONLY_DEFS``; a
+    new one is red, and so is a stale entry.
+
+    The check follows one level of references only: a def referenced
+    solely by another unreached def counts as reached, and a name
+    shared with any referenced attribute or local counts too."""
+    import ast
+    import pathlib
+
+    import clickhouse_batcher_spark
+
+    pkg = pathlib.Path(clickhouse_batcher_spark.__file__).parent
+    repo = pkg.parent
+    non_test = [
+        *pkg.rglob("*.py"),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+        *(p for p in (repo / "perfbench").glob("*.py")
+          if not p.name.startswith("test_")),
+        *(repo / "tools").glob("*.py"),
+    ]
+    referenced: set[str] = set()
+    for p in non_test:
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.Name):
+                referenced.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                referenced.add(node.attr)
+            elif isinstance(node, ast.alias):
+                referenced.add(node.name.rsplit(".", 1)[-1])
+
+    def registered(d) -> bool:
+        for dec in d.decorator_list:
+            f = dec.func if isinstance(dec, ast.Call) else dec
+            if isinstance(f, ast.Name) and f.id == "query":
+                return True
+            if (
+                isinstance(f, ast.Attribute)
+                and f.attr == "shared"
+                and isinstance(f.value, ast.Name)
+                and f.value.id == "memo"
+            ):
+                return True
+        return False
+
+    unreached: set[tuple[str, str]] = set()
+    for p in sorted(pkg.rglob("*.py")):
+        for d in ast.parse(p.read_text()).body:
+            if not isinstance(
+                d, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                continue
+            dunder = d.name.startswith("__") and d.name.endswith("__")
+            if dunder or registered(d) or d.name in referenced:
+                continue
+            unreached.add((str(p.relative_to(pkg)), d.name))
+    new = sorted(unreached - set(_TEST_ONLY_DEFS))
+    stale = sorted(set(_TEST_ONLY_DEFS) - unreached)
+    assert not new, (
+        f"top-level defs no non-test file references: {new} — give "
+        "each a caller or delete it with its tests"
+    )
+    assert not stale, f"_TEST_ONLY_DEFS entries now reached or gone: {stale}"
 
 
 # The DataFrame methods through which the package ships Python

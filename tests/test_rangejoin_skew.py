@@ -1,4 +1,4 @@
-"""Range join, rollup hierarchy, salted aggregation, streaming dedup."""
+"""Range join, rollup hierarchy, salted aggregation."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from clickhouse_batcher_spark import catalog
 catalog.load_all()
 
 from clickhouse_batcher_spark.operators.skew import salted_sum_count
-from clickhouse_batcher_spark.streaming.windowed import dedup_stream
 from clickhouse_batcher_spark.tables import load_table
 from tests.parity import assert_parity
 
@@ -69,31 +68,3 @@ def test_salted_agg_equals_direct(spark, sf_dir):
     }
     assert direct == salted  # exact, thanks to decimal partials
 
-
-def test_streaming_dedup_drops_replayed_rows(spark, sf_dir, tmp_path):
-    """Feed the same events twice (replay) — dedup keeps one of each."""
-    events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    src = str(tmp_path / "src")
-    events.coalesce(1).write.parquet(src)
-    events.coalesce(1).write.mode("append").parquet(src)  # planted duplicates
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    deduped = dedup_stream(stream, ["event_id"], watermark="10 minutes")
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    n = spark.sql("SELECT COUNT(*) FROM dedup_out").collect()[0][0]
-    n_ids = spark.sql("SELECT COUNT(DISTINCT event_id) FROM dedup_out").collect()[0][0]
-    assert n == n_ids == events.count()

@@ -9,15 +9,14 @@ regimes, plus the restart-recovery case the reference cannot test
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_batcher_spark.sinks.parquet_sink import IdempotentParquetSink
 from clickhouse_batcher_spark.streaming.batcher import BatcherConfig, MicroBatcher
-from clickhouse_batcher_spark.streaming.windowed import windowed_counts
 from clickhouse_batcher_spark.tables import load_table
+from tests.parity import duckdb_connection
 
 # The streaming end-to-end soaks are marked slow one by one: pytest.ini
 # deselects 'slow' from the default run (run them with -m slow). The
@@ -59,6 +58,19 @@ def test_golden_count(spark, sf_dir, tmp_root, n_files, max_files):
     assert sink.count(spark) == total  # exact: no loss, no duplication
     if max_files == 1:
         assert len(sink.committed_batches()) >= n_files  # size cap respected
+
+
+def test_cli_ingest_rejects_file_cap_below_one(spark, tmp_root):
+    """Without a per-trigger file cap a micro-batch has no size bound,
+    so ``--max-files-per-trigger`` below 1 is refused before any
+    stream starts."""
+    from clickhouse_batcher_spark.__main__ import main
+
+    src = f"{tmp_root}/src"
+    spark.range(10).write.parquet(src)
+    with pytest.raises(ValueError, match="max_files_per_trigger"):
+        main(["ingest", src, f"{tmp_root}/sink", "--max-files-per-trigger", "0"])
+    assert spark.streams.active == []
 
 
 @pytest.mark.slow
@@ -120,41 +132,6 @@ def test_replay_uncommitted_heals_partial_write(spark, sf_dir, tmp_root):
     # Committed replay is a no-op.
     assert sink.write_batch(events, 0) is False
     assert sink.count(spark) == 100
-
-
-@pytest.mark.slow
-def test_streaming_windowed_agg_matches_batch(spark, sf_dir, tmp_root):
-    """Watermarked tumbling-window agg over the stream == batch agg."""
-    src = f"{tmp_root}/src"
-    schema, _ = _write_source_files(spark, sf_dir, src, 3)
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    agg = windowed_counts(stream, window_duration="1 hour", watermark="0 seconds")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("win_out")
-        .option("checkpointLocation", f"{tmp_root}/ckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = (
-        spark.sql("SELECT win.start AS h, event_type, cnt FROM win_out")
-        .orderBy("h", "event_type")
-        .collect()
-    )
-    expected = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("hour", "ts").alias("h"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy("h", "event_type")
-        .collect()
-    )
-    assert [tuple(r) for r in got] == [tuple(r) for r in expected]
 
 
 @pytest.mark.slow
@@ -274,444 +251,22 @@ def test_rollup_streaming_equivalence(spark, sf_dir, tmp_root):
     assert streamed == batch
 
 
-@pytest.mark.slow
-def test_streaming_funnel_matches_batch(spark, sf_dir, tmp_root):
-    """applyInPandasWithState funnel over time-sliced micro-batches ==
-    the batch min-cascade funnel (operators/funnel.py), nulls and
-    all."""
-    import os
+def _oracle_bands(sf_dir, select):
+    """Rows of ``select`` over the ``dedup_minhash_lsh`` oracle's
+    ``bands`` CTE, run by DuckDB on the parquet fixtures."""
+    from clickhouse_batcher_spark.operators.dedup import (
+        SQL_BANDS,
+        SQL_CORPUS,
+        SQL_SHINGLES,
+    )
 
-    from pyspark.sql import Window
-
-    from clickhouse_batcher_spark.operators.funnel import (
-        FUNNEL_STAGES,
-        FUNNEL_WINDOW_S,
-        funnel_stage_times,
-    )
-    from clickhouse_batcher_spark.streaming.stateful import streaming_funnel
-
-    events = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin(*FUNNEL_STAGES))
-        .select("user_id", "event_type", "ts")
-    )
-    # 4 time slices written as one file each, mtimes ascending so the
-    # file source replays them in event-time order (per-user arrival
-    # is then time-sliced, the condition for batch equivalence)
-    n_slices = 4
-    w = Window.orderBy("ts", "user_id", "event_type")
-    sliced = events.withColumn(
-        "slice", F.ntile(n_slices).over(w)
-    )
-    src = f"{tmp_root}/src"
-    os.makedirs(src)
-    for i in range(1, n_slices + 1):
-        part_dir = f"{tmp_root}/part{i}"
-        sliced.filter(F.col("slice") == i).drop("slice").coalesce(
-            1
-        ).write.parquet(part_dir)
-        name = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
-        dst = f"{src}/slice{i}.parquet"
-        os.rename(f"{part_dir}/{name}", dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    out = streaming_funnel(stream, FUNNEL_STAGES, FUNNEL_WINDOW_S)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("funnel_out")
-        .option("checkpointLocation", f"{tmp_root}/ckpt")
-        .start()
-    )
+    con = duckdb_connection(sf_dir)
     try:
-        q.processAllAvailable()
+        return con.execute(
+            f"WITH {SQL_CORPUS}, {SQL_SHINGLES}, {SQL_BANDS} {select}"
+        ).fetchall()
     finally:
-        q.stop()
-
-    emitted = spark.sql(
-        """SELECT user_id, t1_us, t2_us, t3_us FROM (
-             SELECT *, row_number() OVER (
-               PARTITION BY user_id ORDER BY version DESC) AS rn
-             FROM funnel_out) WHERE rn = 1"""
-    ).collect()
-    streamed = {
-        r["user_id"]: (r["t1_us"], r["t2_us"], r["t3_us"]) for r in emitted
-    }
-
-    def us(ts):
-        return -1 if ts is None else int(ts.timestamp() * 1_000_000)
-
-    batch = {
-        r["user_id"]: (us(r["t1"]), us(r["t2"]), us(r["t3"]))
-        for r in funnel_stage_times(events).collect()
-    }
-    assert streamed == batch
-
-
-@pytest.mark.slow
-def test_anomaly_streaming_equivalence(spark, sf_dir, tmp_root):
-    """Continuous anomaly detection: per-micro-batch hourly-total
-    states merged then finalized == the one-shot batch anomaly report
-    (exact equality — decimal state merge + integer-moment z)."""
-    from clickhouse_batcher_spark.operators.timeseries import (
-        events_hourly_anomalies,
-    )
-    from clickhouse_batcher_spark.streaming.anomaly import (
-        finalize_anomalies,
-        merge_hourly_totals,
-        partial_hourly_totals,
-    )
-
-    src = f"{tmp_root}/asrc"
-    schema, _ = _write_source_files(spark, sf_dir, src, 5)
-    states_dir = f"{tmp_root}/astates"
-
-    def fold(batch_df, batch_id):
-        partial_hourly_totals(batch_df).write.mode("append").parquet(
-            states_dir
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", f"{tmp_root}/ackpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    states = spark.read.parquet(states_dir)
-    assert states.count() > 0
-    streamed = {
-        (r["event_type"], r["hour"]): (r["hour_total"], r["zscore"])
-        for r in finalize_anomalies(merge_hourly_totals(states)).collect()
-    }
-    batch = {
-        (r["event_type"], r["hour"]): (r["hour_total"], r["zscore"])
-        for r in events_hourly_anomalies(spark, sf_dir).collect()
-    }
-    assert streamed == batch
-
-
-@pytest.mark.slow
-def test_streaming_ohlc_matches_batch(spark, sf_dir, tmp_root):
-    """Continuous OHLC bars over the stream == the batch chagg query:
-    min_by/max_by state merges across micro-batches without drift."""
-    from clickhouse_batcher_spark import catalog
-    from clickhouse_batcher_spark.streaming.windowed import ohlc_stream
-
-    catalog.load_all()
-    src = f"{tmp_root}/src"
-    schema, _ = _write_source_files(spark, sf_dir, src, 4)
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    bars = ohlc_stream(stream, window_duration="1 hour", watermark="0 seconds")
-    q = (
-        bars.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("ohlc_out")
-        .option("checkpointLocation", f"{tmp_root}/ohlc_ckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r["hour"], r["event_type"]): (
-            r["open"], r["high"], r["low"], r["close"], r["n_events"]
-        )
-        for r in spark.sql(
-            "SELECT win.start AS hour, event_type, open, high, low, close,"
-            " n_events FROM ohlc_out"
-        ).collect()
-    }
-    batch = {
-        (r["hour"], r["event_type"]): (
-            r["open"], r["high"], r["low"], r["close"], r["n_events"]
-        )
-        for r in catalog.QUERIES["events_ohlc_hourly"](spark, sf_dir).collect()
-    }
-    assert got == batch
-
-
-@pytest.mark.slow
-def test_streaming_hll_registers_match_batch(spark, sf_dir, tmp_root):
-    """The streaming HLL register table == the batch sketch: MAX state
-    merges across micro-batches without drift, so the streamed
-    registers (and therefore the estimate, which is pure arithmetic
-    over them) are exactly the batch recompute."""
-    from clickhouse_batcher_spark.streaming.windowed import hll_stream
-
-    src = f"{tmp_root}/src"
-    schema, _ = _write_source_files(spark, sf_dir, src, 4)
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    regs = hll_stream(stream)
-    q = (
-        regs.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("hll_out")
-        .option("checkpointLocation", f"{tmp_root}/hll_ckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    streamed = {
-        (r["event_type"], r["register"]): r["mj"]
-        for r in spark.sql("SELECT * FROM hll_out").collect()
-    }
-    from clickhouse_batcher_spark.tables import load_table
-
-    batch = {
-        (r["event_type"], r["register"]): r["mj"]
-        for r in hll_stream(load_table(spark, sf_dir, "events")).collect()
-    }
-    assert streamed == batch
-
-
-@pytest.mark.slow
-def test_streaming_hll_estimate_matches_batch_query(spark, sf_dir, tmp_root):
-    """Registers streamed through hll_stream, finished with
-    hll_estimate, must equal the batch hll_distinct_users estimates
-    exactly (same integer-exact arithmetic over equal registers)."""
-    from clickhouse_batcher_spark import catalog
-    from clickhouse_batcher_spark.streaming.windowed import (
-        hll_estimate,
-        hll_stream,
-    )
-
-    catalog.load_all()
-    src = f"{tmp_root}/src"
-    schema, _ = _write_source_files(spark, sf_dir, src, 3)
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    q = (
-        hll_stream(stream)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("hll_est_out")
-        .option("checkpointLocation", f"{tmp_root}/hll_est_ckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    streamed = {
-        (r["event_type"]): (r["registers_hit"], r["hll_estimate"])
-        for r in hll_estimate(spark.sql("SELECT * FROM hll_est_out")).collect()
-    }
-    batch = {
-        (r["event_type"]): (r["registers_hit"], r["hll_estimate"])
-        for r in catalog.QUERIES["hll_distinct_users"](spark, sf_dir).collect()
-    }
-    assert streamed == batch
-
-
-@pytest.mark.slow
-def test_streaming_dedup_within_watermark_matches_batch(spark, sf_dir, tmp_root):
-    """dropDuplicatesWithinWatermark over a duplicated feed == batch
-    dropDuplicates, when the watermark delay covers the full replay
-    window (here: every duplicate redelivered one batch later, delay
-    longer than the fixture's time span)."""
-    from clickhouse_batcher_spark.streaming.windowed import dedup_stream
-
-    events = load_table(spark, sf_dir, "events").limit(2000)
-    src = f"{tmp_root}/dedup_src"
-    # file 1: the original sample; file 2: a full replay of it (the
-    # at-least-once redelivery scenario the reference's batcher guards
-    # against with its ledger, hashes_test.go:78-134).
-    events.coalesce(1).write.mode("overwrite").parquet(src)
-    events.coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    deduped = dedup_stream(stream, keys=("event_id",), watermark="3650 days")
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_out")
-        .option("checkpointLocation", f"{tmp_root}/dedup_ckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql("SELECT event_id FROM dedup_out")
-    assert got.count() == got.distinct().count()  # no dupes emitted
-    expected_ids = {r.event_id for r in events.select("event_id").collect()}
-    assert {r.event_id for r in got.collect()} == expected_ids
-
-
-@pytest.mark.slow
-def test_streaming_cms_counters_match_batch(spark, sf_dir, tmp_root):
-    """The streaming CMS counter grid == the batch sketch: SUM state
-    merges across micro-batches without drift. Also pins the CMS
-    guarantee on the finalized grid: every user's point estimate
-    (min over depth rows) >= the exact count."""
-    from clickhouse_batcher_spark.streaming.windowed import cms_stream
-
-    src = f"{tmp_root}/src"
-    schema, _ = _write_source_files(spark, sf_dir, src, 4)
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    q = (
-        cms_stream(stream)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("cms_out")
-        .option("checkpointLocation", f"{tmp_root}/cms_ckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    streamed = {
-        (r["row_id"], r["bucket"]): r["cnt"]
-        for r in spark.sql("SELECT * FROM cms_out").collect()
-    }
-    events = load_table(spark, sf_dir, "events")
-    batch = {
-        (r["row_id"], r["bucket"]): r["cnt"]
-        for r in cms_stream(events).collect()
-    }
-    assert streamed == batch
-
-    # CMS never undercounts: check the 20 most active users.
-    from clickhouse_batcher_spark.operators.sketch import CMS_DEPTH, _bucket
-
-    top = (
-        events.groupBy(F.col("user_id").cast("string").alias("k"))
-        .agg(F.count(F.lit(1)).alias("exact"))
-        .orderBy(F.desc("exact"), "k")
-        .limit(20)
-        .select(
-            "k",
-            "exact",
-            *[
-                _bucket(F.col("k"), f"cms{i}|").alias(f"b{i}")
-                for i in range(CMS_DEPTH)
-            ],
-        )
-        .collect()
-    )
-    for r in top:
-        est = min(streamed[(i, r[f"b{i}"])] for i in range(CMS_DEPTH))
-        assert est >= r["exact"]
-
-
-@pytest.mark.slow
-def test_streaming_dedup_state_survives_restart(spark, sf_dir, tmp_root):
-    """The dedup state store must recover from the checkpoint: rows
-    replayed AFTER a stop/restart cycle are still recognized as
-    duplicates (the reference's restart scenario, hashes_test.go
-    restart-without-dupes, applied to the watermark-dedup operator)."""
-    from clickhouse_batcher_spark.streaming.windowed import dedup_stream
-
-    events = load_table(spark, sf_dir, "events").limit(1000)
-    src = f"{tmp_root}/rst_src"
-    ckpt = f"{tmp_root}/rst_ckpt"
-    out = f"{tmp_root}/rst_out"
-    events.coalesce(1).write.mode("overwrite").parquet(src)
-
-    def run_once():
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            dedup_stream(stream, keys=("event_id",), watermark="3650 days")
-            .writeStream.outputMode("append")
-            .format("parquet")  # memory sink can't recover a checkpoint
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    run_once()
-    first = spark.read.parquet(out).count()
-    # Full replay lands as a new file AFTER the restart; recovered
-    # state must drop every row of it.
-    events.coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    got = spark.read.parquet(out).select("event_id")
-    assert first == events.count()
-    assert got.count() == got.distinct().count()
-    assert got.distinct().count() == events.count()
-
-
-@pytest.mark.slow
-def test_streaming_neardup_matches_batch(spark, sf_dir, tmp_root):
-    """Incremental at-ingestion near-dup gate: streaming a document
-    slice against a static band index must produce EXACTLY the band
-    collisions the batch join finds for the same split — same
-    signature function on both paths, so no drift is tolerated."""
-    from clickhouse_batcher_spark.streaming.neardup import (
-        build_band_index,
-        match_against_index,
-        run_streaming_neardup,
-    )
-    from clickhouse_batcher_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    existing = docs.filter(F.col("doc_id") % 4 != 0)
-    incoming = docs.filter(F.col("doc_id") % 4 == 0)
-
-    index = build_band_index(existing).cache()
-    index.count()
-
-    src = f"{tmp_root}/docs_src"
-    incoming.repartition(3).write.mode("overwrite").parquet(src)
-
-    out = f"{tmp_root}/matches"
-    run_streaming_neardup(
-        spark,
-        src,
-        incoming.schema,
-        index,
-        out,
-        f"{tmp_root}/ckpt_neardup",
-        max_files_per_trigger=1,
-    )
-    streamed = {
-        (r["doc_id"], r["index_doc_id"])
-        for r in spark.read.parquet(f"{out}/_batch_id=*").collect()
-    }
-    batch = {
-        (r["doc_id"], r["index_doc_id"])
-        for r in match_against_index(incoming, index).collect()
-    }
-    assert streamed == batch
-    assert batch  # the twin construction guarantees collisions exist
-    index.unpersist()
+        con.close()
 
 
 @pytest.mark.slow
@@ -720,11 +275,6 @@ def test_streaming_selfindex_neardup_equals_batch(spark, sf_dir, tmp_root):
     batches + itself, then indexed) must produce EXACTLY the batch
     detector's band-collision pair set over the same corpus, no matter
     how the stream was cut into micro-batches."""
-    from clickhouse_batcher_spark.operators.dedup import (
-        band_signatures,
-        shingle_set,
-        tokenized_corpus,
-    )
     from clickhouse_batcher_spark.streaming.neardup import (
         run_streaming_neardup_selfindex,
     )
@@ -750,25 +300,20 @@ def test_streaming_selfindex_neardup_equals_batch(spark, sf_dir, tmp_root):
         for r in spark.read.parquet(f"{out}/_batch_id=*").collect()
     }
 
-    bands = band_signatures(shingle_set(tokenized_corpus(docs)))
-    b1, b2 = bands.alias("b1"), bands.alias("b2")
-    batch_pairs = {
-        (r["a"], r["b"])
-        for r in b1.join(
-            b2,
-            (F.col("b1.band_id") == F.col("b2.band_id"))
-            & (F.col("b1.band_sig") == F.col("b2.band_sig"))
-            & (F.col("b1.doc_id") < F.col("b2.doc_id")),
+    batch_pairs = set(
+        _oracle_bands(
+            sf_dir,
+            """SELECT DISTINCT b1.doc_id, b2.doc_id
+            FROM bands b1 JOIN bands b2
+              ON b1.band_id = b2.band_id AND b1.band_sig = b2.band_sig
+                 AND b1.doc_id < b2.doc_id""",
         )
-        .select(F.col("b1.doc_id").alias("a"), F.col("b2.doc_id").alias("b"))
-        .distinct()
-        .collect()
-    }
+    )
     assert streamed == batch_pairs
     assert batch_pairs  # twins guarantee collisions
     # the index now holds every batch's signatures exactly once
     n_sigs = spark.read.parquet(f"{idx}/_batch_id=*").count()
-    assert n_sigs == bands.count()
+    assert [(n_sigs,)] == _oracle_bands(sf_dir, "SELECT COUNT(*) FROM bands")
 
 
 @pytest.mark.slow
@@ -800,195 +345,23 @@ def test_selfindex_batch_replay_is_idempotent(spark, sf_dir, tmp_root):
     assert first  # twins across the parity split guarantee matches
 
 
-def test_streaming_quality_gate_matches_batch(spark, sf_dir, tmp_root):
-    """At-ingestion quality gate: a model trained once on a reference
-    corpus must give BIT-IDENTICAL verdicts (decimal-exact log-odds)
-    whether the incoming documents are scored in one batch job or
-    drained through the stream in 1-file micro-batches."""
-    from clickhouse_batcher_spark.streaming.qualitygate import (
-        run_streaming_quality_gate,
-        score_batch,
-        train_gate_model,
-    )
-    from clickhouse_batcher_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    reference = docs.filter(F.col("doc_id") % 4 != 0)
-    incoming = docs.filter(F.col("doc_id") % 4 == 0)
-
-    llr, pri = train_gate_model(reference)
-    llr = llr.cache()
-    pri = pri.cache()
-    llr.count(), pri.count()
-
-    src = f"{tmp_root}/qg_src"
-    incoming.repartition(3).write.mode("overwrite").parquet(src)
-    out = f"{tmp_root}/qg_out"
-    run_streaming_quality_gate(
-        spark,
-        src,
-        incoming.schema,
-        llr,
-        pri,
-        out,
-        f"{tmp_root}/qg_ckpt",
-        max_files_per_trigger=1,
-    )
-    streamed = {
-        r["doc_id"]: (
-            r["teacher_keep"],
-            r["n_tokens"],
-            r["nb_logodds"],
-            r["nb_keep"],
-        )
-        for r in spark.read.parquet(f"{out}/_batch_id=*").collect()
-    }
-    batch = {
-        r["doc_id"]: (
-            r["teacher_keep"],
-            r["n_tokens"],
-            r["nb_logodds"],
-            r["nb_keep"],
-        )
-        for r in score_batch(incoming, llr, pri).collect()
-    }
-    assert streamed == batch  # exact — decimal scores, no tolerance
-    assert len(batch) == incoming.count()
-    # the gate actually gates: the teacher rule has a real pass/fail
-    # mix on this corpus (the NB verdict may legitimately collapse to
-    # the majority side on the weak-lexical-signal synthetic corpus)
-    teachers = {v[0] for v in batch.values()}
-    assert teachers == {True, False}
-    llr.unpersist(), pri.unpersist()
-
-
-@pytest.mark.slow
-def test_streaming_ingest_pipeline_quality_then_dedup(
-    spark, sf_dir, tmp_root
-):
-    """The composed at-ingestion pipeline (quality gate -> self-
-    indexing dedup gate in one foreachBatch): verdicts must equal the
-    batch scoring, and the dedup pair set must equal the batch
-    detector's collisions over ONLY the quality-kept documents —
-    rejected docs never enter the index."""
-    from clickhouse_batcher_spark.operators.dedup import (
-        band_signatures,
-        shingle_set,
-        tokenized_corpus,
-    )
-    from clickhouse_batcher_spark.streaming.qualitygate import (
-        run_streaming_ingest_pipeline,
-        score_batch,
-        train_gate_model,
-    )
-    from clickhouse_batcher_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    reference = docs.filter(F.col("doc_id") % 3 == 2)
-    incoming = docs.filter(F.col("doc_id") % 3 != 2)
-
-    llr, pri = train_gate_model(reference)
-    llr = llr.cache()
-    pri = pri.cache()
-    llr.count(), pri.count()
-
-    src = f"{tmp_root}/pl_src"
-    incoming.repartition(4).write.mode("overwrite").parquet(src)
-    vd, dd, ix = (
-        f"{tmp_root}/pl_verdicts",
-        f"{tmp_root}/pl_pairs",
-        f"{tmp_root}/pl_index",
-    )
-    run_streaming_ingest_pipeline(
-        spark,
-        src,
-        incoming.schema,
-        llr,
-        pri,
-        vd,
-        dd,
-        ix,
-        f"{tmp_root}/pl_ckpt",
-        max_files_per_trigger=1,
-    )
-    streamed_verdicts = {
-        r["doc_id"]: (r["teacher_keep"], r["nb_logodds"], r["nb_keep"])
-        for r in spark.read.parquet(f"{vd}/_batch_id=*").collect()
-    }
-    batch_verdicts = {
-        r["doc_id"]: (r["teacher_keep"], r["nb_logodds"], r["nb_keep"])
-        for r in score_batch(incoming, llr, pri).collect()
-    }
-    assert streamed_verdicts == batch_verdicts
-
-    kept = incoming.join(
-        score_batch(incoming, llr, pri)
-        .filter("teacher_keep")
-        .select("doc_id"),
-        "doc_id",
-    )
-    sigs = band_signatures(shingle_set(tokenized_corpus(kept)))
-    a, b = sigs.alias("a"), sigs.alias("b")
-    want_pairs = {
-        (r["d1"], r["d2"])
-        for r in a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
-        )
-        .distinct()
-        .collect()
-    }
-    got_pairs = {
-        (min(r["doc_id"], r["index_doc_id"]), max(r["doc_id"], r["index_doc_id"]))
-        for r in spark.read.parquet(f"{dd}/_batch_id=*").collect()
-    }
-    assert got_pairs == want_pairs
-    assert want_pairs  # twin construction guarantees collisions
-    # no rejected doc ever entered the index (tokenized_corpus also
-    # signs each doc's planted truncated twin at doc_id+TWIN_ID_OFFSET)
-    from clickhouse_batcher_spark.operators.dedup import TWIN_ID_OFFSET
-
-    indexed = {
-        r["doc_id"]
-        for r in spark.read.parquet(f"{ix}/_batch_id=*").collect()
-    }
-    kept_ids = {r["doc_id"] for r in kept.select("doc_id").collect()}
-    allowed = kept_ids | {i + TWIN_ID_OFFSET for i in kept_ids}
-    assert indexed <= allowed
-    llr.unpersist(), pri.unpersist()
-
-
 def test_band_signatures_inline_bit_identical(spark, sf_dir):
-    """The gate's narrow per-row signature path (round-8 throughput
-    fix: zero shuffles, no vocab broadcast) must emit EXACTLY the
-    batch pipeline's (doc_id, band_id, band_sig) rows — same salts,
-    same sha2 prefixes, twins included, short docs excluded."""
-    from clickhouse_batcher_spark.operators.dedup import (
-        band_signatures,
-        band_signatures_inline,
-        shingle_set,
-        tokenized_corpus,
-    )
+    """The gate's narrow per-row signature path (zero shuffles) must
+    emit EXACTLY the oracle's (doc_id, band_id, band_sig) rows: same
+    salts, same sha2 prefixes, twins included, short docs excluded."""
+    from clickhouse_batcher_spark.operators.dedup import band_signatures_inline
     from clickhouse_batcher_spark.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    batch_rows = {
-        (r["doc_id"], r["band_id"], r["band_sig"])
-        for r in band_signatures(
-            shingle_set(tokenized_corpus(docs))
-        ).collect()
-    }
-    inline_rows = {
+    oracle_rows = sorted(
+        _oracle_bands(sf_dir, "SELECT doc_id, band_id, band_sig FROM bands")
+    )
+    inline_rows = sorted(
         (r["doc_id"], r["band_id"], r["band_sig"])
         for r in band_signatures_inline(docs).collect()
-    }
-    assert inline_rows == batch_rows
-    assert batch_rows
+    )
+    assert inline_rows == oracle_rows
+    assert oracle_rows
     # and the inline plan really is shuffle-free
     plan = band_signatures_inline(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
@@ -1071,135 +444,6 @@ def test_prior_index_paths_lists_only_earlier_batches(spark, tmp_root):
     assert got == [0, 1]
     assert _prior_index_paths(spark, idx, 0) == []
     assert len(_prior_index_paths(spark, idx, 11)) == 4
-
-
-@pytest.mark.slow
-def test_streaming_drift_monitor_matches_batch_psi(spark, sf_dir, tmp_root):
-    """The per-micro-batch PSI rows from the streaming monitor must be
-    BIT-IDENTICAL to recomputing each file-batch's PSI in a plain
-    batch job (same frozen model, same baseline histogram, same
-    exact-decimal term sum), and the alert flag must equal
-    psi > PSI_ALERT."""
-    import glob as _glob
-
-    from clickhouse_batcher_spark.streaming.qualitygate import (
-        PSI_ALERT,
-        baseline_bin_counts,
-        psi_vs_baseline,
-        run_streaming_drift_monitor,
-        score_batch,
-        train_gate_model,
-    )
-    from clickhouse_batcher_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    reference = docs.filter(F.col("doc_id") % 4 != 0)
-    incoming = docs.filter(F.col("doc_id") % 4 == 0)
-
-    llr, pri = train_gate_model(reference)
-    llr, pri = llr.cache(), pri.cache()
-    llr.count(), pri.count()
-    base = baseline_bin_counts(score_batch(reference, llr, pri))
-
-    src = f"{tmp_root}/dm_src"
-    incoming.repartition(3).write.mode("overwrite").parquet(src)
-    mon = f"{tmp_root}/dm_out"
-    run_streaming_drift_monitor(
-        spark,
-        src,
-        incoming.schema,
-        llr,
-        pri,
-        base,
-        mon,
-        f"{tmp_root}/dm_ckpt",
-        max_files_per_trigger=1,
-    )
-    streamed = {
-        r["batch_id"]: (r["n_docs"], r["psi"], r["alert"])
-        for r in spark.read.parquet(f"{mon}/_batch_id=*").collect()
-    }
-    assert len(streamed) >= 3  # one row per 1-file micro-batch
-
-    # recompute per-batch PSI from the SAME file groups the stream saw
-    # (1 file per trigger, source order = the listed file order)
-    files = sorted(_glob.glob(f"{src}/part-*.parquet"))
-    assert len(files) == len(streamed)
-    expected = []
-    for f in files:
-        part = spark.read.parquet(f)
-        counts = baseline_bin_counts(score_batch(part, llr, pri))
-        psi = psi_vs_baseline(counts, base)
-        expected.append((sum(counts.values()), psi, psi > PSI_ALERT))
-    # the stream's file->batch assignment order is not the glob order;
-    # compare the multisets of per-batch rows
-    assert sorted(streamed.values()) == sorted(expected)
-    for _, psi, alert in streamed.values():
-        assert alert == (psi > PSI_ALERT)
-
-
-@pytest.mark.slow
-@pytest.mark.parametrize("files_per_trigger", [1, 3])
-def test_quantile_streaming_equivalence(
-    spark, sf_dir, tmp_root, files_per_trigger
-):
-    """Continuous quantiles: per-micro-batch histogram-bin states
-    merged then finalized == the batch quantile_state_merge_daily
-    operator's total-period answer (exact integer equality).
-
-    Two trigger sizes (VERDICT r10 task 5): maxFilesPerTrigger 1 and 3
-    slice the 5 source files into 5 vs 2 micro-batches — DIFFERENT
-    partial-state multisets that must fold to the SAME merged state,
-    the mergeability contract itself."""
-    from clickhouse_batcher_spark import catalog
-    from clickhouse_batcher_spark.streaming.quantiles import (
-        finalize_quantiles,
-        merge_bin_counts,
-        partial_bin_counts,
-    )
-
-    catalog.load_all()
-    src = f"{tmp_root}/qsrc"
-    schema, _ = _write_source_files(spark, sf_dir, src, 5)
-    states_dir = f"{tmp_root}/qstates"
-
-    def fold(batch_df, batch_id):
-        partial_bin_counts(batch_df).write.mode("append").parquet(
-            states_dir
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(files_per_trigger))
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", f"{tmp_root}/qckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    states = spark.read.parquet(states_dir)
-    assert states.count() > 0
-    streamed = {
-        r["event_type"]: (
-            r["n_events"], r["p50_bin"], r["p90_bin"], r["p99_bin"]
-        )
-        for r in finalize_quantiles(merge_bin_counts(states)).collect()
-    }
-    batch = {
-        r["event_type"]: (
-            r["n_events"], r["p50_bin"], r["p90_bin"], r["p99_bin"]
-        )
-        for r in catalog.QUERIES["quantile_state_merge_daily"](
-            spark, sf_dir
-        ).collect()
-    }
-    assert streamed == batch
 
 
 def _batch_files(batch_dir: str) -> tuple[int, list[str]]:
