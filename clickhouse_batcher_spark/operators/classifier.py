@@ -202,101 +202,6 @@ def _labeled(docs: DataFrame) -> DataFrame:
     )
 
 
-def nb_train(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Train the distilled NB on a reference corpus: returns the
-    broadcastable model — ``(llr, pri)`` where ``llr`` is the
-    (bucket, lr DECIMAL(27,6)) log-likelihood-ratio table (<=
-    NBQ_BUCKETS rows) and ``pri`` the 1-row prior frame. The split
-    from :func:`nb_score` lets one trained model score any number of
-    corpora with bit-identical results."""
-    lab = _labeled(docs)
-    bk = lab.select(
-        "doc_id", "label", F.explode("toks").alias("token")
-    ).select("doc_id", "label", _nbq_bucket(F.col("token")).alias("bucket"))
-    one_if = lambda c: F.sum(F.when(c, 1).otherwise(0))  # noqa: E731
-    # densify over ALL buckets so a model trained on one corpus scores
-    # buckets the training corpus never produced with the correct
-    # smoothed (0-count) ratio instead of silently contributing 0
-    all_buckets = docs.sparkSession.range(NBQ_BUCKETS).select(
-        F.col("id").cast("bigint").alias("bucket")
-    )
-    cls = all_buckets.join(
-        bk.groupBy("bucket").agg(
-            one_if(F.col("label")).cast("bigint").alias("c1"),
-            one_if(~F.col("label")).cast("bigint").alias("c0"),
-        ),
-        "bucket",
-        "left",
-    ).select(
-        "bucket",
-        F.coalesce("c1", F.lit(0)).cast("bigint").alias("c1"),
-        F.coalesce("c0", F.lit(0)).cast("bigint").alias("c0"),
-    )
-    tots = cls.agg(
-        F.sum("c1").cast("bigint").alias("t1"),
-        F.sum("c0").cast("bigint").alias("t0"),
-    )
-    nd = lab.agg(
-        one_if(F.col("label")).cast("bigint").alias("n1"),
-        one_if(~F.col("label")).cast("bigint").alias("n0"),
-    )
-    n = float(NBQ_BUCKETS)
-    llr = cls.crossJoin(F.broadcast(tots)).select(
-        "bucket",
-        F.round(
-            F.log(
-                ((F.col("c1").cast("double") + 1) / (F.col("t1").cast("double") + n))
-                / ((F.col("c0").cast("double") + 1) / (F.col("t0").cast("double") + n))
-            ),
-            6,
-        )
-        .cast("decimal(27,6)")
-        .alias("lr"),
-    )
-    prior = (
-        F.round(
-            F.log((F.col("n1").cast("double") + 1) / (F.col("n0").cast("double") + 1)),
-            6,
-        )
-        .cast("decimal(27,6)")
-        .alias("prior")
-    )
-    return llr, nd.select(prior)
-
-
-def nb_score(
-    docs: DataFrame, llr: DataFrame, pri: DataFrame
-) -> DataFrame:
-    """Score any ``(doc_id, text)`` frame with a trained model from
-    :func:`nb_train`. The model is dense over all NBQ_BUCKETS, so
-    every token — including ones the training corpus never produced —
-    scores with its correctly smoothed ratio; identical inputs give
-    bit-identical scores whether scored in one batch job or across
-    micro-batches (the streaming gate's equivalence property)."""
-    lab = _labeled(docs)
-    bk = lab.select("doc_id", F.explode("toks").alias("token")).select(
-        "doc_id", _nbq_bucket(F.col("token")).alias("bucket")
-    )
-    per = (
-        bk.join(F.broadcast(llr), "bucket")
-        .groupBy("doc_id")
-        .agg(F.sum("lr").alias("s"))
-    )
-    zero = F.lit(0).cast("decimal(27,6)")
-    logodds = F.col("prior") + F.coalesce(F.col("s"), zero)
-    return (
-        lab.crossJoin(F.broadcast(pri))
-        .join(per, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("label").alias("teacher_keep"),
-            "n_tokens",
-            logodds.cast("double").alias("nb_logodds"),
-            (logodds > 0).alias("nb_keep"),
-        )
-    )
-
-
 def nb_quality_scores(docs: DataFrame) -> DataFrame:
     """Train-and-score the distilled NB over any ``(doc_id, text)``
     frame (input-agnostic core of ``quality_classifier_nb``).
@@ -308,13 +213,11 @@ def nb_quality_scores(docs: DataFrame) -> DataFrame:
     as DECIMAL(27,6) of 6-rounded per-bucket ratios, so the score —
     and therefore the sign decision — is engine- and order-exact.
 
-    Round-14 (guide §1.2/§2.4): unlike the split
-    ``nb_train``/``nb_score`` (train once, score many batches), this
-    same-corpus path used to tokenize+teacher-label the corpus FOUR
-    times and explode+hash the tokens TWICE inside one action (train's
-    bucket counts, train's doc label counts, score's bucket sums,
-    score's output frame all referenced the un-materialized prep
-    subtree). The prep frame (``lab``) and the per-(doc, label,
+    Round-14 (guide §1.2/§2.4): this same-corpus path used to
+    tokenize+teacher-label the corpus FOUR times and explode+hash the
+    tokens TWICE inside one action (train's bucket counts, train's doc
+    label counts, score's bucket sums, score's output frame all
+    referenced the un-materialized prep subtree). The prep frame (``lab``) and the per-(doc, label,
     bucket) occurrence counts (``pbk``) are now materialized once and
     every branch — class counts, prior, per-doc decimal sums, output —
     reads the blocks. The per-doc score sums ``lr * c`` per bucket as
@@ -408,7 +311,7 @@ def nb_quality_scores(docs: DataFrame) -> DataFrame:
 # result. The eager cut materializes the doc-level scores and cuts
 # the train+score lineage so every consumer's plan is a scan; the
 # build's own cuts (``lab``, ``pbk``) are released once it ends.
-# nb_quality_scores itself stays input-agnostic for the streaming gate.
+# nb_quality_scores itself stays input-agnostic.
 @memo.shared
 def nb_scores_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nb_quality_scores(load_table(spark, sf_dir, "documents"))

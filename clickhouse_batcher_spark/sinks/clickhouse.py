@@ -399,17 +399,19 @@ class ClickHouseSink(BatchSink):
             self.ping(spark)
         if self._is_committed(spark, batch_id):
             return False
-        # Empty-skip (hashes.go:79): no data, no ledger row. Unlike the
-        # parquet sink this CANNOT use an in-flight Observation — the
-        # JDBC v1 writer saves through df.rdd.foreachPartition, which
-        # never fires observed metrics (live-Derby suite: obs reported
-        # 0 for a 5-row batch and every batch was mis-skipped). The
-        # isEmpty probe (a limit-1 read) plus the save below evaluate
-        # the batch DataFrame twice — a foreachBatch df re-reads its
-        # source on each action, so this relies on the micro-batch
-        # being deterministic within its epoch (Spark's own
-        # exactly-once contract already requires that; a
-        # non-deterministic transform would break replay regardless).
+        # Empty-skip (hashes.go:79): no data, no ledger row. The
+        # parquet sink counts a batch from the footers of the files it
+        # wrote; these rows land in a remote table, and an in-flight
+        # Observation cannot count them either — the JDBC v1 writer
+        # saves through df.rdd.foreachPartition, which never fires
+        # observed metrics (live-Derby suite: obs reported 0 for a
+        # 5-row batch and every batch was mis-skipped). The isEmpty
+        # probe (a limit-1 read) plus the save below evaluate the
+        # batch DataFrame twice — a foreachBatch df re-reads its source
+        # on each action, so this relies on the micro-batch being
+        # deterministic within its epoch (Spark's own exactly-once
+        # contract already requires that; a non-deterministic
+        # transform would break replay regardless).
         if df.isEmpty():
             return False
         (

@@ -12,9 +12,10 @@ flag, ``hashes.go:70-83``):
 - a batch is *committed* iff its ledger marker exists;
 - ``write_batch``/``write_table`` on a committed batch_id is a no-op
   (replay-safe);
-- an uncommitted replay **overwrites** that batch's partition
-  directory, so a crash between data-write and marker-write heals on
-  retry instead of duplicating rows (the reference's TOCTOU window);
+- an uncommitted replay **removes and rewrites** that batch's
+  partition directory, so a crash between data-write and marker-write
+  heals on retry instead of duplicating rows (the reference's TOCTOU
+  window);
 - the marker is written to a temporary file beside ``_ledger/`` and
   renamed into it, so a crash mid-write never leaves an empty or
   partial marker that would count as committed.
@@ -23,13 +24,14 @@ Scale: the data dir is a normal partitioned parquet dataset — at
 100 TB this is exactly how a streaming ingest lands on a data lake
 (partition per micro-batch, compaction downstream). The ledger is one
 tiny marker file per batch. ``write_batch`` (``process_stream``, any
-frame) writes with the executors; only the marker is driver-side. An
-engine flush is already an Arrow table on the driver, so
-``write_table`` writes it there with ``pyarrow.parquet`` and runs no
-Spark job: one ``part-*.parquet`` file per 128 MB
-(``layout.partitions_for``), snappy-compressed, with Spark's own footer
-keys (the row schema and the Spark version), so Spark reads the
-engine's exact schema back and rebases no dates.
+frame) writes with the executors; only the marker is driver-side, and
+its row count is read from the footers of the files just written (no
+``Observation``, no second scan). An engine flush is already an Arrow
+table on the driver, so ``write_table`` writes it there with
+``pyarrow.parquet`` and runs no Spark job: one ``part-*.parquet`` file
+per 128 MB (``layout.partitions_for``), snappy-compressed, with Spark's
+own footer keys (the row schema and the Spark version), so Spark reads
+the engine's exact schema back and rebases no dates.
 
 Q1 (``count``) reads the ledger, not the data: each marker holds the
 row count of its batch, as ClickHouse answers ``COUNT(*)`` from
@@ -44,14 +46,19 @@ rewritten, so later reads start no inference job. ``compact`` and a
 sink root deleted and recreated change that first directory, and so
 the key.
 
-The committer writes no ``_SUCCESS`` file into a batch directory: the
-ledger marker is the batch's commit, and with no native Hadoop library
-each extra file costs a ``chmod`` fork (``session.py``).
+With no native Hadoop library each file or directory Hadoop creates
+costs a ``chmod`` fork (``session.py``). So the committer writes no
+``_SUCCESS`` file into a batch directory (the ledger marker is the
+batch's commit), and ``write_batch`` makes the batch directory and the
+committer's staging path itself, in one ``os.makedirs``, then appends
+into them. What Hadoop still creates per write is the task attempt
+directory, the part file and its ``.crc``.
 
-The root is a local path or a ``file:`` URI; the ledger, ``_retired/``
-and ``write_table`` use the driver's own filesystem. A root on another
-filesystem (``hdfs://``, ``s3a://``) is refused: its data would land
-on the store and its ledger on the driver's disk (ROADMAP.md D12).
+The root is a local path or a ``file:`` URI; the ledger, ``_retired/``,
+``write_table`` and ``write_batch``'s directories and footer reads use
+the driver's own filesystem. A root on another filesystem
+(``hdfs://``, ``s3a://``) is refused: its data would land on the store
+and its ledger on the driver's disk (ROADMAP.md D12).
 """
 
 from __future__ import annotations
@@ -64,7 +71,7 @@ from urllib.parse import urlsplit
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -76,6 +83,11 @@ from clickhouse_batcher_spark.sources.readers import read_parquet
 # Hadoop output-committer option: no ``_SUCCESS`` file in the output
 # directory, for writes whose commit is recorded elsewhere.
 MARK_SUCCESS = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+
+# FileOutputCommitter's task staging directory under application
+# attempt 0: ``_temporary`` (``PENDING_DIR_NAME``), the attempt number,
+# then ``_temporary`` again. Hadoop creates only what is missing.
+COMMITTER_STAGING = "_temporary/0/_temporary"
 
 
 def _local_root(root: str) -> str:
@@ -166,18 +178,24 @@ class IdempotentParquetSink(BatchSink):
         self._publish(self._marker(batch_id), str(rows))
 
     def _write_and_commit(self, df: DataFrame, batch_id: int) -> int:
-        """Overwrite (not append) the batch's partition directory, then
-        commit its marker with the row count; returns that count. The
-        overwrite heals partial writes from a crashed earlier attempt.
-        The row count is observed DURING the write — a pre-write
-        isEmpty() would be a second scan of the source (and double
-        numInputRows in streaming metrics)."""
+        """Rewrite the batch's partition directory, then commit its
+        marker with the row count; returns that count. Removing the
+        directory first heals partial writes from a crashed earlier
+        attempt. The directory and the committer's staging path are
+        made here in one ``os.makedirs``, so Hadoop forks no ``chmod``
+        for them, and the write appends into them. The count is read
+        from the footers of the written files: it is what they hold,
+        and it costs no second scan of the source (which would also
+        double ``numInputRows`` in streaming metrics)."""
         batch_dir = self._batch_dir(batch_id)
-        obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-            "overwrite"
-        ).option(MARK_SUCCESS, "false").parquet(batch_dir)
-        rows = obs.get["rows"]
+        shutil.rmtree(batch_dir, ignore_errors=True)
+        os.makedirs(f"{batch_dir}/{COMMITTER_STAGING}")
+        df.write.mode("append").option(MARK_SUCCESS, "false").parquet(batch_dir)
+        rows = sum(
+            pq.read_metadata(f"{batch_dir}/{name}").num_rows
+            for name in os.listdir(batch_dir)
+            if not name.startswith(("_", "."))
+        )
         if rows == 0:
             # reference empty-skip (hashes.go:79): no data, no marker —
             # the id stays free for a later real batch
@@ -273,8 +291,8 @@ class IdempotentParquetSink(BatchSink):
         swallow that stream batch while its checkpoint advanced —
         permanent row loss).
 
-        The compacted marker records the row count observed during the
-        compaction's own write, not the sum of the old markers.
+        The compacted marker records the row count read from the
+        compaction's own files, not the sum of the old markers.
 
         Crash-safe ordering: record the retired ids in ``_retired/<new
         id>`` (by rename), write the compacted data, commit its marker,

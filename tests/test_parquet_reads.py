@@ -7,8 +7,9 @@ tests pin the three properties that make that safe (a new relation per
 read, new files seen, a rewritten path inferred again) at the catalog
 and at the sink, and the engine flush landing as one file. The sink's
 Q1 reads the commit ledger instead: the tests below pin that it starts
-no job, that the ledger count always equals the data's count, and that
-a marker is committed atomically. An engine flush is written on the
+no job, that the ledger count always equals the data's count (a Spark
+write's marker is the row count of its files' footers), and that a
+marker is committed atomically. An engine flush is written on the
 driver from its Arrow table: it starts no job, reads back like a batch
 Spark wrote (dates before 1582 included), and keeps every ledger check.
 A compaction that fails part way shows each row once.
@@ -269,6 +270,56 @@ def test_crash_before_marker_rename_leaves_batch_uncommitted(spark, tmp_path, mo
     assert sink.committed_batches() == [0]
     assert not os.path.exists(f"{sink.data_dir}/_batch_id=1")
     assert sink.count(spark) == 30
+
+
+def _marker_rows(sink, batch_id: int) -> int:
+    with open(sink._marker(batch_id)) as fh:
+        return int(fh.read())
+
+
+def _footer_rows(sink, batch_id: int) -> int:
+    files = glob.glob(f"{sink._batch_dir(batch_id)}/part-*.parquet")
+    assert files
+    return sum(pq.read_metadata(f).num_rows for f in files)
+
+
+def test_spark_batch_marker_counts_its_files_rows(spark, tmp_path):
+    sink = IdempotentParquetSink(str(tmp_path / "sink"))
+    frame = _frame(spark, 0, 31).repartition(3)
+    assert sink.write_batch(frame, 0)
+    assert len(glob.glob(f"{sink._batch_dir(0)}/part-*.parquet")) == 3
+    assert _marker_rows(sink, 0) == _footer_rows(sink, 0) == 31
+    assert sink.count(spark) == sink.read(spark).count() == 31
+
+
+def test_uncommitted_replay_over_a_crashed_attempt_commits_only_its_rows(spark, tmp_path):
+    """A crashed attempt left a committed part file and a task's staged
+    file; the replay removes both and its marker counts its own rows."""
+    sink = IdempotentParquetSink(str(tmp_path / "sink"))
+    batch_dir = sink._batch_dir(0)
+    staged = f"{batch_dir}/_temporary/0/_temporary/attempt_x"
+    os.makedirs(staged)
+    stale = _frame(spark, 100, 140).toArrow()
+    pq.write_table(stale, f"{batch_dir}/part-00000-stale.snappy.parquet")
+    pq.write_table(stale, f"{staged}/part-0.parquet")
+    assert not sink.is_committed(0)
+    assert sink.write_batch(_frame(spark, 0, 25), 0)
+    assert _marker_rows(sink, 0) == _footer_rows(sink, 0) == 25
+    assert sorted(sink.read(spark).select("amount").toPandas()["amount"]) == list(range(25))
+    names = os.listdir(batch_dir)
+    assert [n for n in names if not n.startswith(("part-", ".part-"))] == [], names
+    assert all(n.endswith((".parquet", ".crc")) for n in names), names
+    assert not any("stale" in n for n in names), names
+
+
+def test_compaction_marker_counts_its_files_rows(spark, tmp_path):
+    sink = IdempotentParquetSink(str(tmp_path / "sink"))
+    for b, (lo, hi) in enumerate([(0, 7), (7, 20), (20, 22)]):
+        assert sink.write_batch(_frame(spark, lo, hi), b)
+    new_id = sink.compact(spark, target_files=2)
+    assert sink.committed_batches() == [new_id]
+    assert _marker_rows(sink, new_id) == _footer_rows(sink, new_id) == 22
+    assert sink.count(spark) == sink.read(spark).count() == 22
 
 
 def test_default_flush_lands_one_file(spark, tmp_path):

@@ -230,8 +230,8 @@ def test_catalog_wide_no_cartesian_products(spark, sf_dir):
         "quality_classifier_nb",     # 1-row prior frame + 1-row class
                                      # totals (the 256-row LLR table is
                                      # a hash join)
-        "classifier_calibration_bins",  # composes nb_score: same 1-row
-                                        # prior broadcast as above
+        "classifier_calibration_bins",  # reads nb_scores_cached: same
+                                        # 1-row prior broadcast as above
         "dedup_threshold_sweep",        # 5-row threshold frame fanned
                                         # out by a non-equi broadcast
                                         # (jaccard >= t) — bounded side
@@ -632,12 +632,6 @@ _TEST_ONLY_DEFS: dict[tuple[str, str], str] = {
         "pandas merge_asof variant of the catalog's as-of join",
     ("operators/bucketing.py", "bucketed_join"): "bucketed-table join",
     ("operators/bucketing.py", "write_bucketed"): "bucketed-table writer",
-    ("operators/classifier.py", "nb_score"):
-        "train-once/score-many split of nb_quality_scores; no caller "
-        "since the streaming quality gate was deleted",
-    ("operators/classifier.py", "nb_train"):
-        "train-once/score-many split of nb_quality_scores; no caller "
-        "since the streaming quality gate was deleted",
     ("operators/dedup.py", "exact_dedup"): "generic min-id exact dedup",
     ("operators/skew.py", "salted_sum_count"): "salted two-phase aggregate",
     ("operators/zorder.py", "zorder_write"): "z-ordered parquet writer",

@@ -9,6 +9,9 @@ regimes, plus the restart-recovery case the reference cannot test
 from __future__ import annotations
 
 import os
+import shutil
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -493,3 +496,75 @@ def test_ledgered_writes_leave_no_success_file(spark, sf_dir, tmp_root):
     for batch_dir in (f"{idx}/_batch_id=0", f"{out}/_batch_id=0"):
         files, other = _batch_files(batch_dir)
         assert files and other == [], (batch_dir, other)
+
+
+# Drains TRIGGERS one-file triggers into a parquet sink after a warm-up
+# drain of two, in one query, emptying the fork log in between. Run
+# with logging ``chmod`` shims first on PATH (the JVM inherits it).
+_FORK_PROBE = """
+import os, sys
+import pyarrow as pa, pyarrow.parquet as pq
+from clickhouse_batcher_spark import get_session
+from clickhouse_batcher_spark.sinks.parquet_sink import IdempotentParquetSink
+from clickhouse_batcher_spark.streaming.batcher import BatcherConfig, MicroBatcher
+
+root, triggers, log = sys.argv[1], int(sys.argv[2]), os.environ["FORK_LOG"]
+spark = get_session(app_name="fork_probe", cpus=2, shuffle_partitions=2)
+src = f"{root}/src"
+os.makedirs(src)
+
+def add_files(lo, hi):
+    for i in range(lo, hi):
+        ids = pa.array(range(i * 1000, (i + 1) * 1000), pa.int64())
+        pq.write_table(pa.table({"id": ids}), f"{src}/.f{i}.parquet")
+        os.replace(f"{src}/.f{i}.parquet", f"{src}/f{i}.parquet")
+
+sink = IdempotentParquetSink(f"{root}/sink")
+batcher = MicroBatcher(sink, BatcherConfig(trigger_interval="0 seconds"))
+add_files(0, 2)
+query = batcher.start(batcher.file_source(spark, src, spark.read.parquet(src).schema), f"{root}/ckpt")
+try:
+    query.processAllAvailable()
+    open(log, "w").close()
+    add_files(2, 2 + triggers)
+    query.processAllAvailable()
+finally:
+    query.stop()
+    query.awaitTermination()
+assert sink.committed_batches() == list(range(2 + triggers)), sink.committed_batches()
+assert sink.count(spark) == (2 + triggers) * 1000
+"""
+
+
+@pytest.mark.slow
+def test_sink_write_forks_at_most_three_chmods_per_trigger(tmp_root):
+    """With no native Hadoop library each file or directory Hadoop
+    creates on a local path forks ``chmod``. The sink makes the batch
+    directory and the committer's staging path itself, so Hadoop creates
+    only the task attempt directory, the part file and its ``.crc``
+    under the sink's data directory on each trigger."""
+    shims, log, triggers = f"{tmp_root}/shims", f"{tmp_root}/forks.log", 3
+    os.makedirs(shims)
+    real = shutil.which("chmod")
+    with open(f"{shims}/chmod", "w") as fh:
+        fh.write(f'#!/bin/sh\necho "chmod $*" >> "$FORK_LOG"\nexec {real} "$@"\n')
+    os.chmod(f"{shims}/chmod", 0o755)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        PATH=f"{shims}:{os.environ['PATH']}",
+        FORK_LOG=log,
+        PYTHONPATH=repo,
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", _FORK_PROBE, f"{tmp_root}/probe", str(triggers)],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-4000:]
+    with open(log) as fh:
+        paths = [line.split()[-1] for line in fh if line.startswith("chmod ")]
+    data_dir = f"{tmp_root}/probe/sink/data/"
+    in_sink = [p for p in paths if p.startswith(data_dir)]
+    assert paths, "the shim logged no chmod at all"
+    assert len(in_sink) <= 3 * triggers, in_sink
