@@ -53,7 +53,6 @@ def load_all() -> None:
         asof,
         attribution,
         bloomjoin,
-        bucketing,
         chagg,
         chagg2,
         classifier,

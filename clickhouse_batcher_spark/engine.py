@@ -49,7 +49,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from clickhouse_batcher_spark.columnar import ColumnarBatchBuilder
-from clickhouse_batcher_spark.plans.migrations import Migration, MigrationRunner
+from clickhouse_batcher_spark.plans.migrations import (
+    Migration,
+    MigrationRunner,
+    spark_sql_executor,
+)
 from clickhouse_batcher_spark.sinks.base import BatchSink
 from clickhouse_batcher_spark.sinks.delete import delete_where
 from clickhouse_batcher_spark.streaming.batcher import BatcherConfig, MicroBatcher
@@ -112,17 +116,13 @@ class BatcherEngine:
         the sink's ledger, so it runs at connect/first-flush, never at
         construction)."""
         if self._next_batch_id is None:
-            nbid = getattr(self.sink, "next_batch_id", None)
-            self._next_batch_id = nbid(self.spark) if callable(nbid) else 0
+            self._next_batch_id = self.sink.next_batch_id(self.spark)
         return self._next_batch_id
 
     def up_migrations(self) -> list[int]:
-        execute = self.config.migration_executor or (
-            lambda sql: self.spark.sql(sql)
-        )
         runner = MigrationRunner(
             self.config.migrations,
-            execute,
+            self.config.migration_executor or spark_sql_executor(self.spark),
             self.config.migration_state_path,
         )
         return runner.up()

@@ -1,25 +1,17 @@
 """As-of / range joins — operators Spark lacks natively.
 
-Two interchangeable implementations with identical semantics:
+``asof_join`` is pure DataFrame composition: equi-join on the key,
+range predicate, then a window picks the latest match per left row.
+Deterministic (total tie-break order) and oracle-checkable. The
+equi-join keeps the shuffle keyed (no cross product); the window
+dedup is the standard Catalyst-friendly formulation.
 
-1. ``asof_join`` — pure DataFrame composition: equi-join on the key,
-   range predicate, then a window picks the latest match per left row.
-   Deterministic (total tie-break order) and oracle-checkable. The
-   equi-join keeps the shuffle keyed (no cross product); the window
-   dedup is the standard Catalyst-friendly formulation.
-2. ``asof_join_pandas`` — ``applyInPandas`` per key group using
-   ``pd.merge_asof`` — the right choice when per-key match lists are
-   long (the composition's intermediate is |matches| rows; merge_asof
-   is O(n log n) per group). Used by tests as a cross-check.
-
-At 100 TB: both shuffle once on the join key; skewed keys (one user
-with millions of events) favor (2) plus AQE skew splitting, or
-bucketing both sides on the key.
+At 100 TB it shuffles once on the join key. Its intermediate is
+|matches| rows, so a key with long per-key match lists (one user with
+millions of events) leans on AQE skew splitting.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,52 +105,6 @@ def asof_events_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_cols=["o_orderkey", "o_orderdate"],
     )
     return joined.select("event_id", "user_id", "o_orderkey", "o_orderdate")
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    left_ts: str,
-    right_ts: str,
-    right_tiebreak: str,
-    right_cols: list[str],
-    out_schema: str,
-) -> DataFrame:
-    """merge_asof-based implementation: cogrouped pandas per key.
-
-    Sorting the right side by (ts, tiebreak) makes ``merge_asof``'s
-    take-last-on-tie pick the max-tiebreak row — identical semantics
-    to :func:`asof_join`'s window formulation.
-    """
-    left_cols = left.columns
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        l_sorted = l_pdf.sort_values(left_ts, kind="mergesort")
-        if r_pdf.empty:
-            out = l_sorted.copy()
-            for c in right_cols:
-                out[c] = None
-            return out[left_cols + right_cols]
-        r_sorted = r_pdf.sort_values(
-            [right_ts, right_tiebreak], kind="mergesort"
-        )
-        merged = pd.merge_asof(
-            l_sorted,
-            r_sorted[[right_ts, right_tiebreak]
-                     + [c for c in right_cols if c not in (right_ts, right_tiebreak)]],
-            left_on=left_ts,
-            right_on=right_ts,
-            direction="backward",
-        )
-        return merged[left_cols + right_cols]
-
-    return (
-        left.groupBy(left_key)
-        .cogroup(right.groupBy(right_key))
-        .applyInPandas(lambda lg, rg: merge(lg, rg), schema=out_schema)
-    )
 
 
 @query(

@@ -1,9 +1,9 @@
-"""Deduplication operators: exact, content-hash, n-gram Jaccard,
+"""Deduplication operators: exact content-hash, n-gram Jaccard,
 MinHash-LSH, and SimHash.
 
 Design for 100 TB:
 
-- **exact / content-hash**: one hash-partitioned groupBy on the
+- **content-hash**: one hash-partitioned groupBy on the
   64-bit/256-bit content key — the minimal possible shuffle; rows
   shuffle as (key, id) pairs, never full documents.
 - **n-gram Jaccard**: candidate pairs come from an equi-join on
@@ -243,11 +243,6 @@ def _doc_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _jaccard(shared: Column, na: Column, nb: Column) -> Column:
     return shared.cast("double") / (na + nb - shared)
-
-
-def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
-    """Generic exact dedup: deterministic survivor = min(id) per key."""
-    return df.groupBy(*key_cols).agg(F.min(id_col).alias(id_col))
 
 
 # ---------------------------------------------------------------------------

@@ -610,7 +610,7 @@ def _em_pass(
     """One full hard-EM round: E-step piece-usage counts over the word
     frame, aggregated driver-side (vocab-bounded collect). Module-level
     on purpose — it is pure driver code and must never be captured by a
-    shipped kernel (tests/test_layout.py lint)."""
+    shipped kernel (tests/test_plans.py kernel lint)."""
     used = {
         r["piece"]: int(r["used"])
         for r in _estep_counts(wf, scores)

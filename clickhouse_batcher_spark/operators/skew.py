@@ -1,9 +1,9 @@
-"""Skew mitigation: salted aggregation and salted join.
+"""Skew mitigation: the salted join and the join-key skew report.
 
 The 100-TB failure mode of a shuffle is a hot key: one reducer
 receives the whole key's rows while the rest of the cluster idles.
-``salted_sum_count`` covers aggregations (explicit two-phase
-partial/final groupBy); ``salted_join`` covers joins.
+``salted_join`` covers joins; an aggregation already combines
+map-side, so its hot key reaches the reducer as one partial per task.
 Spark's AQE skew-join (enabled in ``session.get_session``) splits
 oversized partitions at runtime, but it only helps sort-merge joins
 and only after a stage materializes. Explicit salting is the
@@ -28,11 +28,11 @@ part of the natively-rebuilt surface.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_batcher_spark.catalog import query
-from clickhouse_batcher_spark.functions import dec, dec_sum
+from clickhouse_batcher_spark.functions import dec_sum
 from clickhouse_batcher_spark.tables import load_table
 
 SALT_BUCKETS = 8
@@ -96,39 +96,6 @@ def salted_join_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.groupBy(F.col("c_mktsegment").alias("segment")).agg(
         F.count(F.lit(1)).alias("n_events"),
         dec_sum("value", "total_value"),
-    )
-
-
-def salted_sum_count(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """groupBy(key).agg(exact sum(value), count) via salted two-phase.
-
-    When one key owns a disproportionate share of rows, a single
-    groupBy sends that key's entire volume to one reducer. Salting
-    splits each key into ``salt_buckets`` partial groups aggregated in
-    parallel, then merges the partials — the partial/final shape Spark
-    already uses map-side, made explicit so the *reduce* side also
-    fans out. The salt is ``spark_partition_id() % buckets``: zero
-    extra hashing, naturally co-located, and the merge phase is
-    salt-value-independent — results are identical to the direct
-    groupBy (property-tested), only the shuffle shape changes.
-
-    Returns columns: key_cols + [sum_value DOUBLE, cnt BIGINT].
-    """
-    salted = df.withColumn(
-        "_salt", F.spark_partition_id() % salt_buckets
-    )
-    partial = salted.groupBy(*key_cols, "_salt").agg(
-        F.sum(dec(value_col)).alias("_psum"),
-        F.count(F.lit(1)).alias("_pcnt"),
-    )
-    return partial.groupBy(*key_cols).agg(
-        F.sum("_psum").cast("double").alias("sum_value"),
-        F.sum("_pcnt").cast("bigint").alias("cnt"),
     )
 
 

@@ -15,9 +15,9 @@ per-bucket min/max stats are bit-identical on Spark and DuckDB; the
 catalog query IS the skipping demonstration: per-bucket (user, time)
 envelopes a reader would prune against.
 
-Scale: computing the key is a per-row projection (codegen'd); writing
-a z-clustered table is one repartitionByRange+sortWithinPartitions on
-the key — the same single total-order shuffle a one-column sort
+Scale: computing the key is a per-row projection (codegen'd); a
+z-clustered write would be one repartitionByRange+sortWithinPartitions
+on the key — the same single total-order shuffle a one-column sort
 costs. The stats query is a plain groupBy(bucket) with map-side
 combine.
 """
@@ -67,22 +67,6 @@ def _sql_zorder_key(a: str, b: str, bits: int = Z_BITS) -> str:
         terms.append(f"(({a} // {1 << i}) % 2) * {1 << (2 * i)}")
         terms.append(f"(({b} // {1 << i}) % 2) * {1 << (2 * i + 1)}")
     return "(" + " + ".join(terms) + ")"
-
-
-def zorder_write(df: DataFrame, a: str, b: str, path: str, files: int) -> None:
-    """Write df parquet z-clustered on (a, b): range-partition by the
-    Morton key then sort within partitions — per-file min/max on both
-    columns become prunable envelopes."""
-    keyed = df.withColumn(
-        "_zkey", zorder_key(F.col(a).cast("bigint"), F.col(b).cast("bigint"))
-    )
-    (
-        keyed.repartitionByRange(files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 # Dimensions MUST be normalized to equal bit widths before

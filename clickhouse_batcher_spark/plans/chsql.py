@@ -180,8 +180,8 @@ parser rather than silently misbehaving):
   topK``
 - Table functions: ``numbers(n)`` / ``numbers(offset, n)`` ->
   ``range()`` TVF with the CH column name; ``remote/cluster/s3/url/
-  file/hdfs/generateRandom`` are loud errors pointing at
-  sources.readers
+  file/hdfs/generateRandom`` are loud errors pointing at Spark's own
+  ``spark.read`` readers
 
 The rewriter is quote-aware and nesting-aware (a tiny top-level-arg
 splitter, not a regex over the whole call), so nested calls like
@@ -1495,19 +1495,19 @@ _UNSUPPORTED = (
         "subquery and cross join it if you need a per-query constant",
     ),
     # Table functions that reach outside the query: this engine's
-    # scan surface is sources/readers.py (parquet/csv/json/orc/JDBC/
-    # streaming) — point there instead of parsing past them.
+    # scans are Spark's own spark.read readers (parquet/csv/json/orc/
+    # jdbc) — point there instead of parsing past them.
     (
         r"\b(?:remote|remoteSecure|cluster|clusterAllReplicas)\s*\(",
         "remote()/cluster() table functions",
-        "distribution is Spark's job here; read the table through "
-        "sources.readers (JDBC for a live ClickHouse server)",
+        "distribution is Spark's job here; read the table with "
+        "spark.read (format('jdbc') for a live ClickHouse server)",
     ),
     (
         r"\b(?:s3|url|file|hdfs)\s*\(\s*'",
         "s3()/url()/file()/hdfs() table functions",
-        "use sources.readers (spark.read against the path/URL; "
-        "format inferred or explicit)",
+        "use spark.read against the path/URL (spark.read.parquet, "
+        ".csv, .json; format explicit)",
     ),
     (
         r"\bgenerateRandom\s*\(",
@@ -1531,7 +1531,8 @@ _UNSUPPORTED = (
     (
         r"\bOPTIMIZE\s+TABLE\b",
         "OPTIMIZE TABLE",
-        "use sources.layout.compact_parquet (small-file compaction)",
+        "use IdempotentParquetSink.compact (ledgered small-file "
+        "compaction)",
     ),
     (
         r"\bENGINE\s*=\s*\w*MergeTree",

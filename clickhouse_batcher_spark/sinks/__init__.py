@@ -8,14 +8,13 @@ restart. Here the guard is a durable **batch ledger** keyed on
 idiom — which survives restarts and replays exactly-once.
 """
 
-from clickhouse_batcher_spark.sinks.base import BatchSink, MultiSink
+from clickhouse_batcher_spark.sinks.base import BatchSink
 from clickhouse_batcher_spark.sinks.parquet_sink import IdempotentParquetSink
 from clickhouse_batcher_spark.sinks.clickhouse import ClickHouseSink, ClickHouseSinkConfig
 from clickhouse_batcher_spark.sinks.delete import delete_where
 
 __all__ = [
     "BatchSink",
-    "MultiSink",
     "IdempotentParquetSink",
     "ClickHouseSink",
     "ClickHouseSinkConfig",

@@ -58,35 +58,3 @@ class BatchSink(abc.ABC):
 
         return _fn
 
-
-class MultiSink(BatchSink):
-    """Fan one micro-batch out to several sinks under ONE batch id —
-    the lake-copy-plus-warehouse topology (e.g. parquet + ClickHouse)
-    fed by a single stream.
-
-    Each child keeps its own ledger, so delivery is per-sink
-    exactly-once: if sink A commits and sink B crashes, the replay
-    skips A (committed) and retries B — the cross-sink analogue of the
-    partial-write healing inside IdempotentParquetSink. The batch is
-    cached for the duration of the fan-out so the upstream plan runs
-    once, not once per sink.
-    """
-
-    def __init__(self, sinks: list[BatchSink]) -> None:
-        if not sinks:
-            raise ValueError("MultiSink needs at least one sink")
-        self.sinks = list(sinks)
-
-    def write_batch(self, df: DataFrame, batch_id: int) -> bool:
-        df = df.cache()
-        try:
-            wrote_any = False
-            for sink in self.sinks:
-                wrote_any = sink.write_batch(df, batch_id) or wrote_any
-            return wrote_any
-        finally:
-            df.unpersist()
-
-    def next_batch_id(self, spark=None) -> int:
-        """A fresh id must be new to EVERY child ledger."""
-        return max(sink.next_batch_id(spark) for sink in self.sinks)

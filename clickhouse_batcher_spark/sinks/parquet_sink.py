@@ -35,9 +35,8 @@ the engine's exact schema back and rebases no dates.
 
 Q1 (``count``) reads the ledger, not the data: each marker holds the
 row count of its batch, as ClickHouse answers ``COUNT(*)`` from
-per-part row counts, so Q1 starts no Spark job. A marker written by an
-older build holds a word (``committed``/``compacted``), not a count;
-those batches are counted with one Spark job.
+per-part row counts, so Q1 starts no Spark job. A marker that holds
+no integer is an error, not a batch to count another way.
 
 Read-back (Q2/Q3 and ``compact``) goes through
 ``sources.readers.read_parquet``: the schema is inferred once, from the
@@ -72,7 +71,6 @@ from urllib.parse import urlsplit
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from clickhouse_batcher_spark.sinks.base import BatchSink
@@ -258,19 +256,12 @@ class IdempotentParquetSink(BatchSink):
 
     def count(self, spark: SparkSession) -> int:
         """Q1: the sum of the live batches' ledger row counts, 0 for an
-        empty sink. Batches whose marker holds no count (an older build
-        wrote the word ``committed`` or ``compacted``) are counted in one
-        Spark job over those batches only."""
-        total, legacy = 0, []
+        empty sink; starts no Spark job. A marker that holds no integer
+        raises ``ValueError``."""
+        total = 0
         for b in self._live_batches():
             with open(self._marker(b)) as fh:
-                text = fh.read()
-            try:
-                total += int(text)
-            except ValueError:
-                legacy.append(b)
-        if legacy:
-            total += self._read_batches(spark, legacy).agg(F.count(F.lit(1))).collect()[0][0]
+                total += int(fh.read())
         return total
 
     # -- maintenance ----------------------------------------------------

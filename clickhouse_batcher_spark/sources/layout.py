@@ -1,84 +1,13 @@
-"""Physical layout helpers: partitioned and bucketed table writes.
+"""The package's one partition-sizing rule.
 
-At 100 TB the difference between a full scan and a pruned scan is the
-layout, not the query:
-
-- **partition columns** (low cardinality, e.g. month) become
-  directories; Catalyst turns predicates on them into
-  ``PartitionFilters`` — entire directories never open.
-- **bucketing** (high-cardinality join/agg keys) pre-shuffles data at
-  write time; joins and aggs between tables bucketed on the same key
-  run with NO Exchange — the shuffle is paid once at ingest instead of
-  per query.
-
-Both are write-path decisions the ingest pipeline makes; readers stay
-unchanged.
+Every write that picks its own partition count (an engine flush's Arrow
+table, the parquet sink's ``write_table`` files, the graph's directed
+edges) sizes it here, so output files land near one target size: fewer,
+larger files keep a 100 TB scan from turning into task-scheduling
+overhead and footer reads.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from clickhouse_batcher_spark.sources.readers import read_parquet
-
-
-def write_partitioned_by_month(
-    df: DataFrame, ts_col: str, path: str, *, mode: str = "overwrite"
-) -> None:
-    """Land a fact table partitioned by (year, month) of ``ts_col``."""
-    (
-        df.withColumn("_year", F.year(ts_col))
-        .withColumn("_month", F.month(ts_col))
-        .write.mode(mode)
-        .partitionBy("_year", "_month")
-        .parquet(path)
-    )
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return read_parquet(spark, path, base_path=path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int,
-    *,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed managed table (co-located joins on
-    ``bucket_col``). Requires a warehouse (saveAsTable), since bucket
-    metadata lives in the catalog."""
-    (
-        df.write.mode(mode)
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Small-file compaction.
-#
-# Long-running ingest (especially micro-batch streaming: one file per
-# trigger per partition) degrades a table into thousands of tiny
-# files; at 100 TB the scan cost becomes task-scheduling overhead and
-# footer reads instead of IO. Compaction is the maintenance operator
-# every table format (Delta OPTIMIZE, Iceberg rewrite_data_files,
-# Hive concatenate) exposes; this is the plain-parquet equivalent.
-#
-# Scale design: the *plan* works on file metadata only (one FS listing
-# — thousands of entries, never rows). The *execution* reads the data
-# once and writes ceil(total_bytes / target) files via coalesce(), the
-# shuffle-free repartition: partitions merge without an Exchange, so
-# compaction costs one read + one write and zero shuffles at any table
-# size. Incremental compaction of a partitioned table applies this
-# per partition directory (each directory is already the pruning
-# unit), keeping each job bounded.
-# ---------------------------------------------------------------------------
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
@@ -87,100 +16,3 @@ def partitions_for(nbytes: int) -> int:
     """The package's partition-size rule: one partition (so one output
     file) per ``DEFAULT_TARGET_FILE_BYTES`` of data, and at least one."""
     return max(1, int(nbytes) // DEFAULT_TARGET_FILE_BYTES)
-
-
-def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(path, bytes) for every parquet data file under ``path``, via
-    the Hadoop FS API (works for any scheme the cluster can read).
-    Metadata-only: the listing is thousands of entries, not rows."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    it = fs.listFiles(hpath, True)
-    out: list[tuple[str, int]] = []
-    while it.hasNext():
-        status = it.next()
-        name = status.getPath().toString()
-        if name.endswith(".parquet"):
-            out.append((name, status.getLen()))
-    return sorted(out)
-
-
-def plan_compaction(
-    files: list[tuple[str, int]],
-    target_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-) -> list[list[str]]:
-    """First-fit-decreasing bin packing of files into ~target-size
-    output groups. Files already >= target stay alone (never split —
-    parquet row groups make them cheap to scan as-is)."""
-    bins: list[tuple[int, list[str]]] = []
-    for name, size in sorted(files, key=lambda fs_: (-fs_[1], fs_[0])):
-        if size >= target_bytes:
-            bins.append((size, [name]))
-            continue
-        for i, (used, members) in enumerate(bins):
-            if used + size <= target_bytes:
-                bins[i] = (used + size, members + [name])
-                break
-        else:
-            bins.append((size, [name]))
-    return [members for _, members in bins]
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    target_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-    *,
-    size_fidelity: bool = False,
-) -> int:
-    """Rewrite ``src_path`` into ~target-sized files at ``dst_path``.
-
-    Two fidelity levels (ADVICE r4):
-
-    - default (``size_fidelity=False``): one job, ``coalesce(n_bins)``
-      — shuffle-free and fastest, but coalesce merges READ partitions
-      by adjacency with no byte awareness, so only the output file
-      COUNT follows the first-fit-decreasing plan; under skewed input
-      partitioning individual output files can exceed ``target_bytes``.
-      Right for routine maintenance where "4 files instead of 4000" is
-      the goal. Coalesce cannot raise a partition count, so when the
-      scan packs the files into fewer read partitions than bins (small
-      files are merged per task), a round-robin ``repartition(n_bins)``
-      writes the planned count instead — a shuffle paid only by inputs
-      that small.
-    - ``size_fidelity=True``: one small job per planned bin, reading
-      exactly that bin's member files and writing them as one output
-      file — output file sizes track the plan's bins (a bin of small
-      files stays <= target by construction). Still zero shuffles and
-      the data is still read exactly once across jobs; the cost is N
-      sequential job submissions, so reserve it for tables where a
-      size SLA matters (e.g. downstream readers sized to row-group
-      budgets).
-
-    Returns the number of output bins. Rows, values, and schema are
-    preserved exactly either way — compaction is a physical-layout
-    change only (test_layout asserts this).
-    """
-    files = list_data_files(spark, src_path)
-    if not files:
-        return 0
-    bins = plan_compaction(files, target_bytes)
-    if not size_fidelity:
-        n_bins = max(1, len(bins))
-        df = read_parquet(spark, src_path)
-        if df.rdd.getNumPartitions() >= n_bins:
-            df = df.coalesce(n_bins)
-        else:
-            df = df.repartition(n_bins)
-        df.write.mode("overwrite").parquet(dst_path)
-        return n_bins
-    for i, members in enumerate(bins):
-        (
-            read_parquet(spark, *members)
-            .coalesce(1)
-            .write.mode("overwrite" if i == 0 else "append")
-            .parquet(dst_path)
-        )
-    return len(bins)

@@ -84,15 +84,6 @@ class MicroBatcher:
             .parquet(path)
         )
 
-    def rate_source(self, spark: SparkSession, rows_per_second: int) -> DataFrame:
-        """Synthetic source; ``rowsPerSecond`` * trigger interval bounds
-        the batch like the reference's queue cap bounds a flush."""
-        return (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", str(rows_per_second))
-            .load()
-        )
-
     # -- run loop (R5: ProcessHashes, connect.go:75-79) -----------------
     def start(
         self,

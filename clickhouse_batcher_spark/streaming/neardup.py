@@ -132,7 +132,7 @@ def run_streaming_neardup_selfindex(
     Scale: the index is an ordinary parquet table partitioned by
     batch; both join sides hash on the band key, no streaming state
     grows, and compaction of old index partitions is the standard
-    small-file problem (sources/layout.py), not a state-store one."""
+    small-file problem (ROADMAP D9), not a state-store one."""
     source = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -974,7 +974,7 @@ def test_translate_array_combinators(spark, sf_dir):
         ("ALTER TABLE orders UPDATE o_totalprice = 0 WHERE o_orderkey = 1",
          "merge_upsert"),
         ("ALTER TABLE orders DELETE WHERE o_orderkey = 1", "sinks.delete"),
-        ("OPTIMIZE TABLE orders FINAL", "compact_parquet"),
+        ("OPTIMIZE TABLE orders FINAL", "IdempotentParquetSink.compact"),
         ("CREATE TABLE t (x UInt64) ENGINE = ReplacingMergeTree ORDER BY x",
          "plans.migrations"),
     ],
@@ -1400,11 +1400,11 @@ def test_external_table_functions_are_loud():
     from clickhouse_batcher_spark.plans.chsql import translate
 
     for sql, hint in [
-        ("SELECT * FROM remote('host', db.t)", "sources.readers"),
-        ("SELECT * FROM cluster('c', db.t)", "sources.readers"),
-        ("SELECT * FROM s3('http://b/x.parquet')", "sources.readers"),
-        ("SELECT * FROM url('http://x/y.csv', CSV)", "sources.readers"),
-        ("SELECT * FROM file('data.parquet')", "sources.readers"),
+        ("SELECT * FROM remote('host', db.t)", "spark.read"),
+        ("SELECT * FROM cluster('c', db.t)", "spark.read"),
+        ("SELECT * FROM s3('http://b/x.parquet')", "spark.read"),
+        ("SELECT * FROM url('http://x/y.csv', CSV)", "spark.read"),
+        ("SELECT * FROM file('data.parquet')", "spark.read"),
         ("SELECT * FROM generateRandom('a Int64')", "seeded hash"),
     ]:
         with pytest.raises(ValueError, match=hint):

@@ -231,18 +231,6 @@ def test_clickhouse_disabled_sink_is_inert_on_resume():
     assert eng._resolve_next_batch_id() == 0
 
 
-def test_multisink_next_batch_id_covers_every_child(spark, tmp_path):
-    from clickhouse_batcher_spark.sinks.base import MultiSink
-
-    a = IdempotentParquetSink(str(tmp_path / "a"))
-    b = IdempotentParquetSink(str(tmp_path / "b"))
-    df = spark.createDataFrame([_row(1)], SCHEMA)
-    a.write_batch(df, 0)
-    a.write_batch(df, 1)
-    b.write_batch(df, 0)
-    assert MultiSink([a, b]).next_batch_id(spark) == 2
-
-
 def test_clickhouse_ping_retry_then_success(monkeypatch):
     """connect.go:56-64 semantics: up to 4 attempts, then success."""
     from clickhouse_batcher_spark.sinks.clickhouse import (

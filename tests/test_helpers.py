@@ -9,51 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_batcher_spark.functions import portable_hash64
-from clickhouse_batcher_spark.operators.dedup import exact_dedup
-from clickhouse_batcher_spark.sinks.delete import (
-    delete_where_at,
-    delete_where_in_place,
-)
-from clickhouse_batcher_spark.tables import load_table
-
-
-def test_delete_where_in_place_rewrites_path(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "tbl")
-    events = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    events.write.parquet(path)
-    before = spark.read.parquet(path)
-    n_errors = before.filter("event_type = 'error'").count()
-    assert n_errors > 0
-
-    delete_where_in_place(
-        spark.read.parquet(path), F.col("event_type") == "error", path
-    )
-    after = spark.read.parquet(path)
-    assert after.filter("event_type = 'error'").count() == 0
-    assert after.count() == events.count() - n_errors
-
-
-def test_delete_where_in_place_recovers_from_mid_swap_crash(spark, sf_dir, tmp_path):
-    """Round-3 advice: a crash between move(base, old) and
-    move(staging, base) leaves the only live copy at ``.old`` — the
-    next call must restore it, not rmtree it as stale garbage."""
-    import shutil
-
-    path = str(tmp_path / "tbl")
-    events = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    events.write.parquet(path)
-    total = events.count()
-    n_errors = spark.read.parquet(path).filter("event_type = 'error'").count()
-
-    # Simulate the crash window: base moved aside, staging promoted copy
-    # lost (worst case — staging write also didn't survive).
-    shutil.move(path, path + ".old")
-    assert not __import__("os").path.exists(path)
-
-    delete_where_at(spark, F.col("event_type") == "error", path)
-    after = spark.read.parquet(path)
-    assert after.filter("event_type = 'error'").count() == 0
-    assert after.count() == total - n_errors
 
 
 def test_portable_hash64_stable_and_nonnegative(spark):
@@ -68,14 +23,6 @@ def test_portable_hash64_stable_and_nonnegative(spark):
     # salted variant diverges
     salted = df.select(portable_hash64("s", salt="x").alias("h")).collect()
     assert {r["h"] for r in salted} != {r["h"] for r in rows}
-
-
-def test_exact_dedup_generic(spark):
-    df = spark.createDataFrame(
-        [(1, "x"), (2, "x"), (3, "y")], "id INT, k STRING"
-    )
-    out = {(r["k"], r["id"]) for r in exact_dedup(df, ["k"], "id").collect()}
-    assert out == {("x", 1), ("y", 3)}
 
 
 def test_cli_list_runs_without_spark():

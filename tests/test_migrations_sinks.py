@@ -1,4 +1,4 @@
-"""Migration runner, ClickHouse sink config/gate, and source readers."""
+"""Migration runner and ClickHouse sink config/gate."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from clickhouse_batcher_spark.plans.migrations import (
     spark_sql_executor,
 )
 from clickhouse_batcher_spark.sinks.clickhouse import ClickHouseSink, ClickHouseSinkConfig
-from clickhouse_batcher_spark.sources.readers import read_csv, read_jdbc, read_json
 from clickhouse_batcher_spark.tables import load_table
 
 
@@ -80,90 +79,3 @@ def test_clickhouse_sink_gate_and_options(spark, sf_dir):
     # hashes_test.go:311-313 sets ConnMaxLifetime(time.Hour) = 3600 s
     assert opts["connection_ttl"] == "3600000"
 
-
-def test_readers_roundtrip(spark, sf_dir, tmp_path):
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    csv_dir, json_dir = str(tmp_path / "csv"), str(tmp_path / "json")
-    events.write.option("header", "true").csv(csv_dir)
-    events.write.json(json_dir)
-    schema = "event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE"
-    assert read_csv(spark, csv_dir, schema).count() == events.count()
-    assert read_json(spark, json_dir, schema).count() == events.count()
-
-
-def test_jdbc_reader_requires_bounds(spark):
-    with pytest.raises(ValueError):
-        read_jdbc(spark, "jdbc:x", "t", partition_column="id")
-
-
-def test_kafka_source_gated(spark):
-    from clickhouse_batcher_spark.sources.readers import kafka_stream
-
-    with pytest.raises(RuntimeError, match="spark-sql-kafka"):
-        kafka_stream(spark, "localhost:9092", "events")
-
-
-def test_json_reader_survives_corrupt_records(spark, tmp_path):
-    """PERMISSIVE ingestion contract: malformed lines must neither
-    crash the scan nor silently vanish — they land in _corrupt_record
-    for quarantine, the canonical dead-letter pattern for an ingest
-    engine (at 100 TB a single bad line must never kill a 1000-task
-    job)."""
-    p = tmp_path / "mixed.json"
-    p.write_text(
-        '{"event_id": 1, "event_type": "view"}\n'
-        "this is not json at all\n"
-        '{"event_id": 2, "event_type": "click"}\n'
-        '{"event_id": broken}\n'
-    )
-    schema = "event_id BIGINT, event_type STRING, _corrupt_record STRING"
-    df = read_json(spark, str(p), schema).cache()
-    good = df.filter("_corrupt_record IS NULL")
-    bad = df.filter("_corrupt_record IS NOT NULL")
-    assert good.count() == 2
-    assert bad.count() == 2
-    assert {r["event_id"] for r in good.collect()} == {1, 2}
-    df.unpersist()
-
-
-def test_csv_reader_nulls_malformed_fields(spark, tmp_path):
-    """CSV PERMISSIVE: a non-numeric value in a numeric column becomes
-    NULL (row preserved) instead of failing the scan."""
-    p = tmp_path / "mixed.csv"
-    p.write_text("event_id,value\n1,2.5\nnot_a_number,3.5\n3,oops\n")
-    df = read_csv(spark, str(p), "event_id BIGINT, value DOUBLE")
-    rows = {
-        (r["event_id"], r["value"]) for r in df.collect()
-    }
-    assert (1, 2.5) in rows
-    assert (None, 3.5) in rows
-    assert (3, None) in rows
-
-
-def test_read_binary_files_and_text(spark, tmp_path):
-    from clickhouse_batcher_spark.sources.readers import (
-        read_binary_files,
-        read_text,
-    )
-
-    d = tmp_path / "media"
-    d.mkdir()
-    (d / "a.png").write_bytes(b"\x89PNG-fake-a")
-    (d / "b.png").write_bytes(b"\x89PNG-fake-bb")
-    (d / "c.wav").write_bytes(b"RIFF-fake")
-    bf = read_binary_files(spark, str(d), glob="*.png")
-    rows = {r["path"].rsplit("/", 1)[-1]: bytes(r["content"]) for r in bf.collect()}
-    assert rows == {"a.png": b"\x89PNG-fake-a", "b.png": b"\x89PNG-fake-bb"}
-    assert set(bf.columns) == {"path", "modificationTime", "length", "content"}
-
-    t = tmp_path / "docs"
-    t.mkdir()
-    (t / "d1.txt").write_text("line one\nline two\n")
-    (t / "d2.txt").write_text("single doc body")
-    lines = read_text(spark, str(t))
-    assert lines.count() == 3
-    whole = read_text(spark, str(t), whole_file=True)
-    vals = sorted(r["value"] for r in whole.collect())
-    assert vals == ["line one\nline two\n", "single doc body"]

@@ -483,42 +483,6 @@ def test_media_codecs_roundtrip_and_headers():
     assert c["jpeg_header"](b"\x00\x01") is None
 
 
-def test_asof_pandas_matches_window(spark, sf_dir):
-    from clickhouse_batcher_spark.operators.asof import asof_join_pandas
-    from clickhouse_batcher_spark.tables import load_table
-
-    events = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 500)
-        .select("event_id", "user_id", "ts")
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey", "o_orderdate"
-    )
-    window_version = {
-        (r["event_id"], r["o_orderkey"])
-        for r in catalog.QUERIES["asof_events_orders"](spark, sf_dir)
-        .filter(F.col("event_id") < 500)
-        .collect()
-    }
-    pandas_version = asof_join_pandas(
-        events,
-        orders,
-        left_key="user_id",
-        right_key="o_custkey",
-        left_ts="ts",
-        right_ts="o_orderdate",
-        right_tiebreak="o_orderkey",
-        right_cols=["o_orderkey", "o_orderdate"],
-        out_schema="event_id BIGINT, user_id BIGINT, ts TIMESTAMP, "
-        "o_orderkey BIGINT, o_orderdate TIMESTAMP",
-    )
-    pandas_set = {
-        (r["event_id"], r["o_orderkey"]) for r in pandas_version.collect()
-    }
-    assert window_version == pandas_set
-
-
 def test_resize_real_png_output(spark, sf_dir):
     """The resize kernel now actually decodes, resamples, and
     re-encodes: every output payload must itself be a valid
@@ -1138,22 +1102,6 @@ def test_zorder_clusters_both_dimensions(spark, sf_dir):
     avg_m = sum(r["max_minute"] - r["min_minute"] for r in rows) / len(rows)
     assert avg_u < gu / 4, (avg_u, gu)
     assert avg_m < gm / 4, (avg_m, gm)
-
-
-def test_zorder_write_roundtrip(spark, sf_dir, tmp_path):
-    """zorder_write preserves every row and produces the requested
-    file count with per-file envelopes tight on both dims."""
-    from clickhouse_batcher_spark.operators.zorder import zorder_write
-    from clickhouse_batcher_spark.tables import load_table
-
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", F.unix_micros("ts").alias("us")
-    )
-    path = str(tmp_path / "zorder")
-    zorder_write(events, "user_id", "us", path, files=8)
-    back = spark.read.parquet(path)
-    assert back.count() == events.count()
-    assert sorted(back.columns) == sorted(events.columns)
 
 
 def test_inverted_index_invariants(spark, sf_dir):

@@ -222,11 +222,12 @@ def test_ledger_count_equals_data_count(spark, tmp_path):
     assert sink.write_batch(_frame(spark, 60, 70), 2)
     assert sink.write_batch(_frame(spark, 70, 72), 3)
     assert count() == 72
-    # a marker from an older build holds a word, not a count
+    # a marker that holds no integer is an error, not a batch to scan
     _frame(spark, 72, 80).write.parquet(f"{sink.data_dir}/_batch_id=4")
     with open(f"{sink.ledger_dir}/4", "w") as fh:
         fh.write("committed")
-    assert count() == 80
+    with pytest.raises(ValueError):
+        sink.count(spark)
 
 
 def _write(spark, sink, via: str, lo: int, hi: int, batch_id: int) -> bool:

@@ -1,4 +1,4 @@
-"""Range join, rollup hierarchy, salted aggregation."""
+"""Range join and rollup hierarchy."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from clickhouse_batcher_spark import catalog
 
 catalog.load_all()
 
-from clickhouse_batcher_spark.operators.skew import salted_sum_count
 from clickhouse_batcher_spark.tables import load_table
 from tests.parity import assert_parity
 
@@ -49,22 +48,4 @@ def test_bucketed_range_join_equals_naive(spark, sf_dir):
     a = {(r["o_orderkey"], r["n"]) for r in naive.collect()}
     b = {(r["o_orderkey"], r["n"]) for r in bucketed.collect()}
     assert a == b
-
-
-def test_salted_agg_equals_direct(spark, sf_dir):
-    events = load_table(spark, sf_dir, "events")
-    direct = {
-        (r["user_id"], r["cnt"], r["sum_value"])
-        for r in events.groupBy("user_id")
-        .agg(
-            F.sum(F.col("value").cast("decimal(27,6)")).cast("double").alias("sum_value"),
-            F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        )
-        .collect()
-    }
-    salted = {
-        (r["user_id"], r["cnt"], r["sum_value"])
-        for r in salted_sum_count(events, ["user_id"], "value", salt_buckets=8).collect()
-    }
-    assert direct == salted  # exact, thanks to decimal partials
 

@@ -139,10 +139,11 @@ def test_replay_uncommitted_heals_partial_write(spark, sf_dir, tmp_root):
 
 @pytest.mark.slow
 def test_rate_source_ingest(spark, tmp_root):
-    """Rate source through the batcher: rows land exactly once."""
+    """Rate source through the batcher: the timer path flushes, and rows
+    land exactly once."""
     sink = IdempotentParquetSink(f"{tmp_root}/sink")
     batcher = MicroBatcher(sink, BatcherConfig(trigger_interval="250 milliseconds"))
-    source = batcher.rate_source(spark, rows_per_second=200)
+    source = spark.readStream.format("rate").option("rowsPerSecond", "200").load()
     query = batcher.start(source, f"{tmp_root}/ckpt")
     import time as _time
 
@@ -178,32 +179,6 @@ def test_sink_compaction_preserves_rows(spark, sf_dir, tmp_root):
         load_table(spark, sf_dir, "events").limit(10), new_id + 1
     )
     assert sink.count(spark) == total + 10
-
-
-@pytest.mark.slow
-def test_multisink_dual_write_and_partial_failure_healing(spark, sf_dir, tmp_root):
-    """One stream, two sinks, one batch id space; a sink that already
-    committed is skipped on replay while the lagging sink catches up."""
-    from clickhouse_batcher_spark.sinks.base import MultiSink
-
-    events = load_table(spark, sf_dir, "events").limit(200)
-    a = IdempotentParquetSink(f"{tmp_root}/a")
-    b = IdempotentParquetSink(f"{tmp_root}/b")
-    multi = MultiSink([a, b])
-
-    assert multi.write_batch(events, 0) is True
-    assert a.count(spark) == b.count(spark) == 200
-
-    # Simulate b having missed batch 1 (crash after a committed):
-    assert a.write_batch(events, 1) is True
-    # replay batch 1 through the multi sink: a skips, b catches up
-    assert multi.write_batch(events, 1) is True
-    assert a.count(spark) == 400
-    assert b.count(spark) == 400
-    assert a.committed_batches() == b.committed_batches() == [0, 1]
-
-    # fully committed replay is a no-op everywhere
-    assert multi.write_batch(events, 1) is False
 
 
 @pytest.mark.slow
